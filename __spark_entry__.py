@@ -357,9 +357,9 @@ def q_knn_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_knn_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same nearest-facility semantics through the two-phase grid kNN
-    (tile-cover candidates + min_by + progressive ring widening,
-    operators/knn.knn_grid — the large-right-side scale path); shares
+    """Same nearest-facility semantics through the exact grid kNN
+    (seed ring, bound ring, tile-cover candidates + min_by in one lazy
+    plan, operators/knn.knn_grid — the large-right-side scale path); shares
     q_knn_nearest's oracle because the answer is exact either way."""
     from giga_spatial_spark.operators.knn import knn_grid
 

@@ -216,6 +216,9 @@ def _png_has_idat(b: bytes) -> bool:
     chunk. A substring search over the whole payload could match 'IDAT'
     inside a header-only stub's deterministic body bytes and crash the
     job in decode_png (round-6 advisory)."""
+    # the walk can only return True on a chunk typed IDAT
+    if b"IDAT" not in b:
+        return False
     pos = 8
     n = len(b)
     while pos + 8 <= n:

@@ -564,7 +564,7 @@ def duplicated_passages(
     interpreted without CSE, so an inline split() re-runs per window
     (measured 8× slower).
 
-    ``key``: 'md5' shuffles 32-char hex keys and is DuckDB-replayable
+    ``key``: 'md5' shuffles 16 raw digest bytes and is DuckDB-replayable
     (the oracle mode); 'xxhash64' shuffles 8-byte int64 keys — the
     production mode for corpus-scale runs (measured 1.3× end-to-end on
     275M windows, identical flag counts), at a negligible 64-bit

@@ -2,30 +2,34 @@
 
 Reference semantics: cKDTree(right).query(left, k=1) then exact haversine
 (PoiViewGenerator.map_nearest_points, generators/poi.py:287-391), with the
-shard-local min-merge (buildings_engine.py:226-316) and progressive radius
-expansion (poi.py:1217-1355).
+shard-local min-merge (buildings_engine.py:226-316).
 
 Spark-first design (SURVEY.md §2.4):
   - ``knn_broadcast``: when the right side is a small dim (facilities),
     broadcast its coordinate array and scan the big side once in
     ``mapInPandas`` — zero shuffle, exact argmin per row via vectorized
     haversine. This is THE plan for dim-sized right sides at 10^12 rows.
-  - ``knn_grid``: two-phase grid kNN for large right sides — candidates by
-    tile-id equi-join expanded over a k-ring (``ring_candidates``), final
-    ``min_by`` aggregation; a driver loop widens the ring for the
-    unresolved frontier (reference's progressive radius, poi.py:1288) and
-    stops via a conservative ring-band distance bound.
+  - ``knn_grid``: one lazy, exact plan for large right sides, with no
+    driver loop and no driver collect. A per-tile seed ring reaches the
+    nearest occupied facility tile, the nearest facility inside it gives
+    an upper bound ``d1``, and the final ``min_by`` runs over the smallest
+    ring beyond which nothing is as close as ``d1``.
+  - Every candidate step expands rows with ``ring_candidates``, which
+    emits each row's own ring of tiles (no offsets table, no cross join).
 """
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+from pyspark.sql.window import Window
 
 from .. import cells
-from ..geometry import haversine_np
+from ..geometry import EARTH_RADIUS_M, haversine_np
 from ..synth import haversine_expr
 
 # Ceiling for the collected facility dim — coordinate triples at ~24 B/row
@@ -33,50 +37,41 @@ from ..synth import haversine_expr
 # it knn_broadcast raises and knn_grid (no driver collect) is the plan.
 # PoiViewGenerator dispatches on the same constant.
 BROADCAST_FACILITY_LIMIT = 2_000_000
+M_PER_DEG = 111194.9  # ground metres per degree of arc, rounded down
 
 
 def ring_candidates(
     df: DataFrame,
-    k: int,
+    ring: Column | int,
     zoom: int,
     tile_col: str = "__ptile",
-    row_ring=None,
 ) -> DataFrame:
-    """Expand each row to its k-ring candidate tiles (__ctile), emitting each
-    candidate tile exactly once per row: lon offsets wrap mod n without
-    duplication (full coverage when 2k+1 >= n), lat offsets are filtered at
-    the poles rather than clamped (clamping would duplicate edge tiles and
-    inflate join pair counts).
+    """Expand each row to the tiles (__ctile) within Chebyshev distance
+    ``ring`` of its tile, each candidate tile exactly once per row.
 
-    ``row_ring`` (optional Column) caps the ring PER ROW: rows keep only
-    offsets within their own ring requirement, so mid-latitude data stops
-    paying for a ring sized for the ±85° worst case (k stays the global
-    bound — the offsets table covers every row; the filter prunes inside the
-    broadcast nested-loop join before anything is shuffled)."""
+    ``ring`` is a per-row Column (or an int for every row), so each row
+    pays only for its own ring. Tile x wraps mod n without duplication
+    (all n columns once 2*ring+1 >= n); tile y is clipped at the poles
+    rather than clamped (clamping would duplicate edge tiles and inflate
+    join pair counts). A NULL tile or ring emits nothing."""
     n = 2**zoom
-    full_wrap = 2 * k + 1 >= n
-    if full_wrap:
-        dxs = list(range(n))  # all lon residues exactly once
-    else:
-        dxs = list(range(-k, k + 1))
-    dys = list(range(-k, k + 1))
-    offsets = [(dx, dy) for dx in dxs for dy in dys]
-    off_df = df.sparkSession.createDataFrame(offsets, "dx int, dy int")
-    px = F.shiftright(F.col(tile_col), 32)
-    py = F.col(tile_col) % F.lit(2**32)
-    ny = py + F.col("dy")
-    out = df.crossJoin(F.broadcast(off_df))
-    if row_ring is not None:
-        wrap_dx = (
-            F.least(F.col("dx"), F.lit(n) - F.col("dx"))
-            if full_wrap
-            else F.abs(F.col("dx"))
-        )
-        out = out.where((wrap_dx <= row_ring) & (F.abs(F.col("dy")) <= row_ring))
+    px, py = f"shiftright(`{tile_col}`, 32)", f"`{tile_col}` % 4294967296"
+    r = F.lit(ring) if isinstance(ring, int) else ring
+    # SQL strings: each Column-builder call is a py4j round trip
     return (
-        out.where((ny >= 0) & (ny < n))
-        .withColumn("__ctile", F.shiftleft(F.pmod(px + F.col("dx"), F.lit(n)), 32) + ny)
-        .drop("dx", "dy")
+        df.select("*", r.cast("long").alias("__ring"))
+        .selectExpr(
+            "*",
+            f"explode(sequence(greatest({py} - __ring, 0), least({py} + __ring, {n - 1})))"
+            " AS __cy",
+        )
+        .selectExpr(
+            "*",
+            f"explode(IF(2 * __ring + 1 >= {n}, sequence(0L, {n - 1}L),"
+            f" sequence({px} - __ring, {px} + __ring))) AS __cx",
+        )
+        .withColumn("__ctile", F.expr(f"shiftleft(pmod(__cx, {n}), 32) + __cy"))
+        .drop("__ring", "__cx", "__cy")
     )
 
 
@@ -107,15 +102,13 @@ def knn_broadcast(
         raise ValueError(
             f"knn_broadcast: facility table exceeds "
             f"{BROADCAST_FACILITY_LIMIT:,} rows — not a broadcast-able dim. "
-            "Use knn_grid (tile-grid progressive-radius kNN, no driver "
-            "collect) for fact-sized facility layers."
+            "Use knn_grid (exact tile-grid kNN, no driver collect) for "
+            "fact-sized facility layers."
         )
     # sorted by id so np.argmin's first-among-equals tie-break = smallest id
     fac = facilities.select(fac_id, flon, flat).orderBy(fac_id).toPandas()
     if len(fac) == 0:
         # no facilities: every point resolves to NULL neighbor / NULL dist
-        from pyspark.sql.types import DoubleType, LongType
-
         return points.withColumn(
             "nearest_facility_id", F.lit(None).cast(LongType())
         ).withColumn(dist_col, F.lit(None).cast(DoubleType()))
@@ -127,8 +120,6 @@ def knn_broadcast(
             fac[flat].to_numpy(dtype=np.float64),
         )
     )
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
     # copy — DataFrame.schema is cached; StructType.add mutates in place
     out_schema = StructType(
         list(points.schema.fields)
@@ -217,76 +208,94 @@ def knn_grid(
     flon: str = "flon",
     flat: str = "flat",
     zoom: int = 5,
-    max_ring: int = 64,
     dist_col: str = "nearest_dist_m",
 ) -> DataFrame:
-    """Two-phase grid kNN: tile-cover candidate equi-join + min_by finalize,
-    driver loop widening the ring for unresolved points.
+    """Exact nearest facility per point (ties: smallest id, as in
+    ``knn_broadcast``; NULLs without facilities) as one lazy plan: no
+    driver loop, no eager job, no broadcast fallback.
 
-    Scale shape: facilities indexed by tile once; each round shuffles only
-    the unresolved frontier (shrinks geometrically; AQE re-plans each pass).
+    1. Seed ring per occupied point tile: the Chebyshev tile distance
+       (x wrapping) to the nearest occupied facility tile, from the cross
+       join of the distinct occupied tiles (at most 4^zoom per side).
+    2. ``d1``: the nearest facility within the seed ring, an upper bound
+       on the true nearest distance.
+    3. Ring ``R``: the smallest ring whose lower bound on the distance to
+       anything outside it is > ``d1``; else n, the whole grid.
+    4. ``min_by(fac_id, struct(dist, fac_id))`` over ring R.
+
+    Exact: every facility within ``d1``, the nearest one and its ties, lies
+    inside ring R.
     """
     n = 2**zoom
     tile_deg = 360.0 / n
-    m_per_deg = 111194.9
-    fac_tiles = facilities.withColumn(
+    pts = points.withColumn("__ptile", cells.tile_id(F.col(lon), F.col(lat), zoom))
+    fac = facilities.select(fac_id, flon, flat).withColumn(
         "__ftile", cells.tile_id(F.col(flon), F.col(flat), zoom)
     )
-    # localCheckpoint the shrinking frontier each round — without it the
-    # iterative plan nests and task binaries blow up
-    unresolved = points.withColumn(
-        "__ptile", cells.tile_id(F.col(lon), F.col(lat), zoom)
-    ).localCheckpoint()
-    resolved_parts: list[DataFrame] = []
-    ring = 1
-    while ring <= max_ring:
-        cand_tiles = ring_candidates(unresolved, ring, zoom)
-        matched = cand_tiles.join(
-            fac_tiles, cand_tiles["__ctile"] == fac_tiles["__ftile"], "inner"
-        ).withColumn(
-            "__dist", haversine_expr(F.col(lat), F.col(lon), F.col(flat), F.col(flon))
+
+    def candidates(rows: DataFrame, ring: Column) -> DataFrame:
+        return (
+            ring_candidates(rows, ring, zoom)
+            .join(fac, F.col("__ctile") == F.col("__ftile"))
+            .withColumn(
+                "__dist", haversine_expr(F.col(lat), F.col(lon), F.col(flat), F.col(flon))
+            )
         )
-        best = matched.groupBy(point_id).agg(
+
+    adx = "abs(shiftright(__ptile, 32) - shiftright(__ftile, 32))"
+    chebyshev = (
+        f"greatest(least({adx}, {n} - {adx}), "
+        "abs(__ptile % 4294967296 - __ftile % 4294967296))"
+    )
+    seed = (
+        pts.select("__ptile").distinct()
+        .crossJoin(F.broadcast(fac.select("__ftile").distinct()))
+        .groupBy("__ptile")
+        .agg(F.min(F.expr(chebyshev)).alias("__seed"))
+    )
+    upper = (
+        candidates(
+            pts.select(point_id, lon, lat, "__ptile").join(F.broadcast(seed), "__ptile"),
+            F.col("__seed"),
+        )
+        .groupBy(point_id)
+        .agg(
+            F.first(lon).alias(lon),
+            F.first(lat).alias(lat),
+            F.first("__ptile").alias("__ptile"),
+            F.min("__dist").alias("__d1"),
+        )
+    )
+    # Lower bound on the distance to anything outside ring r. Beyond r rows:
+    # r tiles of mercator y, each at least cos(worst band latitude) of a
+    # tile in latitude. Beyond r columns (unless the ring wraps): the
+    # great-circle distance to the longitude wedge >= r tiles away, which
+    # holds for facilities over the pole too.
+    def bound(r: int) -> str:
+        rows = (
+            f"{r * tile_deg * M_PER_DEG!r}D * cos(radians(least(abs(`{lat}`)"
+            f" + {(r + 1) * tile_deg!r}D, 85.06D)))"
+        )
+        if 2 * r + 1 >= n:
+            return rows
+        gap = math.sin(math.radians(min(r * tile_deg, 90.0)))
+        return f"least({rows}, {EARTH_RADIUS_M!r}D * asin(cos(radians(`{lat}`)) * {gap!r}D))"
+
+    # one CASE through F.expr: a Column per branch costs py4j calls.
+    # Rings start at 1: lon -180 and 180 are one meridian in two tiles.
+    # Strict >: a facility outside the ring at exactly d1 could win the tie.
+    whens = " ".join(f"WHEN {bound(r)} > __d1 THEN {r}" for r in range(1, n))
+    best = (
+        candidates(upper, F.expr(f"CASE {whens} ELSE {n} END"))
+        .groupBy(point_id)
+        .agg(
             F.min_by(F.col(fac_id), F.struct("__dist", fac_id)).alias(
                 "nearest_facility_id"
             ),
             F.min("__dist").alias(dist_col),
         )
-        pts_best = unresolved.join(best, point_id, "left")
-        # stopping rule: accept iff no facility outside the ring can be
-        # closer. Ground extent of a mercator tile shrinks ~cos(lat); take
-        # the worst case over the entire ring band (|lat| + (ring+1) tiles).
-        band_lat = F.least(
-            F.abs(F.col(lat)) + F.lit((ring + 1) * tile_deg), F.lit(85.06)
-        )
-        bound = (
-            F.lit(float(ring)) * F.lit(tile_deg) * F.lit(m_per_deg)
-            * F.cos(F.radians(band_lat))
-        )
-        done = pts_best.where(F.col(dist_col).isNotNull() & (F.col(dist_col) <= bound))
-        resolved_parts.append(done.drop("__ptile").localCheckpoint())
-        unresolved = (
-            pts_best.where(F.col(dist_col).isNull() | (F.col(dist_col) > bound))
-            .drop("nearest_facility_id", dist_col)
-            .localCheckpoint()
-        )
-        if unresolved.isEmpty():
-            unresolved = None
-            break
-        ring *= 2
-    if unresolved is not None:
-        # stragglers (sparse regions / poles): exact broadcast kernel
-        resolved_parts.append(
-            knn_broadcast(
-                unresolved.drop("__ptile"), facilities,
-                point_id=point_id, lon=lon, lat=lat,
-                fac_id=fac_id, flon=flon, flat=flat, dist_col=dist_col,
-            )
-        )
-    out = resolved_parts[0]
-    for part in resolved_parts[1:]:
-        out = out.unionByName(part)
-    return out
+    )
+    return points.join(best, point_id, "left")
 
 
 def topk_neighbors(
@@ -305,29 +314,19 @@ def topk_neighbors(
     """ε-bounded top-k neighbors per left row (reference build_distance_graph,
     processing/algorithms.py:24-204): cell-cover candidates at a ring sized
     to ε, haversine filter, row_number window top-k."""
-    from pyspark.sql.window import Window
-
-    n = 2**zoom
-    tile_deg = 360.0 / n
-    m_per_deg = 111194.9
-    # global ring bound guaranteeing coverage of max_distance_m at any
-    # latitude the data can hold (worst case: lon-meters shrink by cos(lat)
-    # near poles; mercator lat clamp is ±85.05° → cos ≈ 0.086) — this only
-    # sizes the broadcast offsets table; each row prunes to ITS latitude band
-    min_cos = 0.086
-    ring = int(np.ceil(max_distance_m / (tile_deg * m_per_deg * min_cos))) + 1
+    tile_deg = 360.0 / 2**zoom
     # per-row requirement: both the lon ground extent and the mercator lat
     # extent of a tile scale ~cos(lat); take the worst latitude inside the
     # row's ε-disk (|lat| + ε in degrees)
-    eps_deg = max_distance_m / m_per_deg
+    eps_deg = max_distance_m / M_PER_DEG
     band_cos = F.cos(
         F.radians(F.least(F.abs(F.col(lat)) + F.lit(eps_deg), F.lit(85.06)))
     )
-    row_ring = F.ceil(F.lit(max_distance_m / (tile_deg * m_per_deg)) / band_cos) + 1
+    row_ring = F.ceil(F.lit(max_distance_m / (tile_deg * M_PER_DEG)) / band_cos) + 1
     lt = left.withColumn("__ptile", cells.tile_id(F.col(lon), F.col(lat), zoom))
     rt = right.withColumn("__rtile", cells.tile_id(F.col(rlon), F.col(rlat), zoom))
     cand = (
-        ring_candidates(lt, ring, zoom, row_ring=row_ring)
+        ring_candidates(lt, row_ring, zoom)
         .join(rt, F.col("__ctile") == F.col("__rtile"), "inner")
         .withColumn(
             "dist_m", haversine_expr(F.col(lat), F.col(lon), F.col(rlat), F.col(rlon))

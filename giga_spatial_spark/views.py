@@ -76,7 +76,7 @@ class PoiViewGenerator:
         """Reference map_nearest_points (poi.py:287-391): nearest facility id
         + haversine distance per POI. Dispatches on the facility count:
         dim-sized layers take the broadcast-argmax kernel, large layers the
-        tile-grid progressive-radius kNN (no driver collect)."""
+        exact tile-grid kNN (one lazy plan, no driver collect)."""
         from .operators.knn import (
             BROADCAST_FACILITY_LIMIT, knn_broadcast, knn_grid,
         )

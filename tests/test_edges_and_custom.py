@@ -12,7 +12,7 @@ from giga_spatial_spark.entity import (
     with_entity_id,
 )
 from giga_spatial_spark.geometry import clip_polygon_convex, polygon_area
-from giga_spatial_spark.operators.knn import knn_broadcast
+from giga_spatial_spark.operators.knn import knn_broadcast, knn_grid
 from giga_spatial_spark.operators.normalize import normalize_table
 from giga_spatial_spark.operators.overlay import fractional_overlay_convex
 from giga_spatial_spark.operators.pip_join import pip_join_rtree
@@ -27,9 +27,11 @@ def test_knn_empty_facilities(spark):
     fac = spark.createDataFrame(
         [], "facility_id long, flon double, flat double"
     )
-    out = knn_broadcast(pts, fac, point_id="id").toPandas()
-    assert len(out) == 1
-    assert out["nearest_facility_id"].isna().all()
+    for kernel in (knn_broadcast, knn_grid):
+        out = kernel(pts, fac, point_id="id").toPandas()
+        assert len(out) == 1
+        assert out["nearest_facility_id"].isna().all()
+        assert out["nearest_dist_m"].isna().all()
 
 
 def test_pip_empty_points(spark):
