@@ -37,6 +37,7 @@ from giga_spatial_spark.operators.normalize import clean_string_expr, clean_stri
 from giga_spatial_spark.operators.overlay import fractional_overlay_boxes
 from giga_spatial_spark.operators.pip_join import pip_join_native, pip_join_rtree
 from giga_spatial_spark.operators.range_join import proximity_dedup_exists
+from giga_spatial_spark.sources.readers import read_parquet
 
 SF0001 = "/root/testdata/sf0.001"
 
@@ -66,14 +67,11 @@ def _spread(df: DataFrame, mult: int = 2, min_bytes: int | None = None) -> DataF
     exchange of the base rows and unlocks the full core count. At real
     scale the scan already has ≥ target splits and this is a no-op, so the
     setting is cluster-adaptive rather than tuned to local[32]."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism * mult
-    if df.rdd.getNumPartitions() >= target:
-        return df
     # size-aware: below a few MB the extra exchange costs more than the
     # serial stage it parallelizes (measured at sf0.1: q_fingerprint
     # 0.5 s raw vs 1.3 s spread) — derive the decision from input size
-    # (guide §2), not from a constant tuned to either scale
+    # (guide §2), not from a constant tuned to either scale. Tested first:
+    # it needs no RDD plan, unlike the split count below.
     try:
         import os as _os
 
@@ -85,12 +83,15 @@ def _spread(df: DataFrame, mult: int = 2, min_bytes: int | None = None) -> DataF
     floor = SPREAD_MIN_INPUT_BYTES if min_bytes is None else min_bytes
     if total is not None and total < floor:
         return df
+    target = df.sparkSession.sparkContext.defaultParallelism * mult
+    if df.rdd.getNumPartitions() >= target:
+        return df
     return df.repartition(target)
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents.parquet spread to cluster parallelism (see _spread)."""
-    return _spread(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    return _spread(read_parquet(spark, f"{sf_dir}/documents.parquet"))
 
 
 def _docs_pts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -98,7 +99,7 @@ def _docs_pts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # extra exchange costs more than the serial scan stage (A/B-measured
     # at sf1: q_tile_assign 0.40 s raw vs 2.12 s spread). The explosive /
     # Python-kernel consumers call _spread on their projected frame.
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     return synth.with_coords(docs, "doc_id")
 
 
@@ -262,7 +263,7 @@ def q_canonical_url(spark: SparkSession, sf_dir: str) -> DataFrame:
     from giga_spatial_spark.functions.url import canonical_url_expr, url_host_expr
 
     docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_parquet(spark, f"{sf_dir}/documents.parquet")
         .select("doc_id")
         .where(F.col("doc_id") < 5000)
     )
@@ -302,7 +303,7 @@ def q_url_blocklist(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_parquet(spark, f"{sf_dir}/documents.parquet")
         .select("doc_id")
         .where(F.col("doc_id") < 5000)
     )
@@ -586,7 +587,7 @@ def q_bounds_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Relational baseline (TPC-H Q1 shape) — validates scan/agg parity."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = read_parquet(spark, f"{sf_dir}/lineitem.parquet")
     cents = lambda c: F.round(F.col(c) * 100).cast("bigint")  # noqa: E731
     return (
         li.groupBy("l_returnflag", "l_linestatus")
@@ -852,7 +853,7 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     # plain read: the term explode is referenced by two aggregates, so a
     # pre-spread exchange of the full text evaluates twice and costs
     # more than the serial split (A/B at sf1: ~1.9 s raw vs ~3.5 s)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     return tfidf_top_terms(docs, k=3)
 
 
@@ -865,7 +866,7 @@ def q_corpus_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays the exact bucket arithmetic."""
     from giga_spatial_spark.operators.sampling import hash_u32_expr
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     h = hash_u32_expr(F.col("doc_id"))
     split = (
         F.when(h < F.lit(int(0.8 * 4294967296)), F.lit("train"))
@@ -892,7 +893,7 @@ def q_unigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     # plain read: the term explode is referenced by two aggregates, so a
     # pre-spread exchange of the full text evaluates twice and costs
     # more than the serial split (A/B at sf1: ~1.9 s raw vs ~3.5 s)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     terms = docs.withColumn("_w", F.split(F.col("text"), " ")).select(
         "doc_id", "lang", F.explode("_w").alias("term")
     )
@@ -936,7 +937,7 @@ def q_unigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup by md5(text): survivor id + duplicate count per digest."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     return exact_dedup(docs)
 
 
@@ -965,7 +966,7 @@ def q_domain_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-host totals and survivors."""
     from giga_spatial_spark.operators.sampling import domain_downsample
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet").select(
         "doc_id", F.concat(F.lit("h"), (F.col("doc_id") % 37)).alias("host")
     )
     kept = domain_downsample(docs, host_col="host", cap=10)
@@ -990,7 +991,7 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     window expression."""
     from giga_spatial_spark.operators.packing import pack_stream_offset
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet").select(
         "doc_id",
         (F.col("doc_id") % 8).alias("shard"),
         F.size(F.split(F.col("text"), " ")).cast("bigint").alias("n_tokens"),
@@ -1017,7 +1018,7 @@ def q_minhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # everything heavy (signatures, band join, verify) already runs
     # on shuffle partitions; a pre-spread only replicates exchanges
     # of the full text (measured 3.4 s -> 6.7 s at sf1)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     out = minhash_near_dup_pairs(docs, threshold=0.5, bands=32)
     return out.select("a", "b", "jaccard")
 
@@ -1038,7 +1039,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # everything heavy (signatures, band join, verify) already runs
     # on shuffle partitions; a pre-spread only replicates exchanges
     # of the full text (measured 3.4 s -> 6.7 s at sf1)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     # edges mode (judge round-6 #1): the composition only needs
     # connectivity, so exact-dup clusters contribute m−1 star edges
     # instead of the m(m−1)/2 expanded pair list — components, and hence
@@ -1070,7 +1071,7 @@ def q_simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_ann_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-1: every vector vs the vec_id%10==0 candidate
     subset — dot product as native F.aggregate/zip_with (no UDF)."""
-    emb = _spread(spark.read.parquet(f"{sf_dir}/embeddings.parquet"))
+    emb = _spread(read_parquet(spark, f"{sf_dir}/embeddings.parquet"))
     corpus = emb.where(F.col("vec_id") % 10 == 0)
     out = cosine_topk_bruteforce(emb, corpus, k=1)
     return out.select("qid", "cid", "cosine")
@@ -1083,7 +1084,7 @@ def q_ann_top1_gemm(spark: SparkSession, sf_dir: str) -> DataFrame:
     impossible on this data (min top1-top2 gap 3.2e-4, measured)."""
     from giga_spatial_spark.operators.ann import cosine_topk_gemm
 
-    emb = _spread(spark.read.parquet(f"{sf_dir}/embeddings.parquet"))
+    emb = _spread(read_parquet(spark, f"{sf_dir}/embeddings.parquet"))
     corpus = emb.where(F.col("vec_id") % 10 == 0)
     out = cosine_topk_gemm(emb, corpus, k=1)
     return out.select("qid", "cid", "cosine")
@@ -1098,14 +1099,14 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NOT spread: the blocked IVF scorer cogroups after its own shuffle,
     # and the quantizer re-evaluates the input lineage driver-side — a
     # pre-spread only replicates exchanges (measured 1.7 s -> 3.8 s at sf1)
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_parquet(spark, f"{sf_dir}/embeddings.parquet")
     return ivf_topk(emb, k=1, n_centroids=32, nprobe=2)
 
 
 def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH-bucketed approximate top-1 within the embeddings table
     (rows-only driver check; recall vs brute force asserted in pytest)."""
-    emb = _spread(spark.read.parquet(f"{sf_dir}/embeddings.parquet"))
+    emb = _spread(read_parquet(spark, f"{sf_dir}/embeddings.parquet"))
     return lsh_topk(emb, dim=64, k=1, n_planes=10)
 
 
@@ -1114,7 +1115,7 @@ def q_embed_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     verify; rows-only driver check, validity asserted in pytest)."""
     from giga_spatial_spark.operators.dedup import embedding_near_dup_pairs
 
-    emb = _spread(spark.read.parquet(f"{sf_dir}/embeddings.parquet"))
+    emb = _spread(read_parquet(spark, f"{sf_dir}/embeddings.parquet"))
     # synthetic embeddings are near-random (top-1 cosine ≈ 0.4-0.5), so the
     # demo threshold sits below that to produce a non-empty pair set.
     # n_planes pinned so the SQL oracle replays identical buckets (the
@@ -1132,7 +1133,7 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # everything heavy (signatures, band join, verify) already runs
     # on shuffle partitions; a pre-spread only replicates exchanges
     # of the full text (measured 3.4 s -> 6.7 s at sf1)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     out = ngram_jaccard_pairs(docs, threshold=0.4)
     return out.select("a", "b", "jaccard")
 
@@ -1143,14 +1144,14 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     sessions."""
     from giga_spatial_spark.streaming.sessionize import sessionize_batch
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = read_parquet(spark, f"{sf_dir}/events.parquet")
     return sessionize_batch(ev, gap_minutes=30)
 
 
 def q_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling-window aggregation over the events stream table (batch view
     of the streaming pipeline): per (hour, event_type) counts + value cents."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = read_parquet(spark, f"{sf_dir}/events.parquet")
     return (
         ev.withColumn("hour", F.date_trunc("hour", F.col("ts")))
         .groupBy("hour", "event_type")
@@ -1173,7 +1174,7 @@ def q_h3_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     forward SQL over the same derivation."""
     from giga_spatial_spark import cells_h3
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select("event_id", "ts")
+    ev = read_parquet(spark, f"{sf_dir}/events.parquet").select("event_id", "ts")
     ev = synth.with_coords(ev, "event_id")
     tagged = cells_h3.assign_cells_df(ev, H3_EVENTS_RES)
     return (
@@ -1197,7 +1198,7 @@ def q_coord_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
         validate_coords,
     )
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet").select("doc_id")
     a = (F.col("doc_id") * 7 % 191) - 95   # some |lat| > 90
     b = F.col("doc_id") * 13 % 100
     c = (F.col("doc_id") * 11 % 361) - 180
@@ -1231,7 +1232,7 @@ def q_nfkc(spark: SparkSession, sf_dir: str) -> DataFrame:
     path."""
     from giga_spatial_spark.operators.normalize import nfkc_strip
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet").select("doc_id")
     k = F.col("doc_id") % 6
     raw = (
         F.when(k == 0, F.lit("  \uff21\uff42\uff43\uff11\uff12\uff13  "))
@@ -1285,7 +1286,7 @@ def q_titlecase(spark: SparkSession, sf_dir: str) -> DataFrame:
     initcap; the lambda pipeline is its own word-walk)."""
     from giga_spatial_spark.operators.normalize import titlecase_admin_expr
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet").select("doc_id")
     k = F.col("doc_id") % 8
     raw = (
         F.when(k == 0, F.lit("  new south wales "))
@@ -1829,7 +1830,7 @@ def _quadkey_compact_sql() -> str:
 def q_normalize_strings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EntityProcessor-style string normalization (trim/lower/null-sentinel,
     entity_processor.py:329-389) over customer segments."""
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    cust = read_parquet(spark, f"{sf_dir}/customer.parquet")
     return (
         cust.withColumn("segment", clean_string_expr(F.col("c_mktsegment")))
         .groupBy("segment")
@@ -2493,7 +2494,7 @@ def q_entity_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     CTE steps), so even the id scheme is engine-independently verified."""
     from giga_spatial_spark.entity import with_entity_id
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet").select(
         "doc_id", "lang"
     )
     out = with_entity_id(docs, ["doc_id", "lang"])
@@ -2772,9 +2773,9 @@ def q_extract_invariant(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q3_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 shape: 3-way join with broadcast dims + filtered agg —
     relational breadth check (reference has only pandas merges, SURVEY §2.4)."""
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    cust = read_parquet(spark, f"{sf_dir}/customer.parquet")
+    orders = read_parquet(spark, f"{sf_dir}/orders.parquet")
+    li = read_parquet(spark, f"{sf_dir}/lineitem.parquet")
     revenue_cents = F.sum(
         F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100).cast(
             "bigint"
@@ -2794,7 +2795,7 @@ def q_topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     algorithms.py:104-141): top-3 orders per customer by total price."""
     from pyspark.sql.window import Window
 
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_parquet(spark, f"{sf_dir}/orders.parquet")
     w = Window.partitionBy("o_custkey").orderBy(
         F.col("o_totalprice").desc(), F.col("o_orderkey").asc()
     )
@@ -2841,7 +2842,7 @@ def q_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass (never a job per column)."""
     from giga_spatial_spark.operators.normalize import coverage_stats
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     return coverage_stats(docs, ["doc_id", "text", "lang", "source", "n_chars"])
 
 
@@ -2856,7 +2857,7 @@ def q_normalize_enums(spark: SparkSession, sf_dir: str) -> DataFrame:
         normalize_enum_expr,
     )
 
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_parquet(spark, f"{sf_dir}/orders.parquet")
     enum = normalize_enum_expr(F.col("o_orderpriority"), ENUM_ALIASES)
     coll = normalize_enum_collection_expr(
         F.concat_ws(",", F.col("o_orderstatus"), F.col("o_orderpriority")),
@@ -2928,7 +2929,7 @@ def q_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     in SQL — generator∘parser must be the identity."""
     from giga_spatial_spark.functions import multimodal as MM
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet").select("doc_id")
 
     import pandas as pd
 
@@ -2980,7 +2981,7 @@ def q_image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     # min_bytes=0: the decode cost is per ROW, not per byte, so even a
     # tiny id list is worth fanning out (5k decodes = 2.5 s serial)
     docs = _spread(
-        spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id"),
+        read_parquet(spark, f"{sf_dir}/documents.parquet").select("doc_id"),
         min_bytes=0,
     )
 
@@ -3016,7 +3017,7 @@ def q_iso3(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 530-row BroadcastHashJoin is the scale path)."""
     from giga_spatial_spark.operators.normalize import with_iso3
 
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
+    nation = read_parquet(spark, f"{sf_dir}/nation.parquet")
     names = spark.createDataFrame(
         [(i, n) for i, n in enumerate(ISO3_TEST_NAMES)],
         "n_nationkey bigint, country string",

@@ -292,6 +292,33 @@ def cell_center_latlon(cid: int) -> tuple[float, float]:
     return float(lat[0]), float(lon[0])
 
 
+def cell_centers_latlon(cids, level: int) -> tuple[np.ndarray, np.ndarray]:
+    """cell_center_latlon over an array of cells of one `level`: (lat, lon)
+    arrays, bitwise equal to the scalar decode — the inverse Hilbert walk
+    runs over the whole array, then one _face_uv_to_latlon per face."""
+    cu = np.asarray(cids, dtype=np.int64).view(np.uint64)
+    face = (cu >> np.uint64(2 * MAX_LEVEL + 1)).astype(np.int64)
+    pos = cu >> np.uint64(2 * (MAX_LEVEL - level) + 1)
+    o = np.where(face & 1, _SWAP_MASK, 0).astype(np.int64)
+    i = np.zeros(len(cu), dtype=np.int64)
+    j = np.zeros(len(cu), dtype=np.int64)
+    for k in range(level - 1, -1, -1):
+        p = ((pos >> np.uint64(2 * k)) & np.uint64(3)).astype(np.int64)
+        quad = _POS_TO_IJ[o, p]
+        i = (i << 1) | (quad >> 1)
+        j = (j << 1) | (quad & 1)
+        o = o ^ _POS_TO_ORIENTATION[p]
+    n = 1 << level
+    u = _st_to_uv((i + 0.5) / n)
+    v = _st_to_uv((j + 0.5) / n)
+    lat = np.empty(len(cu))
+    lon = np.empty(len(cu))
+    for f in np.unique(face):
+        m = face == f
+        lat[m], lon[m] = _face_uv_to_latlon(int(f), u[m], v[m])
+    return lat, lon
+
+
 def cell_polygon(cid: int) -> np.ndarray:
     """(4, 2) lon/lat corners of the cell, CCW (reference cell→quad polygon
     with CCW orientation, grid/s2.py:285-331)."""
@@ -378,17 +405,12 @@ def polyfill(boundary: np.ndarray, level: int, mode: str = "center") -> np.ndarr
     ys = np.arange(miny - step, maxy + 2 * step, step)
     gx, gy = np.meshgrid(xs, ys)
     cand = np.unique(cell_id(gy.ravel(), gx.ravel(), level))
-    keep = []
-    for cid in cand:
-        if mode == "center":
-            lat, lon = cell_center_latlon(int(cid))
-            if point_in_polygon(b, np.array([lon]), np.array([lat]))[0]:
-                keep.append(int(cid))
-        elif mode == "intersects":
-            if polygons_intersect(cell_polygon(int(cid)), b):
-                keep.append(int(cid))
-        else:
-            raise ValueError(f"unknown polyfill mode {mode!r}")
+    if mode == "center":
+        lat, lon = cell_centers_latlon(cand, level)
+        return cand[point_in_polygon(b, lon, lat)]
+    if mode != "intersects":
+        raise ValueError(f"unknown polyfill mode {mode!r}")
+    keep = [int(c) for c in cand if polygons_intersect(cell_polygon(int(c)), b)]
     return np.array(sorted(keep), dtype=np.int64)
 
 

@@ -48,27 +48,6 @@ def zone_cover_df(spark, polys: dict[int, np.ndarray], zoom: int,
     return spark.createDataFrame(rows, "tile bigint, zone_id int")
 
 
-def convex_contains_expr(poly: np.ndarray, lon: str, lat: str):
-    """Native-column containment predicate for one convex polygon (either
-    winding — normalized to CCW here): AND over edges of
-    cross(v2-v1, p-v1) >= 0 — the same arithmetic as
-    geometry.convex_contains and synth.convex_contains_sql."""
-    from ..geometry import ensure_ccw
-
-    poly = ensure_ccw(np.asarray(poly, dtype=np.float64))
-    pred = None
-    n = len(poly)
-    for i in range(n):
-        x1, y1 = poly[i]
-        x2, y2 = poly[(i + 1) % n]
-        cross = F.lit(float(x2 - x1)) * (F.col(lat) - F.lit(float(y1))) - F.lit(
-            float(y2 - y1)
-        ) * (F.col(lon) - F.lit(float(x1)))
-        term = cross >= 0.0
-        pred = term if pred is None else (pred & term)
-    return pred
-
-
 def pip_join_native(
     points: DataFrame,
     polys: dict[int, np.ndarray],
@@ -89,15 +68,35 @@ def pip_join_native(
     cand = pts.join(F.broadcast(cover), pts["__tile"] == cover["tile"], "inner").drop(
         "tile", "__tile"
     )
-    refine = None
+    return cand.where(F.expr(_convex_refine_sql(polys, lon, lat)))
+
+
+def _convex_refine_sql(polys: dict[int, np.ndarray], lon: str, lat: str) -> str:
+    """One CASE over zone_id of per-zone edge tests — for each directed edge
+    of the CCW-normalized ring, (x2-x1)*(lat-y1) - (y2-y1)*(lon-x1) >= 0,
+    the arithmetic of geometry.convex_contains with the edge differences
+    folded in Python. Parsed by Spark in one call instead of a few py4j
+    calls per operator per edge. Doubles are emitted as `repr` (exact
+    round trip) with a D suffix: a bare 1.5 would parse as DECIMAL."""
+    from ..geometry import ensure_ccw
+
+    branches = []
     for zid, poly in sorted(polys.items()):
-        contains = convex_contains_expr(poly, lon, lat)
-        branch = F.when(F.col("zone_id") == int(zid), contains)
-        refine = branch if refine is None else refine.when(
-            F.col("zone_id") == int(zid), contains
-        )
-    refine = refine.otherwise(F.lit(False))
-    return cand.where(refine)
+        poly = ensure_ccw(np.asarray(poly, dtype=np.float64))
+        n = len(poly)
+        pred = None
+        for i in range(n):
+            x1, y1 = poly[i]
+            x2, y2 = poly[(i + 1) % n]
+            term = (
+                f"{float(x2 - x1)!r}D * (`{lat}` - {float(y1)!r}D)"
+                f" - {float(y2 - y1)!r}D * (`{lon}` - {float(x1)!r}D) >= 0.0D"
+            )
+            # left-nested like Column `&` chains (the parser balances a
+            # flat AND list)
+            pred = term if pred is None else f"({pred}) AND ({term})"
+        branches.append(f"WHEN {int(zid)} THEN {pred}")
+    return "CASE zone_id " + " ".join(branches) + " ELSE false END"
 
 
 def pip_join_rtree(

@@ -6,6 +6,13 @@ encodes the execution policy the whole engine assumes:
   - Arrow execution on (every Python kernel is a vectorized pandas UDF)
   - shuffle partitions proportional to cores so local[8] vs local[32]
     scaling runs are apples-to-apples (BASELINE.md scaling protocol)
+  - PySpark's DataFrame call-site capture off
+    (`spark.python.sql.dataFrameDebugging.enabled=false`). With it on, every
+    Column method makes four py4j round trips (active session, conf read,
+    origin set/clear) and walks the Python stack — about two thirds of a
+    constructor's driver calls. Errors keep their class and message; what is
+    lost is only PySpark's Python `file:line` in a DataFrame error's query
+    context (the JVM still records its own origin).
 """
 
 from __future__ import annotations
@@ -45,6 +52,7 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )
     for k, v in (extra_conf or {}).items():

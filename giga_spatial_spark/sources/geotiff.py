@@ -27,6 +27,7 @@ py = height-1-row), value NULL where the sample equals nodata.
 
 from __future__ import annotations
 
+import os
 import struct
 import zlib
 from dataclasses import dataclass
@@ -96,6 +97,12 @@ def _read_values(f, bo: str, typ: int, count: int, raw: bytes):
         data = raw[:size]
     else:
         (off,) = struct.unpack(bo + "I", raw)
+        if off + size > os.fstat(f.fileno()).st_size:
+            # a corrupt count would otherwise allocate up to 34 GB in f.read
+            raise ValueError(
+                f"TIFF tag values at offset {off} ({size} bytes) run past "
+                "the end of the file"
+            )
         pos = f.tell()
         f.seek(off)
         data = f.read(size)

@@ -64,6 +64,32 @@ def read_dataset(spark: SparkSession, path: str, **options) -> DataFrame:
     raise ValueError(f"unsupported dataset format: {path}")
 
 
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """spark.read.parquet without the schema-inference job. For a local
+    single file the schema comes from its footer (pyarrow, well under a
+    millisecond) and is handed to the reader, which then fires no job at
+    construction; `prefer_timestamp_ntz` maps zone-less timestamps to
+    TIMESTAMP_NTZ, as Spark's own inference does. Directories and non-local
+    paths keep Spark's inference."""
+    local = path.removeprefix("file:")
+    if "://" in local or not os.path.isfile(local):
+        return spark.read.parquet(path)
+    import pyarrow.parquet as pq
+    from pyspark.errors import PySparkTypeError
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    with pq.ParquetFile(local) as pf:
+        footer, arrow_schema = pf.schema, pf.schema_arrow
+    # INT96 timestamps read as zone-less in Arrow but as TIMESTAMP in Spark
+    if any(footer.column(i).physical_type == "INT96" for i in range(len(footer))):
+        return spark.read.parquet(path)
+    try:
+        schema = from_arrow_schema(arrow_schema, prefer_timestamp_ntz=True)
+    except PySparkTypeError:  # e.g. unsigned ints, which Spark widens
+        return spark.read.parquet(path)
+    return spark.read.schema(schema).parquet(path)
+
+
 def read_zipped_shapefile(spark: SparkSession, path: str) -> DataFrame:
     """.zip → shapefile reader (reference GEO_READERS['.zip'] routes zip
     archives to gpd.read_file, which handles zipped shapefiles). The

@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .geometry import EARTH_RADIUS_M, polygon_centroid
+from .sources.readers import read_parquet
 
 LON_MULT, LON_MOD = 7919, 36000
 LAT_MULT, LAT_MOD = 104729, 16000
@@ -180,7 +181,7 @@ def facilities_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Facility point layer derived from the supplier table (deterministic
     geocode of s_suppkey) — plays the role of the reference's
     infrastructure POI layer (generators/poi.py)."""
-    sup = spark.read.parquet(f"{sf_dir}/supplier.parquet")
+    sup = read_parquet(spark, f"{sf_dir}/supplier.parquet")
     return sup.select(
         F.col("s_suppkey").alias("facility_id"),
         lon_expr(F.col("s_suppkey")).alias("flon"),
@@ -203,7 +204,7 @@ def parcels_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Axis-aligned box 'parcels' from the part table (center = geocoded
     p_partkey, half-width = p_size/10 degrees, value = p_retailprice).
     Box geometry keeps the fractional-overlay oracle exact in SQL."""
-    part = spark.read.parquet(f"{sf_dir}/part.parquet")
+    part = read_parquet(spark, f"{sf_dir}/part.parquet")
     half = F.col("p_size") / F.lit(10.0)
     cx = lon_expr(F.col("p_partkey"))
     cy = lat_expr(F.col("p_partkey"))

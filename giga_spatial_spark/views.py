@@ -493,10 +493,8 @@ class S2ViewGenerator:
         self.spark = spark
         self.level = level
         self.cells = cells_s2.polyfill(boundary, level, mode=contain_mode)
-        rows = []
-        for c in self.cells:
-            lat_c, lon_c = cells_s2.cell_center_latlon(int(c))
-            rows.append((int(c), float(lon_c), float(lat_c)))
+        lat_c, lon_c = cells_s2.cell_centers_latlon(self.cells, level)
+        rows = list(zip(self.cells.tolist(), lon_c.tolist(), lat_c.tolist()))
         self.zones_dim = spark.createDataFrame(
             rows, "s2_cell long, center_lon double, center_lat double"
         )

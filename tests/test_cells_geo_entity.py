@@ -100,6 +100,54 @@ def test_s2_token():
     assert 1 <= len(t) <= 16 and int(t.ljust(16, "0"), 16) == np.uint64(cid)
 
 
+def test_s2_vectorized_centers_bitwise_equal_scalar():
+    """cell_centers_latlon equals the scalar cell_center_latlon bit for bit,
+    on every face at levels 1-12."""
+    rng = np.random.default_rng(7)
+    lat = np.degrees(np.arcsin(rng.uniform(-1, 1, 600)))
+    lon = rng.uniform(-180, 180, 600)
+    for level in range(1, 13):
+        cids = cells_s2.cell_id(lat, lon, level)
+        assert set((cids.view(np.uint64) >> np.uint64(61)).tolist()) == set(range(6))
+        got_lat, got_lon = cells_s2.cell_centers_latlon(cids, level)
+        want = np.array([cells_s2.cell_center_latlon(int(c)) for c in cids])
+        assert np.array_equal(got_lat.view(np.int64), want[:, 0].view(np.int64))
+        assert np.array_equal(got_lon.view(np.int64), want[:, 1].view(np.int64))
+
+
+def _polyfill_center_per_cell(boundary, level):
+    """Per-cell reference for polyfill(mode='center'): the same candidate
+    sample grid, then one scalar centre decode and PIP test per cell."""
+    from giga_spatial_spark.geometry import point_in_polygon
+
+    b = np.asarray(boundary, dtype=np.float64)
+    (minx, miny), (maxx, maxy) = b.min(axis=0), b.max(axis=0)
+    step = max(90.0 / (1 << level) / 4.0, 1e-4)
+    gx, gy = np.meshgrid(np.arange(minx - step, maxx + 2 * step, step),
+                         np.arange(miny - step, maxy + 2 * step, step))
+    keep = []
+    for cid in np.unique(cells_s2.cell_id(gy.ravel(), gx.ravel(), level)):
+        lat, lon = cells_s2.cell_center_latlon(int(cid))
+        if point_in_polygon(b, np.array([lon]), np.array([lat]))[0]:
+            keep.append(int(cid))
+    return np.array(sorted(keep), dtype=np.int64)
+
+
+def test_s2_polyfill_center_matches_per_cell_reference():
+    from giga_spatial_spark import synth
+
+    # straddles the face 0 / face 1 boundary at lon 45° on the equator
+    cross_face = np.array([[40.0, -5.0], [50.0, -5.0], [50.0, 5.0], [40.0, 5.0]])
+    zones = list(synth.make_admin_polygons().values()) + [cross_face]
+    faces = cells_s2.polyfill(cross_face, 5).view(np.uint64) >> np.uint64(61)
+    assert set(faces.tolist()) == {0, 1}
+    for level in (4, 5, 6, 7):
+        for poly in zones:
+            got = cells_s2.polyfill(poly, level, mode="center")
+            assert got.dtype == np.int64
+            assert np.array_equal(got, _polyfill_center_per_cell(poly, level))
+
+
 # ------------------------------------------------------------------ geo fns
 def test_utm_epsg(spark):
     df = spark.createDataFrame(

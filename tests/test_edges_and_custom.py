@@ -98,6 +98,40 @@ def test_custom_grouped_stat(spark):
         assert abs(gotv - want) < 1e-9
 
 
+def test_pip_join_native_matches_convex_contains(spark):
+    """The one-expression refine decides every point exactly as the numpy
+    kernel does: random points, every vertex and every edge midpoint, on
+    counter-clockwise and clockwise rings."""
+    from giga_spatial_spark.geometry import convex_contains
+    from giga_spatial_spark.operators.pip_join import pip_join_native
+
+    rng = np.random.default_rng(3)
+    polys = {}
+    for zid, (cx, cy) in enumerate([(10.3, -4.7), (-71.9, 41.2), (120.1, 12.6)], 1):
+        t = np.sort(rng.uniform(0, 2 * np.pi, 9))
+        ring = np.column_stack([cx + 3.1 * np.cos(t), cy + 2.2 * np.sin(t)])
+        polys[2 * zid - 1] = ring            # counter-clockwise
+        polys[2 * zid] = ring[::-1] + 0.37   # clockwise, shifted to overlap
+    pts = [rng.uniform([-80, -10], [130, 50], (4000, 2))]
+    for ring in polys.values():
+        pts += [ring, (ring + np.roll(ring, -1, axis=0)) / 2]
+        bx = ring.min(axis=0), ring.max(axis=0)
+        pts.append(rng.uniform(bx[0], bx[1], (300, 2)))
+    xy = np.concatenate(pts)
+    df = spark.createDataFrame(
+        [(i, float(x), float(y)) for i, (x, y) in enumerate(xy)],
+        "pid long, lon double, lat double",
+    )
+    got = {(r.pid, r.zone_id) for r in pip_join_native(df, polys, zoom=6).collect()}
+    want = {
+        (i, zid)
+        for zid, ring in polys.items()
+        for i in np.flatnonzero(convex_contains(ring, xy[:, 0], xy[:, 1])).tolist()
+    }
+    assert len(want) > 1000
+    assert got == want
+
+
 def test_view_chain_operations(spark):
     pts = synth.with_coords(
         spark.read.parquet(f"{SF_DIR}/documents.parquet"), "doc_id"
