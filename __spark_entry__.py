@@ -11,9 +11,11 @@ integer sum → divide) so sums are order-independent and bit-identical.
 from __future__ import annotations
 
 from collections.abc import Callable
+from dataclasses import dataclass
+from typing import NamedTuple
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from giga_spatial_spark import cells, cells_hex, cells_s2, synth
@@ -47,13 +49,11 @@ PIP_ZOOM = 6
 
 
 # below this input size the serial scan stage is cheaper than an extra
-# exchange (env-overridable for cluster tuning; local default measured)
-SPREAD_MIN_INPUT_BYTES = int(
-    __import__("os").environ.get("SPARK_GRAFT_SPREAD_MIN_BYTES", 3_000_000)
-)
+# exchange (measured locally)
+SPREAD_MIN_INPUT_BYTES = 3_000_000
 
 
-def _spread(df: DataFrame, mult: int = 2, min_bytes: int | None = None) -> DataFrame:
+def _spread(df: DataFrame) -> DataFrame:
     """Scale-adaptive fan-out after a small scan (guide §2.5: "one huge
     unsplittable file … repartition immediately after the read").
 
@@ -71,7 +71,7 @@ def _spread(df: DataFrame, mult: int = 2, min_bytes: int | None = None) -> DataF
     # serial stage it parallelizes (measured at sf0.1: q_fingerprint
     # 0.5 s raw vs 1.3 s spread) — derive the decision from input size
     # (guide §2), not from a constant tuned to either scale. Tested first:
-    # it needs no RDD plan, unlike the split count below.
+    # it needs no RDD plan, unlike _fan_out's split count.
     try:
         import os as _os
 
@@ -80,10 +80,15 @@ def _spread(df: DataFrame, mult: int = 2, min_bytes: int | None = None) -> DataF
         )
     except Exception:
         total = None
-    floor = SPREAD_MIN_INPUT_BYTES if min_bytes is None else min_bytes
-    if total is not None and total < floor:
+    if total is not None and total < SPREAD_MIN_INPUT_BYTES:
         return df
-    target = df.sparkSession.sparkContext.defaultParallelism * mult
+    return _fan_out(df)
+
+
+def _fan_out(df: DataFrame) -> DataFrame:
+    """_spread without the byte floor: repartition to twice
+    defaultParallelism unless the scan already has that many splits."""
+    target = df.sparkSession.sparkContext.defaultParallelism * 2
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)
@@ -1838,26 +1843,125 @@ def q_normalize_strings(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_zonal_raster(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Zonal raster statistics (reference tif_processor.py:1008-1089):
-    synthetic pixel table → nodata mask → PIP vs admin zones → per-zone
-    stats (integer-exact sum via decipixels; exact interpolating median)."""
-    from giga_spatial_spark.operators.raster import RasterMeta, synthetic_raster
+def _fixture_root() -> str:
+    """Per-user directory of the generated file fixtures."""
+    import getpass
 
-    pixels = synthetic_raster(spark, RasterMeta())
+    return f"/tmp/spark_graft_fixtures_{getpass.getuser()}"
+
+
+def _cached_fixture(name: str, params: str, write: Callable[[str], None]) -> str:
+    """Path of fixture file ``name``, written once by ``write(path)``.
+
+    The cache is keyed by the generating parameters AND scoped per user, so
+    a stale file from an older formula, or a same-named file owned by
+    another tenant of the shared /tmp, can never change an output.
+    ``write`` fills a private temp directory (sidecar files included);
+    its files are then renamed into place, the named file last, because
+    its existence is what marks the fixture complete."""
+    import hashlib
+    import os
+    import tempfile
+
+    key = hashlib.sha256(params.encode()).hexdigest()[:16]
+    d = os.path.join(_fixture_root(), key)
+    path = os.path.join(d, name)
+    if not os.path.exists(path):
+        os.makedirs(d, exist_ok=True)
+        with tempfile.TemporaryDirectory(dir=d) as tmp:
+            write(os.path.join(tmp, name))
+            for f in sorted(os.listdir(tmp), key=lambda f: f == name):
+                os.replace(os.path.join(tmp, f), os.path.join(d, f))
+    return path
+
+
+class _Coeffs(NamedTuple):
+    """Integer pixel formula ``(px*a + row*b + c) % m`` over a fixture's
+    pixel column px and row: the one source of a fixture's numpy grid and
+    of the SQL that replays it."""
+
+    a: int
+    b: int
+    c: int
+    m: int
+
+    def grid(self, px, row):
+        return (px * self.a + row * self.b + self.c) % self.m
+
+    def sql(self, px: str, row: str) -> str:
+        c = f" + {self.c}" if self.c else ""
+        return f"({px} * {self.a} + {row} * {self.b}{c}) % {self.m}"
+
+
+def _deci_grid(vals: _Coeffs, nodata: _Coeffs, w: int, h: int) -> "np.ndarray":
+    """h×w float fixture grid: vals/10, and the -9999 nodata value wherever
+    the nodata formula is 0."""
+    import numpy as np
+
+    px = np.arange(w)[None, :]
+    row = np.arange(h)[:, None]
+    return np.where(nodata.grid(px, row) == 0, -9999.0, vals.grid(px, row) / 10.0)
+
+
+def _raster_zonal(pixels: DataFrame, *stats: Column) -> DataFrame:
+    """Zonal flow shared by every raster query: drop nodata pixels, tag
+    each pixel with its admin zone, then per zone the pixel count and
+    ``stats``."""
     valid = pixels.where(F.col("value").isNotNull())
     # pixel volume: Arrow grid-index refine (pip_join_rtree) — the
     # 12-zone composite CASE of the native path falls out of codegen
     # and runs interpreted (~38µs/row, docs/SCALE.md); measured 2.5×
     # faster here with identical membership (same convex arithmetic)
     matches = pip_join_rtree(valid, ADMIN_POLYS, lon="lon", lat="lat", zoom=PIP_ZOOM)
-    return matches.groupBy("zone_id").agg(
-        F.count(F.lit(1)).alias("px_count"),
+    return matches.groupBy("zone_id").agg(F.count(F.lit(1)).alias("px_count"), *stats)
+
+
+def _deci_stats(median: bool) -> list[Column]:
+    """Per-zone stats of deci-unit values: integer-exact sum via
+    decipixels, min, max, and the exact interpolating median if asked."""
+    stats = [
         (F.sum(F.round(F.col("value") * 10).cast("bigint")) / 10.0).alias("v_sum"),
         F.round(F.min("value"), 1).alias("v_min"),
         F.round(F.max("value"), 1).alias("v_max"),
-        F.round(F.percentile(F.col("value"), F.lit(0.5)), 2).alias("v_median"),
+    ]
+    if median:
+        stats.append(F.round(F.percentile(F.col("value"), F.lit(0.5)), 2).alias("v_median"))
+    return stats
+
+
+def _zonal_sql(ctes: str, valid: str, stats: str) -> str:
+    """DuckDB twin of _raster_zonal: ``ctes`` define the ``valid`` pixel
+    relation (value, lon, lat); each pixel is tagged with every admin zone
+    whose predicate holds, then grouped per zone."""
+    pip = " UNION ALL ".join(
+        f"SELECT {zid} AS zone_id, r.value FROM {valid} r WHERE "
+        + synth.convex_contains_sql(poly, "r.lon", "r.lat")
+        for zid, poly in sorted(ADMIN_POLYS.items())
     )
+    return (
+        f"WITH {ctes}, m AS ({pip}) "
+        f"SELECT zone_id, count(*) AS px_count, {stats} FROM m GROUP BY zone_id"
+    )
+
+
+_DECI_STATS_SQL = (
+    "sum(cast(round(value * 10, 0) as bigint)) / 10.0 AS v_sum, "
+    "round(min(value), 1) AS v_min, round(max(value), 1) AS v_max"
+)
+
+
+def q_zonal_raster(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Zonal raster statistics (reference tif_processor.py:1008-1089):
+    synthetic pixel table → nodata mask → PIP vs admin zones → per-zone
+    stats (integer-exact sum via decipixels; exact interpolating median)."""
+    from giga_spatial_spark.operators.raster import RasterMeta, synthetic_raster
+
+    return _raster_zonal(synthetic_raster(spark, RasterMeta()), *_deci_stats(median=True))
+
+
+# value and nodata formulas of the synthetic raster (py counts rows from
+# the south edge), as operators/raster.synthetic_raster computes them
+_SYNTH_PIXELS = (_Coeffs(31, 17, 1, 997), _Coeffs(7, 13, 0, 23))
 
 
 def q_geotiff_zonal(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1867,71 +1971,156 @@ def q_geotiff_zonal(spark: SparkSession, sf_dir: str) -> DataFrame:
     /tmp, decoded strip-parallel on executors, then fed through the same
     zonal flow as q_zonal_raster. The pixel table is bit-identical to the
     synthetic raster (pytest-asserted), so the oracle is the same SQL."""
-    import os
-
-    import numpy as np
-
     from giga_spatial_spark.operators.raster import RasterMeta
     from giga_spatial_spark.sources.geotiff import tiff_pixel_table, write_tiff
 
-    import getpass
-    import hashlib
+    rm = RasterMeta()
 
-    rmeta = RasterMeta()
-    # Cache keyed by the generating parameters AND scoped per-user so a
-    # stale file from an older formula, or a same-named file owned by
-    # another tenant of the shared /tmp, can never change the output
-    # (round-2 advisor finding). The key covers formula version + grid.
-    params = (
-        f"v2|w={rmeta.width}|h={rmeta.height}|lon0={rmeta.lon0!r}|"
-        f"lat1={rmeta.lat1!r}|dx={rmeta.dx!r}|dy={rmeta.dy!r}|"
-        "vals=(px*31+py*17+1)%997/10|nodata=(px*7+py*13)%23==0:-9999"
-    )
-    key = hashlib.sha256(params.encode()).hexdigest()[:16]
-    user = getpass.getuser()
-    path = f"/tmp/spark_graft_geotiff_{user}/synth_{key}.tif"
-    if not os.path.exists(path):
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        px = np.arange(rmeta.width)[None, :]
-        py = np.arange(rmeta.height)[:, None]
-        vals = ((px * 31 + py * 17 + 1) % 997) / 10.0
-        vals = np.where((px * 7 + py * 13) % 23 == 0, -9999.0, vals)
+    def write(path: str) -> None:
+        grid = _deci_grid(*_SYNTH_PIXELS, rm.width, rm.height)
         write_tiff(
-            path + ".tmp", vals[::-1], lon0=rmeta.lon0, lat1=rmeta.lat1,
-            dx=rmeta.dx, dy=rmeta.dy, nodata=-9999.0,
+            path, grid[::-1], lon0=rm.lon0, lat1=rm.lat1,
+            dx=rm.dx, dy=rm.dy, nodata=-9999.0,
         )
-        os.replace(path + ".tmp", path)
-    pixels = tiff_pixel_table(spark, path)
-    valid = pixels.where(F.col("value").isNotNull())
-    # pixel volume: Arrow grid-index refine (pip_join_rtree) — the
-    # 12-zone composite CASE of the native path falls out of codegen
-    # and runs interpreted (~38µs/row, docs/SCALE.md); measured 2.5×
-    # faster here with identical membership (same convex arithmetic)
-    matches = pip_join_rtree(valid, ADMIN_POLYS, lon="lon", lat="lat", zoom=PIP_ZOOM)
-    return matches.groupBy("zone_id").agg(
-        F.count(F.lit(1)).alias("px_count"),
-        (F.sum(F.round(F.col("value") * 10).cast("bigint")) / 10.0).alias("v_sum"),
-        F.round(F.min("value"), 1).alias("v_min"),
-        F.round(F.max("value"), 1).alias("v_max"),
-        F.round(F.percentile(F.col("value"), F.lit(0.5)), 2).alias("v_median"),
-    )
+
+    path = _cached_fixture("synth.tif", f"synth|{rm!r}|{_SYNTH_PIXELS!r}", write)
+    return _raster_zonal(tiff_pixel_table(spark, path), *_deci_stats(median=True))
 
 
-MOLL_W, MOLL_H, MOLL_DX = 180, 140, 15000.0
+@dataclass(frozen=True)
+class _ProjectedRaster:
+    """One projected-CRS GeoTIFF fixture: a w×h grid of dx-metre pixels in
+    ``crs``, centred on ``anchor`` (one zone's centroid, or the joint
+    metre-space bounding box of several zones), row 0 at the north edge.
+    ``cte`` prefixes the oracle's CTE names."""
+
+    name: str
+    cte: str
+    w: int
+    h: int
+    dx: float
+    crs: str | dict
+    vals: _Coeffs
+    nodata: _Coeffs
+    anchor: int | tuple[int, ...]
 
 
-def _mollweide_anchor() -> tuple[float, float]:
-    """Top-left Mollweide (x0, y1) of the fixture grid: centered on zone 2's
-    centroid, computed with the from-scratch forward projection."""
+PROJECTED_RASTERS = {
+    "q_geotiff_mollweide": _ProjectedRaster(
+        "moll", "", 180, 140, 15000.0, "ESRI:54009",
+        _Coeffs(31, 17, 1, 997), _Coeffs(7, 13, 0, 23), 2,
+    ),
+    "q_geotiff_laea": _ProjectedRaster(
+        "laea", "l", 160, 120, 18000.0, "EPSG:3035",
+        _Coeffs(29, 19, 3, 991), _Coeffs(5, 11, 0, 19), 3,
+    ),
+    # zones 2/8/9: the three fixture zones nearest the projection origin
+    "q_geotiff_albers": _ProjectedRaster(
+        "albers", "a", 160, 120, 52000.0, "EPSG:5070",
+        _Coeffs(23, 31, 7, 977), _Coeffs(7, 13, 0, 23), (2, 8, 9),
+    ),
+    "q_geotiff_lcc": _ProjectedRaster(
+        "lcc", "c", 160, 120, 89000.0, "EPSG:2154",
+        _Coeffs(37, 17, 11, 953), _Coeffs(3, 17, 0, 29), (3, 5, 7),
+    ),
+    # the bbox of zones 0/4/5 straddles the north pole, so the inverse's
+    # ρ→0 branch is exercised by real pixels
+    "q_geotiff_polar": _ProjectedRaster(
+        "polar", "p", 160, 120, 100000.0, "EPSG:3413",
+        _Coeffs(47, 19, 17, 929), _Coeffs(17, 5, 0, 41), (0, 4, 5),
+    ),
+    # Albers equal-area conic with user-defined parameters (southern-
+    # hemisphere standard parallels no EPSG code names)
+    "q_geotiff_custom_crs": _ProjectedRaster(
+        "customcrs", "u", 160, 120, 52000.0,
+        {
+            "ct": 11,
+            "sp1": -30.0, "sp2": 5.0, "lat0": -10.0, "lon0": -80.0,
+            "x0": 1500000.0, "y0": 2500000.0,
+        },
+        _Coeffs(43, 29, 13, 941), _Coeffs(13, 7, 0, 37), (2, 8, 9),
+    ),
+}
+
+
+def _projection(crs: str | dict):
+    """The from-scratch projection (forward / inverse_sql) behind a
+    fixture CRS: a named code, or user-defined GeoKey parameters."""
+    from giga_spatial_spark.functions import albers, laea, lcc, mollweide, polar
+    from giga_spatial_spark.functions.crs import projection_from_params
+
+    if isinstance(crs, dict):
+        return projection_from_params(crs)
+    return {
+        "ESRI:54009": mollweide,
+        "EPSG:3035": laea,
+        "EPSG:5070": albers,
+        "EPSG:2154": lcc,
+        "EPSG:3413": polar.EPSG_3413,
+    }[crs]
+
+
+def _anchor(spec: _ProjectedRaster) -> tuple[float, float]:
+    """Top-left projected (x0, y1) of a fixture grid, centred on its anchor
+    zones via the projection's forward."""
     import numpy as np
 
-    from giga_spatial_spark.functions import mollweide as M
+    pj = _projection(spec.crs)
+    if isinstance(spec.anchor, int):
+        cx, cy = polygon_centroid(ADMIN_POLYS[spec.anchor])
+        lonlats = [(np.array([cx]), np.array([cy]))]
+    else:
+        arrs = [np.asarray(ADMIN_POLYS[z], dtype=np.float64) for z in spec.anchor]
+        lonlats = [(a[:, 0], a[:, 1]) for a in arrs]
+    xys = [pj.forward(lon, lat) for lon, lat in lonlats]
+    x = np.concatenate([x for x, _ in xys])
+    y = np.concatenate([y for _, y in xys])
+    cx = (float(x.min()) + float(x.max())) / 2.0
+    cy = (float(y.min()) + float(y.max())) / 2.0
+    return (cx - spec.w / 2 * spec.dx, cy + spec.h / 2 * spec.dx)
 
-    cx, cy = polygon_centroid(ADMIN_POLYS[2])
-    x, y = M.forward(np.array([cx]), np.array([cy]))
-    return (
-        float(x[0]) - MOLL_W / 2 * MOLL_DX,
-        float(y[0]) + MOLL_H / 2 * MOLL_DX,
+
+def _projected_zonal(spark: SparkSession, query: str) -> DataFrame:
+    """Write (once) the query's projected fixture, decode it strip-parallel
+    with pixel centres inverse-projected to lon/lat, then zonal stats."""
+    from giga_spatial_spark.sources.geotiff import tiff_pixel_table, write_tiff
+
+    spec = PROJECTED_RASTERS[query]
+    x0, y1 = _anchor(spec)
+
+    def write(path: str) -> None:
+        write_tiff(
+            path, _deci_grid(spec.vals, spec.nodata, spec.w, spec.h),
+            lon0=x0, lat1=y1, dx=spec.dx, dy=spec.dx, nodata=-9999.0,
+            crs=spec.crs,
+        )
+
+    path = _cached_fixture(
+        f"{spec.name}.tif", f"{spec!r}|x0={x0!r}|y1={y1!r}", write
+    )
+    return _raster_zonal(tiff_pixel_table(spark, path), *_deci_stats(median=False))
+
+
+def _projected_oracle(spec: _ProjectedRaster) -> str:
+    """DuckDB replay of a projected fixture query: the pixel grid, the
+    projection's inverse_sql and the zone predicates."""
+    x0, y1 = _anchor(spec)
+    px, row = f"(i % {spec.w})", f"(i // {spec.w})"
+    lon, lat = _projection(spec.crs).inverse_sql(
+        f"({x0!r} + ({px} + 0.5) * {spec.dx!r})",
+        f"({y1!r} - ({row} + 0.5) * {spec.dx!r})",
+    )
+    value = (
+        f"CASE WHEN {spec.nodata.sql(px, row)} = 0 "
+        f"THEN NULL ELSE ({spec.vals.sql(px, row)}) / 10.0 END"
+    )
+    p = spec.cte
+    return _zonal_sql(
+        f"{p}raster AS (SELECT {value} AS value, {lon} AS lon, "
+        f"{lat} AS lat FROM range({spec.w * spec.h}) t(i)), "
+        f"{p}valid AS MATERIALIZED (SELECT * FROM {p}raster WHERE value IS NOT NULL)",
+        f"{p}valid",
+        _DECI_STATS_SQL,
     )
 
 
@@ -1943,63 +2132,7 @@ def q_geotiff_mollweide(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed-form), then the same zonal flow as q_geotiff_zonal. The oracle
     replays the grid, the Mollweide inverse (mollweide.inverse_sql) and the
     zone predicates in SQL."""
-    import getpass
-    import hashlib
-    import os
-
-    import numpy as np
-
-    from giga_spatial_spark.sources.geotiff import tiff_pixel_table, write_tiff
-
-    x0, y1 = _mollweide_anchor()
-    params = (
-        f"moll_v1|w={MOLL_W}|h={MOLL_H}|x0={x0!r}|y1={y1!r}|dx={MOLL_DX!r}|"
-        "vals=(px*31+py*17+1)%997/10|nodata=(px*7+py*13)%23==0:-9999"
-    )
-    key = hashlib.sha256(params.encode()).hexdigest()[:16]
-    path = f"/tmp/spark_graft_geotiff_{getpass.getuser()}/moll_{key}.tif"
-    if not os.path.exists(path):
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        px = np.arange(MOLL_W)[None, :]
-        row = np.arange(MOLL_H)[:, None]
-        vals = ((px * 31 + row * 17 + 1) % 997) / 10.0
-        vals = np.where((px * 7 + row * 13) % 23 == 0, -9999.0, vals)
-        write_tiff(
-            path + ".tmp", vals, lon0=x0, lat1=y1, dx=MOLL_DX, dy=MOLL_DX,
-            nodata=-9999.0, crs="ESRI:54009",
-        )
-        os.replace(path + ".tmp", path)
-    pixels = tiff_pixel_table(spark, path)
-    valid = pixels.where(F.col("value").isNotNull())
-    # pixel volume: Arrow grid-index refine (pip_join_rtree) — the
-    # 12-zone composite CASE of the native path falls out of codegen
-    # and runs interpreted (~38µs/row, docs/SCALE.md); measured 2.5×
-    # faster here with identical membership (same convex arithmetic)
-    matches = pip_join_rtree(valid, ADMIN_POLYS, lon="lon", lat="lat", zoom=PIP_ZOOM)
-    return matches.groupBy("zone_id").agg(
-        F.count(F.lit(1)).alias("px_count"),
-        (F.sum(F.round(F.col("value") * 10).cast("bigint")) / 10.0).alias("v_sum"),
-        F.round(F.min("value"), 1).alias("v_min"),
-        F.round(F.max("value"), 1).alias("v_max"),
-    )
-
-
-LAEA_W, LAEA_H, LAEA_DX = 160, 120, 18000.0
-
-
-def _laea_anchor() -> tuple[float, float]:
-    """Top-left EPSG:3035 (x0, y1) of the LAEA fixture grid: centered on
-    zone 3's centroid via the from-scratch ellipsoidal forward."""
-    import numpy as np
-
-    from giga_spatial_spark.functions import laea as L
-
-    cx, cy = polygon_centroid(ADMIN_POLYS[3])
-    x, y = L.forward(np.array([cx]), np.array([cy]))
-    return (
-        float(x[0]) - LAEA_W / 2 * LAEA_DX,
-        float(y[0]) + LAEA_H / 2 * LAEA_DX,
-    )
+    return _projected_zonal(spark, "q_geotiff_mollweide")
 
 
 def q_geotiff_laea(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2012,66 +2145,7 @@ def q_geotiff_laea(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the zone predicates in SQL. Reference: tif_processor.py accepts
     arbitrary projected CRSs via rasterio; EPSG:3035 is the most common
     public raster CRS outside the engine's other four families."""
-    import getpass
-    import hashlib
-    import os
-
-    import numpy as np
-
-    from giga_spatial_spark.sources.geotiff import tiff_pixel_table, write_tiff
-
-    x0, y1 = _laea_anchor()
-    params = (
-        f"laea_v1|w={LAEA_W}|h={LAEA_H}|x0={x0!r}|y1={y1!r}|dx={LAEA_DX!r}|"
-        "vals=(px*29+py*19+3)%991/10|nodata=(px*5+py*11)%19==0:-9999"
-    )
-    key = hashlib.sha256(params.encode()).hexdigest()[:16]
-    path = f"/tmp/spark_graft_geotiff_{getpass.getuser()}/laea_{key}.tif"
-    if not os.path.exists(path):
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        px = np.arange(LAEA_W)[None, :]
-        row = np.arange(LAEA_H)[:, None]
-        vals = ((px * 29 + row * 19 + 3) % 991) / 10.0
-        vals = np.where((px * 5 + row * 11) % 19 == 0, -9999.0, vals)
-        write_tiff(
-            path + ".tmp", vals, lon0=x0, lat1=y1, dx=LAEA_DX, dy=LAEA_DX,
-            nodata=-9999.0, crs="EPSG:3035",
-        )
-        os.replace(path + ".tmp", path)
-    pixels = tiff_pixel_table(spark, path)
-    valid = pixels.where(F.col("value").isNotNull())
-    matches = pip_join_rtree(valid, ADMIN_POLYS, lon="lon", lat="lat", zoom=PIP_ZOOM)
-    return matches.groupBy("zone_id").agg(
-        F.count(F.lit(1)).alias("px_count"),
-        (F.sum(F.round(F.col("value") * 10).cast("bigint")) / 10.0).alias("v_sum"),
-        F.round(F.min("value"), 1).alias("v_min"),
-        F.round(F.max("value"), 1).alias("v_max"),
-    )
-
-
-ALB_W, ALB_H, ALB_DX = 160, 120, 52000.0
-
-
-def _albers_anchor() -> tuple[float, float]:
-    """Top-left EPSG:5070 (x0, y1) of the Albers fixture grid: centered
-    on the joint meter-space bounding box of zones 2/8/9 (the three
-    fixture zones nearest the projection origin) so the grid overlaps
-    several zones, via the from-scratch ellipsoidal forward."""
-    import numpy as np
-
-    from giga_spatial_spark.functions import albers as AL
-
-    xs, ys = [], []
-    for zid in (2, 8, 9):
-        arr = np.asarray(ADMIN_POLYS[zid], dtype=np.float64)
-        x, y = AL.forward(arr[:, 0], arr[:, 1])
-        xs.append(x)
-        ys.append(y)
-    x = np.concatenate(xs)
-    y = np.concatenate(ys)
-    cx = (float(x.min()) + float(x.max())) / 2.0
-    cy = (float(y.min()) + float(y.max())) / 2.0
-    return (cx - ALB_W / 2 * ALB_DX, cy + ALB_H / 2 * ALB_DX)
+    return _projected_zonal(spark, "q_geotiff_laea")
 
 
 def q_geotiff_albers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2085,65 +2159,7 @@ def q_geotiff_albers(spark: SparkSession, sf_dir: str) -> DataFrame:
     tif_processor.py accepts arbitrary projected CRSs via rasterio;
     EPSG:5070 is the standard US-wide public raster CRS (the most common
     family after EPSG:3035, which landed last commit)."""
-    import getpass
-    import hashlib
-    import os
-
-    import numpy as np
-
-    from giga_spatial_spark.sources.geotiff import tiff_pixel_table, write_tiff
-
-    x0, y1 = _albers_anchor()
-    params = (
-        f"albers_v1|w={ALB_W}|h={ALB_H}|x0={x0!r}|y1={y1!r}|dx={ALB_DX!r}|"
-        "vals=(px*23+py*31+7)%977/10|nodata=(px*7+py*13)%23==0:-9999"
-    )
-    key = hashlib.sha256(params.encode()).hexdigest()[:16]
-    path = f"/tmp/spark_graft_geotiff_{getpass.getuser()}/albers_{key}.tif"
-    if not os.path.exists(path):
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        px = np.arange(ALB_W)[None, :]
-        row = np.arange(ALB_H)[:, None]
-        vals = ((px * 23 + row * 31 + 7) % 977) / 10.0
-        vals = np.where((px * 7 + row * 13) % 23 == 0, -9999.0, vals)
-        write_tiff(
-            path + ".tmp", vals, lon0=x0, lat1=y1, dx=ALB_DX, dy=ALB_DX,
-            nodata=-9999.0, crs="EPSG:5070",
-        )
-        os.replace(path + ".tmp", path)
-    pixels = tiff_pixel_table(spark, path)
-    valid = pixels.where(F.col("value").isNotNull())
-    matches = pip_join_rtree(valid, ADMIN_POLYS, lon="lon", lat="lat", zoom=PIP_ZOOM)
-    return matches.groupBy("zone_id").agg(
-        F.count(F.lit(1)).alias("px_count"),
-        (F.sum(F.round(F.col("value") * 10).cast("bigint")) / 10.0).alias("v_sum"),
-        F.round(F.min("value"), 1).alias("v_min"),
-        F.round(F.max("value"), 1).alias("v_max"),
-    )
-
-
-LCC_W, LCC_H, LCC_DX = 160, 120, 89000.0
-
-
-def _lcc_anchor() -> tuple[float, float]:
-    """Top-left EPSG:2154 (x0, y1) of the Lambert-93 fixture grid:
-    centered on the joint meter-space bounding box of zones 3/5/7 via the
-    from-scratch ellipsoidal conformal forward."""
-    import numpy as np
-
-    from giga_spatial_spark.functions import lcc as LC
-
-    xs, ys = [], []
-    for zid in (3, 5, 7):
-        arr = np.asarray(ADMIN_POLYS[zid], dtype=np.float64)
-        x, y = LC.forward(arr[:, 0], arr[:, 1])
-        xs.append(x)
-        ys.append(y)
-    x = np.concatenate(xs)
-    y = np.concatenate(ys)
-    cx = (float(x.min()) + float(x.max())) / 2.0
-    cy = (float(y.min()) + float(y.max())) / 2.0
-    return (cx - LCC_W / 2 * LCC_DX, cy + LCC_H / 2 * LCC_DX)
+    return _projected_zonal(spark, "q_geotiff_albers")
 
 
 def q_geotiff_lcc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2158,66 +2174,7 @@ def q_geotiff_lcc(spark: SparkSession, sf_dir: str) -> DataFrame:
     of Paris), then the q_geotiff_zonal flow. The oracle replays the
     grid, lcc.inverse_sql and the zone predicates in SQL. Reference:
     tif_processor.py accepts arbitrary projected CRSs via rasterio."""
-    import getpass
-    import hashlib
-    import os
-
-    import numpy as np
-
-    from giga_spatial_spark.sources.geotiff import tiff_pixel_table, write_tiff
-
-    x0, y1 = _lcc_anchor()
-    params = (
-        f"lcc_v1|w={LCC_W}|h={LCC_H}|x0={x0!r}|y1={y1!r}|dx={LCC_DX!r}|"
-        "vals=(px*37+py*17+11)%953/10|nodata=(px*3+py*17)%29==0:-9999"
-    )
-    key = hashlib.sha256(params.encode()).hexdigest()[:16]
-    path = f"/tmp/spark_graft_geotiff_{getpass.getuser()}/lcc_{key}.tif"
-    if not os.path.exists(path):
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        px = np.arange(LCC_W)[None, :]
-        row = np.arange(LCC_H)[:, None]
-        vals = ((px * 37 + row * 17 + 11) % 953) / 10.0
-        vals = np.where((px * 3 + row * 17) % 29 == 0, -9999.0, vals)
-        write_tiff(
-            path + ".tmp", vals, lon0=x0, lat1=y1, dx=LCC_DX, dy=LCC_DX,
-            nodata=-9999.0, crs="EPSG:2154",
-        )
-        os.replace(path + ".tmp", path)
-    pixels = tiff_pixel_table(spark, path)
-    valid = pixels.where(F.col("value").isNotNull())
-    matches = pip_join_rtree(valid, ADMIN_POLYS, lon="lon", lat="lat", zoom=PIP_ZOOM)
-    return matches.groupBy("zone_id").agg(
-        F.count(F.lit(1)).alias("px_count"),
-        (F.sum(F.round(F.col("value") * 10).cast("bigint")) / 10.0).alias("v_sum"),
-        F.round(F.min("value"), 1).alias("v_min"),
-        F.round(F.max("value"), 1).alias("v_max"),
-    )
-
-
-POL_W, POL_H, POL_DX = 160, 120, 100000.0
-
-
-def _polar_anchor() -> tuple[float, float]:
-    """Top-left EPSG:3413 (x0, y1) of the polar-stereographic fixture
-    grid: centered on the joint meter-space bbox of zones 0/4/5 — which
-    straddles the north pole, so the inverse's ρ→0 branch is exercised
-    by real pixels."""
-    import numpy as np
-
-    from giga_spatial_spark.functions.polar import EPSG_3413
-
-    xs, ys = [], []
-    for zid in (0, 4, 5):
-        arr = np.asarray(ADMIN_POLYS[zid], dtype=np.float64)
-        x, y = EPSG_3413.forward(arr[:, 0], arr[:, 1])
-        xs.append(x)
-        ys.append(y)
-    x = np.concatenate(xs)
-    y = np.concatenate(ys)
-    cx = (float(x.min()) + float(x.max())) / 2.0
-    cy = (float(y.min()) + float(y.max())) / 2.0
-    return (cx - POL_W / 2 * POL_DX, cy + POL_H / 2 * POL_DX)
+    return _projected_zonal(spark, "q_geotiff_lcc")
 
 
 def q_geotiff_polar(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2231,71 +2188,7 @@ def q_geotiff_polar(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pole itself, exercising the ρ→0 branch), then the
     q_geotiff_zonal flow. The oracle replays the grid,
     polar.inverse_sql and the zone predicates in SQL."""
-    import getpass
-    import hashlib
-    import os
-
-    import numpy as np
-
-    from giga_spatial_spark.sources.geotiff import tiff_pixel_table, write_tiff
-
-    x0, y1 = _polar_anchor()
-    params = (
-        f"polar_v1|w={POL_W}|h={POL_H}|x0={x0!r}|y1={y1!r}|dx={POL_DX!r}|"
-        "vals=(px*47+py*19+17)%929/10|nodata=(px*17+py*5)%41==0:-9999"
-    )
-    key = hashlib.sha256(params.encode()).hexdigest()[:16]
-    path = f"/tmp/spark_graft_geotiff_{getpass.getuser()}/polar_{key}.tif"
-    if not os.path.exists(path):
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        px = np.arange(POL_W)[None, :]
-        row = np.arange(POL_H)[:, None]
-        vals = ((px * 47 + row * 19 + 17) % 929) / 10.0
-        vals = np.where((px * 17 + row * 5) % 41 == 0, -9999.0, vals)
-        write_tiff(
-            path + ".tmp", vals, lon0=x0, lat1=y1, dx=POL_DX, dy=POL_DX,
-            nodata=-9999.0, crs="EPSG:3413",
-        )
-        os.replace(path + ".tmp", path)
-    pixels = tiff_pixel_table(spark, path)
-    valid = pixels.where(F.col("value").isNotNull())
-    matches = pip_join_rtree(valid, ADMIN_POLYS, lon="lon", lat="lat", zoom=PIP_ZOOM)
-    return matches.groupBy("zone_id").agg(
-        F.count(F.lit(1)).alias("px_count"),
-        (F.sum(F.round(F.col("value") * 10).cast("bigint")) / 10.0).alias("v_sum"),
-        F.round(F.min("value"), 1).alias("v_min"),
-        F.round(F.max("value"), 1).alias("v_max"),
-    )
-
-
-CUSTOM_CRS_PARAMS = {
-    "ct": 11,  # Albers equal-area conic, user-defined parameters
-    "sp1": -30.0, "sp2": 5.0, "lat0": -10.0, "lon0": -80.0,
-    "x0": 1500000.0, "y0": 2500000.0,
-}
-CUS_W, CUS_H, CUS_DX = 160, 120, 52000.0
-
-
-def _custom_crs_anchor() -> tuple[float, float]:
-    """Top-left (x0, y1) of the user-defined-CRS fixture grid: centered
-    on the joint meter-space bbox of zones 2/8/9 under the CUSTOM Albers
-    parameters (no EPSG code names them)."""
-    import numpy as np
-
-    from giga_spatial_spark.functions.crs import projection_from_params
-
-    pj = projection_from_params(CUSTOM_CRS_PARAMS)
-    xs, ys = [], []
-    for zid in (2, 8, 9):
-        arr = np.asarray(ADMIN_POLYS[zid], dtype=np.float64)
-        x, y = pj.forward(arr[:, 0], arr[:, 1])
-        xs.append(x)
-        ys.append(y)
-    x = np.concatenate(xs)
-    y = np.concatenate(ys)
-    cx = (float(x.min()) + float(x.max())) / 2.0
-    cy = (float(y.min()) + float(y.max())) / 2.0
-    return (cx - CUS_W / 2 * CUS_DX, cy + CUS_H / 2 * CUS_DX)
+    return _projected_zonal(spark, "q_geotiff_polar")
 
 
 def q_geotiff_custom_crs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2309,41 +2202,87 @@ def q_geotiff_custom_crs(spark: SparkSession, sf_dir: str) -> DataFrame:
     and pixel centers inverse-project through it strip-parallel. The
     oracle replays the SAME instance's inverse_sql — parameter coverage,
     not a fixed code registry, is what is hash-checked."""
-    import getpass
-    import hashlib
-    import os
+    return _projected_zonal(spark, "q_geotiff_custom_crs")
 
+
+# value and nodata formulas of the two COG fixtures (row 0 = north edge)
+_COG_PIXELS = (_Coeffs(41, 13, 5, 983), _Coeffs(11, 3, 0, 31))
+_COG_INT_PIXELS = (_Coeffs(37, 17, 3, 251), _Coeffs(7, 5, 0, 29))
+
+
+def _cog_level1(
+    spark: SparkSession, name: str, vals: _Coeffs, nodata: _Coeffs, integer: bool
+) -> DataFrame:
+    """Write (once) a COG over the RasterMeta grid through write_cog —
+    float deci-values with -9999 holes, or uint8 values with 255 holes —
+    and decode its overview LEVEL 1 tile-parallel."""
     import numpy as np
 
-    from giga_spatial_spark.sources.geotiff import tiff_pixel_table, write_tiff
+    from giga_spatial_spark.operators.raster import RasterMeta
+    from giga_spatial_spark.sources.geotiff import tiff_pixel_table, write_cog
 
-    x0, y1 = _custom_crs_anchor()
-    params = (
-        f"customcrs_v1|{sorted(CUSTOM_CRS_PARAMS.items())!r}|w={CUS_W}|"
-        f"h={CUS_H}|x0={x0!r}|y1={y1!r}|dx={CUS_DX!r}|"
-        "vals=(px*43+py*29+13)%941/10|nodata=(px*13+py*7)%37==0:-9999"
-    )
-    key = hashlib.sha256(params.encode()).hexdigest()[:16]
-    path = f"/tmp/spark_graft_geotiff_{getpass.getuser()}/customcrs_{key}.tif"
-    if not os.path.exists(path):
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        px = np.arange(CUS_W)[None, :]
-        row = np.arange(CUS_H)[:, None]
-        vals = ((px * 43 + row * 29 + 13) % 941) / 10.0
-        vals = np.where((px * 13 + row * 7) % 37 == 0, -9999.0, vals)
-        write_tiff(
-            path + ".tmp", vals, lon0=x0, lat1=y1, dx=CUS_DX, dy=CUS_DX,
-            nodata=-9999.0, crs=CUSTOM_CRS_PARAMS,
+    rm = RasterMeta()
+
+    def write(path: str) -> None:
+        if integer:
+            px = np.arange(rm.width)[None, :]
+            row = np.arange(rm.height)[:, None]
+            grid = np.where(
+                nodata.grid(px, row) == 0,
+                np.uint8(255),
+                vals.grid(px, row).astype(np.uint8),
+            )
+            kw = {"nodata": 255, "dtype": "uint8"}
+        else:
+            grid = _deci_grid(vals, nodata, rm.width, rm.height)
+            kw = {"nodata": -9999.0}
+        write_cog(
+            path, grid, lon0=rm.lon0, lat1=rm.lat1, dx=rm.dx, dy=rm.dy,
+            min_overview_size=64, **kw,
         )
-        os.replace(path + ".tmp", path)
-    pixels = tiff_pixel_table(spark, path)
-    valid = pixels.where(F.col("value").isNotNull())
-    matches = pip_join_rtree(valid, ADMIN_POLYS, lon="lon", lat="lat", zoom=PIP_ZOOM)
-    return matches.groupBy("zone_id").agg(
-        F.count(F.lit(1)).alias("px_count"),
-        (F.sum(F.round(F.col("value") * 10).cast("bigint")) / 10.0).alias("v_sum"),
-        F.round(F.min("value"), 1).alias("v_min"),
-        F.round(F.max("value"), 1).alias("v_max"),
+
+    params = f"{name}|{rm!r}|{vals!r}|{nodata!r}|integer={integer}|ov=64"
+    path = _cached_fixture(f"{name}.tif", params, write)
+    return tiff_pixel_table(spark, path, level=1)
+
+
+def _cog_oracle(vals: _Coeffs, nodata: _Coeffs, integer: bool, stats: str) -> str:
+    """DuckDB replay of a COG fixture's overview level 1 over the
+    full-res formula grid: the EXPLICIT ((a+b)+(c+d))/n 2x2 block average
+    (downsample2_mean's documented operation order — bit-identical
+    doubles in both engines), or for integer fixtures the BIGINT-only
+    round-half-up average (2*sum + n) // (2*n)."""
+    from giga_spatial_spark.operators.raster import RasterMeta
+
+    rm = RasterMeta()
+    ow, oh = rm.width // 2, rm.height // 2
+    scale, zero, p = ("", "0", "i") if integer else (" / 10.0", "0.0", "o")
+    a, b, c, d = (
+        f"(CASE WHEN {nodata.sql(x, y)} = 0 THEN NULL "
+        f"ELSE ({vals.sql(x, y)}){scale} END)"
+        for x, y in (
+            ("(2*c)", "(2*r)"), ("(2*c+1)", "(2*r)"),
+            ("(2*c)", "(2*r+1)"), ("(2*c+1)", "(2*r+1)"),
+        )
+    )
+    n = (
+        f"(({a} IS NOT NULL)::BIGINT + ({b} IS NOT NULL)::BIGINT + "
+        f"({c} IS NOT NULL)::BIGINT + ({d} IS NOT NULL)::BIGINT)"
+    )
+    s = (
+        f"((coalesce({a}, {zero}) + coalesce({b}, {zero})) + "
+        f"(coalesce({c}, {zero}) + coalesce({d}, {zero})))"
+    )
+    avg = f"(2 * {s} + {n}) // (2 * {n})" if integer else f"{s} / {n}"
+    return _zonal_sql(
+        f"og AS (SELECT i % {ow} AS c, i // {ow} AS r "
+        f"FROM range({ow * oh}) t(i)), "
+        f"{p}v AS (SELECT CASE WHEN {n} > 0 THEN {avg} ELSE NULL END AS value, "
+        f"({rm.lon0!r} + (c + 0.5) * {2.0 * rm.dx!r}) AS lon, "
+        f"({rm.lat1!r} - (r + 0.5) * {2.0 * rm.dy!r}) AS lat FROM og), "
+        f"{p}valid AS MATERIALIZED (SELECT * FROM {p}v WHERE value IS NOT NULL)",
+        f"{p}valid",
+        stats,
     )
 
 
@@ -2361,43 +2300,13 @@ def q_cog_overview(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags are all under the hash. Aggregates use integer 1/40-units
     (averages of n∈{1..4} tenth-valued pixels are exact multiples of
     0.025) to stay inside the house centi-unit rounding envelope."""
-    import getpass
-    import hashlib
-    import os
-
-    import numpy as np
-
-    from giga_spatial_spark.operators.raster import RasterMeta
-    from giga_spatial_spark.sources.geotiff import tiff_pixel_table, write_cog
-
-    rmeta = RasterMeta()
-    params = (
-        f"cog_v1|w={rmeta.width}|h={rmeta.height}|lon0={rmeta.lon0!r}|"
-        f"lat1={rmeta.lat1!r}|dx={rmeta.dx!r}|dy={rmeta.dy!r}|"
-        "vals=(px*41+row*13+5)%983/10|nodata=(px*11+row*3)%31==0:-9999|ov=64"
-    )
-    key = hashlib.sha256(params.encode()).hexdigest()[:16]
-    path = f"/tmp/spark_graft_geotiff_{getpass.getuser()}/cog_{key}.tif"
-    if not os.path.exists(path):
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        px = np.arange(rmeta.width)[None, :]
-        row = np.arange(rmeta.height)[:, None]  # row 0 = north edge
-        vals = ((px * 41 + row * 13 + 5) % 983) / 10.0
-        vals = np.where((px * 11 + row * 3) % 31 == 0, -9999.0, vals)
-        write_cog(
-            path + ".tmp", vals, lon0=rmeta.lon0, lat1=rmeta.lat1,
-            dx=rmeta.dx, dy=rmeta.dy, nodata=-9999.0,
-            min_overview_size=64,
-        )
-        os.replace(path + ".tmp", path)
-    pixels = tiff_pixel_table(spark, path, level=1)
-    valid = pixels.where(F.col("value").isNotNull())
-    matches = pip_join_rtree(valid, ADMIN_POLYS, lon="lon", lat="lat", zoom=PIP_ZOOM)
-    return matches.groupBy("zone_id").agg(
-        F.count(F.lit(1)).alias("px_count"),
-        F.sum(F.round(F.col("value") * 40).cast("bigint")).alias("v_sum40"),
-        F.min(F.round(F.col("value") * 40).cast("bigint")).alias("v_min40"),
-        F.max(F.round(F.col("value") * 40).cast("bigint")).alias("v_max40"),
+    pixels = _cog_level1(spark, "cog", *_COG_PIXELS, integer=False)
+    v40 = F.round(F.col("value") * 40).cast("bigint")
+    return _raster_zonal(
+        pixels,
+        F.sum(v40).alias("v_sum40"),
+        F.min(v40).alias("v_min40"),
+        F.max(v40).alias("v_max40"),
     )
 
 
@@ -2410,41 +2319,10 @@ def q_cog_overview_int(spark: SparkSession, sf_dir: str) -> DataFrame:
     zonally aggregated. The pipeline is all-integer end to end, so the
     oracle replays the pyramid arithmetic with BIGINT ops only — no
     float rounding envelope at all."""
-    import getpass
-    import hashlib
-    import os
-
-    import numpy as np
-
-    from giga_spatial_spark.operators.raster import RasterMeta
-    from giga_spatial_spark.sources.geotiff import tiff_pixel_table, write_cog
-
-    rmeta = RasterMeta()
-    params = (
-        f"cogint_v1|w={rmeta.width}|h={rmeta.height}|lon0={rmeta.lon0!r}|"
-        f"lat1={rmeta.lat1!r}|dx={rmeta.dx!r}|dy={rmeta.dy!r}|"
-        "vals=(px*37+row*17+3)%251|nodata=(px*7+row*5)%29==0:255|ov=64"
-    )
-    key = hashlib.sha256(params.encode()).hexdigest()[:16]
-    path = f"/tmp/spark_graft_geotiff_{getpass.getuser()}/cogint_{key}.tif"
-    if not os.path.exists(path):
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        px = np.arange(rmeta.width)[None, :]
-        row = np.arange(rmeta.height)[:, None]  # row 0 = north edge
-        vals = ((px * 37 + row * 17 + 3) % 251).astype(np.uint8)
-        vals = np.where((px * 7 + row * 5) % 29 == 0, np.uint8(255), vals)
-        write_cog(
-            path + ".tmp", vals, lon0=rmeta.lon0, lat1=rmeta.lat1,
-            dx=rmeta.dx, dy=rmeta.dy, nodata=255, dtype="uint8",
-            min_overview_size=64,
-        )
-        os.replace(path + ".tmp", path)
-    pixels = tiff_pixel_table(spark, path, level=1)
-    valid = pixels.where(F.col("value").isNotNull())
-    matches = pip_join_rtree(valid, ADMIN_POLYS, lon="lon", lat="lat", zoom=PIP_ZOOM)
+    pixels = _cog_level1(spark, "cogint", *_COG_INT_PIXELS, integer=True)
     v = F.col("value").cast("bigint")
-    return matches.groupBy("zone_id").agg(
-        F.count(F.lit(1)).alias("px_count"),
+    return _raster_zonal(
+        pixels,
         F.sum(v).alias("v_sum"),
         F.min(v).alias("v_min"),
         F.max(v).alias("v_max"),
@@ -2976,13 +2854,12 @@ def q_image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from giga_spatial_spark.functions import multimodal as MM
 
-    # spread the ids-only scan so the decode kernel gets every core (the
+    # fan the ids-only scan out so the decode kernel gets every core (the
     # single-row-group input otherwise serializes 50k decodes in one task);
-    # min_bytes=0: the decode cost is per ROW, not per byte, so even a
+    # no byte floor: the decode cost is per ROW, not per byte, so even a
     # tiny id list is worth fanning out (5k decodes = 2.5 s serial)
-    docs = _spread(
-        read_parquet(spark, f"{sf_dir}/documents.parquet").select("doc_id"),
-        min_bytes=0,
+    docs = _fan_out(
+        read_parquet(spark, f"{sf_dir}/documents.parquet").select("doc_id")
     )
 
     def kernel(batches):
@@ -3084,50 +2961,36 @@ def q_pip_wkt(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pip_join_native(pts, polys, zoom=PIP_ZOOM).select("doc_id", "zone_id")
 
 
-def _geo_fixture(kind: str) -> str:
-    """Build (once, per-user, content-keyed — see q_geotiff_zonal) an admin-
-    polygon layer in the requested geo format and return its path. The
-    vertex doubles round-trip bit-exactly in every format (.shp/.gpkg store
-    IEEE doubles; .kml coordinates are written with repr(), which Python
-    parses back exactly), so PIP membership is identical to ADMIN_POLYS."""
-    import getpass
-    import hashlib
-    import os
+def _geo_fixture(spark: SparkSession, kind: str) -> str:
+    """Build (once — see _cached_fixture) an admin-polygon layer in the
+    requested geo format and return its path. The vertex doubles
+    round-trip bit-exactly in every format (.shp/.gpkg/.fgb store IEEE
+    doubles; .kml coordinates are written with repr(), which Python parses
+    back exactly), so PIP membership is identical to ADMIN_POLYS."""
+    zones = sorted(ADMIN_POLYS.items())
 
-    params = "admin_v1|" + "|".join(
-        f"{zid}:{poly.tobytes().hex()}" for zid, poly in sorted(ADMIN_POLYS.items())
-    )
-    key = hashlib.sha256(params.encode()).hexdigest()[:16]
-    d = f"/tmp/spark_graft_geofix_{getpass.getuser()}/{key}"
-    os.makedirs(d, exist_ok=True)
-    path = f"{d}/admin.{kind}"
-    if os.path.exists(path):
-        return path
-    tmp = path + ".tmp"
-    if kind == "shp":
+    def to_shp(path: str) -> None:
         from giga_spatial_spark.sources.shapefile import write_shapefile
 
-        feats = [
-            ("Polygon", p, {"zone_id": zid}) for zid, p in sorted(ADMIN_POLYS.items())
-        ]
-        write_shapefile(feats, f"{d}/.build_admin.shp")
-        # sidecars first, the existence-checked .shp last
-        for ext in (".shx", ".dbf", ".shp"):
-            os.replace(f"{d}/.build_admin{ext}", f"{d}/admin{ext}")
-        return path
-    if kind == "fgb":
+        write_shapefile([("Polygon", p, {"zone_id": zid}) for zid, p in zones], path)
+
+    def to_gpkg(path: str) -> None:
+        # write_gpkg needs a frame: derive it from the .shp layer
+        from giga_spatial_spark.sources.gpkg import write_gpkg
+        from giga_spatial_spark.sources.shapefile import read_shapefile
+
+        shp = read_shapefile(spark, _geo_fixture(spark, "shp"))
+        write_gpkg(shp, path, table="admin")
+
+    def to_fgb(path: str) -> None:
         from giga_spatial_spark.sources.fgb import write_fgb
 
-        feats = [
-            ("Polygon", [p.tolist()], {"zone_id": str(zid)})
-            for zid, p in sorted(ADMIN_POLYS.items())
-        ]
-        write_fgb(feats, tmp, index_node_size=4)
-        os.replace(tmp, path)
-        return path
-    if kind == "kml":
+        feats = [("Polygon", [p.tolist()], {"zone_id": str(zid)}) for zid, p in zones]
+        write_fgb(feats, path, index_node_size=4)
+
+    def to_kml(path: str) -> None:
         pms = []
-        for zid, poly in sorted(ADMIN_POLYS.items()):
+        for zid, poly in zones:
             coords = " ".join(f"{x!r},{y!r}" for x, y in poly)
             first = f"{poly[0][0]!r},{poly[0][1]!r}"
             pms.append(
@@ -3143,47 +3006,26 @@ def _geo_fixture(kind: str) -> str:
             + "".join(pms)
             + "</Document></kml>"
         )
-        with open(tmp, "w", encoding="utf-8") as f:
+        with open(path, "w", encoding="utf-8") as f:
             f.write(doc)
-        os.replace(tmp, path)
-        return path
-    raise ValueError(kind)
 
-
-def _geo_fixture_gpkg(spark: SparkSession) -> str:
-    """GPKG fixture derives from the .shp one (write_gpkg needs a frame)."""
-    import os
-
-    shp = _geo_fixture("shp")
-    path = shp[:-4] + ".gpkg"
-    if not os.path.exists(path):
-        from giga_spatial_spark.sources.gpkg import write_gpkg
-        from giga_spatial_spark.sources.shapefile import read_shapefile
-
-        write_gpkg(read_shapefile(spark, shp), path + ".tmp", table="admin")
-        os.replace(path + ".tmp", path)
-    return path
+    write = {"shp": to_shp, "gpkg": to_gpkg, "fgb": to_fgb, "kml": to_kml}[kind]
+    params = "admin_v1|" + "|".join(f"{zid}:{poly.tobytes().hex()}" for zid, poly in zones)
+    return _cached_fixture(f"admin.{kind}", params, write)
 
 
 def _pip_from_feature_table(
     spark: SparkSession, sf_dir: str, feature_df: DataFrame
 ) -> DataFrame:
     """Normalized feature table → polys dict → native PIP join (the shared
-    tail of every file-sourced PIP query). Rings are normalized to CCW —
-    shapefiles wind outer rings CW per spec, and the convex edge-sign refine
-    expects CCW; reversal permutes the identical doubles, so membership
-    stays bit-exact vs ADMIN_POLYS."""
+    tail of every file-sourced PIP query). Rings pass through as read:
+    shapefiles wind outer rings CW per spec, and pip_join_native normalizes
+    every ring to CCW itself (reversal permutes the identical doubles, so
+    membership stays bit-exact vs ADMIN_POLYS)."""
     import numpy as np
 
-    def ccw(ring: "np.ndarray") -> "np.ndarray":
-        x, y = ring[:, 0], ring[:, 1]
-        area2 = np.sum(x * np.roll(y, -1) - np.roll(x, -1) * y)
-        return ring[::-1] if area2 < 0 else ring
-
     polys = {
-        int(r["properties"]["zone_id"]): ccw(
-            np.asarray(r["rings"][0], dtype=np.float64)
-        )
+        int(r["properties"]["zone_id"]): np.asarray(r["rings"][0], dtype=np.float64)
         for r in feature_df.select("rings", "properties").collect()
     }
     pts = _docs_pts(spark, sf_dir).select("doc_id", "lon", "lat")
@@ -3199,7 +3041,7 @@ def q_pip_shp(spark: SparkSession, sf_dir: str) -> DataFrame:
     from giga_spatial_spark.sources.shapefile import read_shapefile
 
     return _pip_from_feature_table(
-        spark, sf_dir, read_shapefile(spark, _geo_fixture("shp"))
+        spark, sf_dir, read_shapefile(spark, _geo_fixture(spark, "shp"))
     )
 
 
@@ -3211,7 +3053,7 @@ def q_pip_gpkg(spark: SparkSession, sf_dir: str) -> DataFrame:
     from giga_spatial_spark.sources.gpkg import read_gpkg
 
     return _pip_from_feature_table(
-        spark, sf_dir, read_gpkg(spark, _geo_fixture_gpkg(spark))
+        spark, sf_dir, read_gpkg(spark, _geo_fixture(spark, "gpkg"))
     )
 
 
@@ -3225,7 +3067,7 @@ def q_pip_fgb(spark: SparkSession, sf_dir: str) -> DataFrame:
     from giga_spatial_spark.sources.fgb import read_fgb
 
     return _pip_from_feature_table(
-        spark, sf_dir, read_fgb(spark, _geo_fixture("fgb"))
+        spark, sf_dir, read_fgb(spark, _geo_fixture(spark, "fgb"))
     )
 
 
@@ -3237,7 +3079,7 @@ def q_pip_kml(spark: SparkSession, sf_dir: str) -> DataFrame:
     from giga_spatial_spark.sources.kml import read_kml
 
     return _pip_from_feature_table(
-        spark, sf_dir, read_kml(spark, _geo_fixture("kml"))
+        spark, sf_dir, read_kml(spark, _geo_fixture(spark, "kml"))
     )
 
 
@@ -4109,20 +3951,10 @@ def oracle_sql() -> dict[str, str]:
 
     rmeta = RasterMeta()
     raster = synthetic_raster_sql(rmeta)
-    zone_pip_clauses = []
-    for zid, poly in sorted(ADMIN_POLYS.items()):
-        pred = synth.convex_contains_sql(poly, "r.lon", "r.lat")
-        zone_pip_clauses.append(
-            f"SELECT {zid} AS zone_id, r.value FROM valid r WHERE {pred}"
-        )
-    zonal_raster = (
-        f"WITH raster AS ({raster}), valid AS (SELECT * FROM raster WHERE value IS NOT NULL), "
-        f"m AS ({' UNION ALL '.join(zone_pip_clauses)}) "
-        "SELECT zone_id, count(*) AS px_count, "
-        "sum(cast(round(value * 10, 0) as bigint)) / 10.0 AS v_sum, "
-        "round(min(value), 1) AS v_min, round(max(value), 1) AS v_max, "
-        "round(quantile_cont(value, 0.5), 2) AS v_median "
-        "FROM m GROUP BY zone_id"
+    zonal_raster = _zonal_sql(
+        f"raster AS ({raster}), valid AS (SELECT * FROM raster WHERE value IS NOT NULL)",
+        "valid",
+        _DECI_STATS_SQL + ", round(quantile_cont(value, 0.5), 2) AS v_median",
     )
 
     from giga_spatial_spark.operators.raster import synthetic_raster_multiband_sql
@@ -4212,251 +4044,6 @@ def oracle_sql() -> dict[str, str]:
         f"m AS (SELECT h3_cell FROM ctr WHERE "
         f"{synth.raycast_contains_sql(ADMIN_POLYS[1], 'clng', 'clat')}) "
         "SELECT agg.h3_cell, agg.doc_count FROM agg JOIN m USING (h3_cell)"
-    )
-
-    from giga_spatial_spark.functions import mollweide as _M
-
-    mx0, my1 = _mollweide_anchor()
-    mx_sql = f"({mx0!r} + ((i % {MOLL_W}) + 0.5) * {MOLL_DX!r})"
-    my_sql = f"({my1!r} - ((i // {MOLL_W}) + 0.5) * {MOLL_DX!r})"
-    mlon_sql, mlat_sql = _M.inverse_sql(mx_sql, my_sql)
-    moll_val = (
-        f"CASE WHEN ((i % {MOLL_W}) * 7 + (i // {MOLL_W}) * 13) % 23 = 0 "
-        f"THEN NULL ELSE (((i % {MOLL_W}) * 31 + (i // {MOLL_W}) * 17 + 1) % 997) / 10.0 END"
-    )
-    moll_pip = " UNION ALL ".join(
-        f"SELECT {zid} AS zone_id, r.value FROM valid r WHERE "
-        + synth.convex_contains_sql(poly, "r.lon", "r.lat")
-        for zid, poly in sorted(ADMIN_POLYS.items())
-    )
-    moll_zonal = (
-        f"WITH raster AS (SELECT {moll_val} AS value, {mlon_sql} AS lon, "
-        f"{mlat_sql} AS lat FROM range({MOLL_W * MOLL_H}) t(i)), "
-        "valid AS MATERIALIZED (SELECT * FROM raster WHERE value IS NOT NULL), "
-        f"m AS ({moll_pip}) "
-        "SELECT zone_id, count(*) AS px_count, "
-        "sum(cast(round(value * 10, 0) as bigint)) / 10.0 AS v_sum, "
-        "round(min(value), 1) AS v_min, round(max(value), 1) AS v_max "
-        "FROM m GROUP BY zone_id"
-    )
-
-    from giga_spatial_spark.functions import laea as _L
-
-    lx0, ly1 = _laea_anchor()
-    lx_sql = f"({lx0!r} + ((i % {LAEA_W}) + 0.5) * {LAEA_DX!r})"
-    ly_sql = f"({ly1!r} - ((i // {LAEA_W}) + 0.5) * {LAEA_DX!r})"
-    llon_sql, llat_sql = _L.inverse_sql(lx_sql, ly_sql)
-    laea_val = (
-        f"CASE WHEN ((i % {LAEA_W}) * 5 + (i // {LAEA_W}) * 11) % 19 = 0 "
-        f"THEN NULL ELSE (((i % {LAEA_W}) * 29 + (i // {LAEA_W}) * 19 + 3) % 991) / 10.0 END"
-    )
-    laea_pip = " UNION ALL ".join(
-        f"SELECT {zid} AS zone_id, r.value FROM lvalid r WHERE "
-        + synth.convex_contains_sql(poly, "r.lon", "r.lat")
-        for zid, poly in sorted(ADMIN_POLYS.items())
-    )
-    laea_zonal = (
-        f"WITH lraster AS (SELECT {laea_val} AS value, {llon_sql} AS lon, "
-        f"{llat_sql} AS lat FROM range({LAEA_W * LAEA_H}) t(i)), "
-        "lvalid AS MATERIALIZED (SELECT * FROM lraster WHERE value IS NOT NULL), "
-        f"m AS ({laea_pip}) "
-        "SELECT zone_id, count(*) AS px_count, "
-        "sum(cast(round(value * 10, 0) as bigint)) / 10.0 AS v_sum, "
-        "round(min(value), 1) AS v_min, round(max(value), 1) AS v_max "
-        "FROM m GROUP BY zone_id"
-    )
-
-    from giga_spatial_spark.functions import albers as _AL
-
-    ax0, ay1 = _albers_anchor()
-    ax_sql = f"({ax0!r} + ((i % {ALB_W}) + 0.5) * {ALB_DX!r})"
-    ay_sql = f"({ay1!r} - ((i // {ALB_W}) + 0.5) * {ALB_DX!r})"
-    alon_sql, alat_sql = _AL.inverse_sql(ax_sql, ay_sql)
-    alb_val = (
-        f"CASE WHEN ((i % {ALB_W}) * 7 + (i // {ALB_W}) * 13) % 23 = 0 "
-        f"THEN NULL ELSE (((i % {ALB_W}) * 23 + (i // {ALB_W}) * 31 + 7) % 977) / 10.0 END"
-    )
-    alb_pip = " UNION ALL ".join(
-        f"SELECT {zid} AS zone_id, r.value FROM avalid r WHERE "
-        + synth.convex_contains_sql(poly, "r.lon", "r.lat")
-        for zid, poly in sorted(ADMIN_POLYS.items())
-    )
-    albers_zonal = (
-        f"WITH araster AS (SELECT {alb_val} AS value, {alon_sql} AS lon, "
-        f"{alat_sql} AS lat FROM range({ALB_W * ALB_H}) t(i)), "
-        "avalid AS MATERIALIZED (SELECT * FROM araster WHERE value IS NOT NULL), "
-        f"m AS ({alb_pip}) "
-        "SELECT zone_id, count(*) AS px_count, "
-        "sum(cast(round(value * 10, 0) as bigint)) / 10.0 AS v_sum, "
-        "round(min(value), 1) AS v_min, round(max(value), 1) AS v_max "
-        "FROM m GROUP BY zone_id"
-    )
-
-    from giga_spatial_spark.functions import lcc as _LC
-
-    cx0, cy1 = _lcc_anchor()
-    cx_sql = f"({cx0!r} + ((i % {LCC_W}) + 0.5) * {LCC_DX!r})"
-    cy_sql = f"({cy1!r} - ((i // {LCC_W}) + 0.5) * {LCC_DX!r})"
-    clon_sql, clat_sql = _LC.inverse_sql(cx_sql, cy_sql)
-    lcc_val = (
-        f"CASE WHEN ((i % {LCC_W}) * 3 + (i // {LCC_W}) * 17) % 29 = 0 "
-        f"THEN NULL ELSE (((i % {LCC_W}) * 37 + (i // {LCC_W}) * 17 + 11) % 953) / 10.0 END"
-    )
-    lcc_pip = " UNION ALL ".join(
-        f"SELECT {zid} AS zone_id, r.value FROM cvalid r WHERE "
-        + synth.convex_contains_sql(poly, "r.lon", "r.lat")
-        for zid, poly in sorted(ADMIN_POLYS.items())
-    )
-    lcc_zonal = (
-        f"WITH craster AS (SELECT {lcc_val} AS value, {clon_sql} AS lon, "
-        f"{clat_sql} AS lat FROM range({LCC_W * LCC_H}) t(i)), "
-        "cvalid AS MATERIALIZED (SELECT * FROM craster WHERE value IS NOT NULL), "
-        f"m AS ({lcc_pip}) "
-        "SELECT zone_id, count(*) AS px_count, "
-        "sum(cast(round(value * 10, 0) as bigint)) / 10.0 AS v_sum, "
-        "round(min(value), 1) AS v_min, round(max(value), 1) AS v_max "
-        "FROM m GROUP BY zone_id"
-    )
-
-    from giga_spatial_spark.functions.polar import EPSG_3413 as _P13
-
-    px0, py1 = _polar_anchor()
-    px_sql = f"({px0!r} + ((i % {POL_W}) + 0.5) * {POL_DX!r})"
-    py_sql = f"({py1!r} - ((i // {POL_W}) + 0.5) * {POL_DX!r})"
-    plon_sql, plat_sql = _P13.inverse_sql(px_sql, py_sql)
-    pol_val = (
-        f"CASE WHEN ((i % {POL_W}) * 17 + (i // {POL_W}) * 5) % 41 = 0 "
-        f"THEN NULL ELSE (((i % {POL_W}) * 47 + (i // {POL_W}) * 19 + 17) % 929) / 10.0 END"
-    )
-    pol_pip = " UNION ALL ".join(
-        f"SELECT {zid} AS zone_id, r.value FROM pvalid r WHERE "
-        + synth.convex_contains_sql(poly, "r.lon", "r.lat")
-        for zid, poly in sorted(ADMIN_POLYS.items())
-    )
-    polar_zonal = (
-        f"WITH praster AS (SELECT {pol_val} AS value, {plon_sql} AS lon, "
-        f"{plat_sql} AS lat FROM range({POL_W * POL_H}) t(i)), "
-        "pvalid AS MATERIALIZED (SELECT * FROM praster WHERE value IS NOT NULL), "
-        f"m AS ({pol_pip}) "
-        "SELECT zone_id, count(*) AS px_count, "
-        "sum(cast(round(value * 10, 0) as bigint)) / 10.0 AS v_sum, "
-        "round(min(value), 1) AS v_min, round(max(value), 1) AS v_max "
-        "FROM m GROUP BY zone_id"
-    )
-
-    from giga_spatial_spark.functions.crs import projection_from_params as _pfp
-
-    _cpj = _pfp(CUSTOM_CRS_PARAMS)
-    ux0, uy1 = _custom_crs_anchor()
-    ux_sql = f"({ux0!r} + ((i % {CUS_W}) + 0.5) * {CUS_DX!r})"
-    uy_sql = f"({uy1!r} - ((i // {CUS_W}) + 0.5) * {CUS_DX!r})"
-    ulon_sql, ulat_sql = _cpj.inverse_sql(ux_sql, uy_sql)
-    cus_val = (
-        f"CASE WHEN ((i % {CUS_W}) * 13 + (i // {CUS_W}) * 7) % 37 = 0 "
-        f"THEN NULL ELSE (((i % {CUS_W}) * 43 + (i // {CUS_W}) * 29 + 13) % 941) / 10.0 END"
-    )
-    cus_pip = " UNION ALL ".join(
-        f"SELECT {zid} AS zone_id, r.value FROM uvalid r WHERE "
-        + synth.convex_contains_sql(poly, "r.lon", "r.lat")
-        for zid, poly in sorted(ADMIN_POLYS.items())
-    )
-    custom_crs_zonal = (
-        f"WITH uraster AS (SELECT {cus_val} AS value, {ulon_sql} AS lon, "
-        f"{ulat_sql} AS lat FROM range({CUS_W * CUS_H}) t(i)), "
-        "uvalid AS MATERIALIZED (SELECT * FROM uraster WHERE value IS NOT NULL), "
-        f"m AS ({cus_pip}) "
-        "SELECT zone_id, count(*) AS px_count, "
-        "sum(cast(round(value * 10, 0) as bigint)) / 10.0 AS v_sum, "
-        "round(min(value), 1) AS v_min, round(max(value), 1) AS v_max "
-        "FROM m GROUP BY zone_id"
-    )
-
-    # COG overview-1 oracle: replay the full-res formula grid and the
-    # EXPLICIT ((a+b)+(c+d))/n 2x2 block average (downsample2_mean's
-    # documented operation order — bit-identical doubles in both engines)
-    _rm = __import__(
-        "giga_spatial_spark.operators.raster", fromlist=["RasterMeta"]
-    ).RasterMeta()
-    _ow, _oh = _rm.width // 2, _rm.height // 2
-
-    def _cogf(px: str, row: str) -> str:
-        return (
-            f"(CASE WHEN (({px}) * 11 + ({row}) * 3) % 31 = 0 THEN NULL "
-            f"ELSE ((({px}) * 41 + ({row}) * 13 + 5) % 983) / 10.0 END)"
-        )
-
-    _oa = _cogf("2*c", "2*r")
-    _ob = _cogf("2*c+1", "2*r")
-    _oc = _cogf("2*c", "2*r+1")
-    _od = _cogf("2*c+1", "2*r+1")
-    _on = (
-        f"(({_oa} IS NOT NULL)::BIGINT + ({_ob} IS NOT NULL)::BIGINT + "
-        f"({_oc} IS NOT NULL)::BIGINT + ({_od} IS NOT NULL)::BIGINT)"
-    )
-    _os = (
-        f"((coalesce({_oa}, 0.0) + coalesce({_ob}, 0.0)) + "
-        f"(coalesce({_oc}, 0.0) + coalesce({_od}, 0.0)))"
-    )
-    cog_pip = " UNION ALL ".join(
-        f"SELECT {zid} AS zone_id, r.value FROM ovalid r WHERE "
-        + synth.convex_contains_sql(poly, "r.lon", "r.lat")
-        for zid, poly in sorted(ADMIN_POLYS.items())
-    )
-    cog_overview = (
-        f"WITH og AS (SELECT i % {_ow} AS c, i // {_ow} AS r "
-        f"FROM range({_ow * _oh}) t(i)), "
-        f"ov AS (SELECT CASE WHEN {_on} > 0 THEN {_os} / {_on} "
-        "ELSE NULL END AS value, "
-        f"({_rm.lon0!r} + (c + 0.5) * {2.0 * _rm.dx!r}) AS lon, "
-        f"({_rm.lat1!r} - (r + 0.5) * {2.0 * _rm.dy!r}) AS lat FROM og), "
-        "ovalid AS MATERIALIZED (SELECT * FROM ov WHERE value IS NOT NULL), "
-        f"m AS ({cog_pip}) "
-        "SELECT zone_id, count(*) AS px_count, "
-        "cast(sum(cast(round(value * 40, 0) as bigint)) as bigint) AS v_sum40, "
-        "min(cast(round(value * 40, 0) as bigint)) AS v_min40, "
-        "max(cast(round(value * 40, 0) as bigint)) AS v_max40 "
-        "FROM m GROUP BY zone_id"
-    )
-
-    # integer COG overview-1 oracle: same grid, BIGINT-only replay of the
-    # round-half-up integer average (2*sum + n) // (2*n)
-    def _cogif(px: str, row: str) -> str:
-        return (
-            f"(CASE WHEN (({px}) * 7 + ({row}) * 5) % 29 = 0 THEN NULL "
-            f"ELSE ((({px}) * 37 + ({row}) * 17 + 3) % 251) END)"
-        )
-
-    _ia = _cogif("2*c", "2*r")
-    _ib = _cogif("2*c+1", "2*r")
-    _ic = _cogif("2*c", "2*r+1")
-    _id = _cogif("2*c+1", "2*r+1")
-    _in_ = (
-        f"(({_ia} IS NOT NULL)::BIGINT + ({_ib} IS NOT NULL)::BIGINT + "
-        f"({_ic} IS NOT NULL)::BIGINT + ({_id} IS NOT NULL)::BIGINT)"
-    )
-    _is = (
-        f"((coalesce({_ia}, 0) + coalesce({_ib}, 0)) + "
-        f"(coalesce({_ic}, 0) + coalesce({_id}, 0)))"
-    )
-    cogint_pip = " UNION ALL ".join(
-        f"SELECT {zid} AS zone_id, r.value FROM ivalid r WHERE "
-        + synth.convex_contains_sql(poly, "r.lon", "r.lat")
-        for zid, poly in sorted(ADMIN_POLYS.items())
-    )
-    cog_overview_int = (
-        f"WITH og AS (SELECT i % {_ow} AS c, i // {_ow} AS r "
-        f"FROM range({_ow * _oh}) t(i)), "
-        f"iv AS (SELECT CASE WHEN {_in_} > 0 THEN "
-        f"(2 * {_is} + {_in_}) // (2 * {_in_}) ELSE NULL END AS value, "
-        f"({_rm.lon0!r} + (c + 0.5) * {2.0 * _rm.dx!r}) AS lon, "
-        f"({_rm.lat1!r} - (r + 0.5) * {2.0 * _rm.dy!r}) AS lat FROM og), "
-        "ivalid AS MATERIALIZED (SELECT * FROM iv WHERE value IS NOT NULL), "
-        f"m AS ({cogint_pip}) "
-        "SELECT zone_id, count(*) AS px_count, "
-        "cast(sum(value) as bigint) AS v_sum, "
-        "cast(min(value) as bigint) AS v_min, "
-        "cast(max(value) as bigint) AS v_max "
-        "FROM m GROUP BY zone_id"
     )
 
     clon6, clat6 = cells.tile_center_sql(6, "tile_x", "tile_y")
@@ -4572,11 +4159,14 @@ def oracle_sql() -> dict[str, str]:
         "q_grid_filter": grid_filter,
         "q_zonal_raster": zonal_raster,
         "q_geotiff_zonal": zonal_raster,
-        "q_geotiff_mollweide": moll_zonal,
-        "q_geotiff_laea": laea_zonal,
-        "q_geotiff_albers": albers_zonal,
-        "q_geotiff_lcc": lcc_zonal,
-        "q_cog_overview": cog_overview,
+        **{q: _projected_oracle(spec) for q, spec in PROJECTED_RASTERS.items()},
+        "q_cog_overview": _cog_oracle(
+            *_COG_PIXELS,
+            integer=False,
+            stats="cast(sum(cast(round(value * 40, 0) as bigint)) as bigint) AS v_sum40, "
+            "min(cast(round(value * 40, 0) as bigint)) AS v_min40, "
+            "max(cast(round(value * 40, 0) as bigint)) AS v_max40",
+        ),
         "q_image_decode": (
             "WITH dims AS (SELECT doc_id, 8 + doc_id % 9 AS w, "
             "8 + (doc_id * 3) % 11 AS h FROM documents), "
@@ -4589,9 +4179,12 @@ def oracle_sql() -> dict[str, str]:
             "cast(min(v) as bigint) AS px_min, "
             "cast(max(v) as bigint) AS px_max FROM px GROUP BY doc_id"
         ),
-        "q_cog_overview_int": cog_overview_int,
-        "q_geotiff_custom_crs": custom_crs_zonal,
-        "q_geotiff_polar": polar_zonal,
+        "q_cog_overview_int": _cog_oracle(
+            *_COG_INT_PIXELS,
+            integer=True,
+            stats="cast(sum(value) as bigint) AS v_sum, "
+            "cast(min(value) as bigint) AS v_min, cast(max(value) as bigint) AS v_max",
+        ),
         "q_h3_parent": (
             f"WITH h3f AS ({H3S.h3_cell_sql(docs, H3_FINE_RES)}) "
             f"SELECT ((h3_cell & {_H3_RES_MASK}) | {H3_PARENT_RES << 52} | {_H3_FILL}) "

@@ -187,17 +187,6 @@ def polygon_cover(poly: np.ndarray, zoom: int, exact: bool = True) -> list[tuple
     return out
 
 
-def quadkey_parent(qk: str, levels_up: int = 1) -> str:
-    """Parent quadkey (reference grid hierarchy ops, h3.py:414-466 /
-    mercator zoom-out): drop trailing digits."""
-    return qk[: max(len(qk) - levels_up, 0)]
-
-
-def quadkey_children(qk: str) -> list[str]:
-    """The 4 children one zoom finer."""
-    return [qk + d for d in "0123"]
-
-
 def compact_quadkeys(qks: set[str] | list[str]) -> list[str]:
     """Multi-resolution compaction (reference h3.compact_cells usage,
     grid/h3.py:395-412): replace any complete sibling set by its parent,
@@ -224,27 +213,6 @@ def expand_quadkey(qk: str, zoom: int) -> list[str]:
     for _ in range(zoom - len(qk)):
         out = [q + d for q in out for d in "0123"]
     return out
-
-
-def k_ring_offsets(k: int) -> list[tuple[int, int]]:
-    """Chebyshev-disk offsets (dx, dy) for |dx|<=k, |dy|<=k — the square-grid
-    analog of H3 grid_ring (reference grid/h3.py:371-393)."""
-    return [(dx, dy) for dx in range(-k, k + 1) for dy in range(-k, k + 1)]
-
-
-def ring_min_distance_m(lat: float, zoom: int, k: int) -> float:
-    """Lower bound on ground distance from a point in tile T to any tile
-    outside the k-ring of T. Used by the kNN expansion stopping rule:
-    if best_dist <= this bound, no closer neighbor can exist outside."""
-    # tile height in degrees at this latitude ~ tile width * cos adjustments;
-    # use the conservative min of lon/lat extents at the given latitude.
-    n = 2.0**zoom
-    tile_deg_lon = 360.0 / n
-    # ground meters per degree
-    m_per_deg_lat = 111_194.9  # pi*R/180 with R=6371e3
-    m_per_deg_lon = m_per_deg_lat * max(math.cos(math.radians(abs(lat) + tile_deg_lon)), 1e-6)
-    tile_m = min(tile_deg_lon * m_per_deg_lon, tile_deg_lon * m_per_deg_lat)
-    return k * tile_m
 
 
 def tile_center(x: int, y: int, zoom: int) -> tuple[float, float]:

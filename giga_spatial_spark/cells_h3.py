@@ -163,27 +163,6 @@ def _ijk_normalize(ijk: np.ndarray) -> np.ndarray:
     return ijk - ijk.min(axis=-1, keepdims=True)
 
 
-def _lround(x: np.ndarray) -> np.ndarray:
-    """C lround: round half away from zero (numpy round is banker's)."""
-    return np.where(x >= 0, np.floor(x + 0.5), np.ceil(x - 0.5)).astype(np.int64)
-
-
-def _up_ap7(ijk: np.ndarray) -> np.ndarray:
-    i = ijk[..., 0] - ijk[..., 2]
-    j = ijk[..., 1] - ijk[..., 2]
-    ni = _lround((3 * i - j) / 7.0)
-    nj = _lround((i + 2 * j) / 7.0)
-    return _ijk_normalize(np.stack([ni, nj, np.zeros_like(ni)], axis=-1))
-
-
-def _up_ap7r(ijk: np.ndarray) -> np.ndarray:
-    i = ijk[..., 0] - ijk[..., 2]
-    j = ijk[..., 1] - ijk[..., 2]
-    ni = _lround((2 * i + j) / 7.0)
-    nj = _lround((3 * j - i) / 7.0)
-    return _ijk_normalize(np.stack([ni, nj, np.zeros_like(ni)], axis=-1))
-
-
 _DOWN_AP7 = np.array([[3, 0, 1], [1, 3, 0], [0, 1, 3]], dtype=np.int64)
 _DOWN_AP7R = np.array([[3, 1, 0], [0, 3, 1], [1, 0, 3]], dtype=np.int64)
 
@@ -389,10 +368,6 @@ def _hex2d_to_geo(face, x, y, res: int):
 
 
 # ------------------------------------------------------------ digit helpers
-def _digits_rotate(digits: np.ndarray, lut: np.ndarray) -> np.ndarray:
-    return lut[digits]
-
-
 def _leading_nonzero(digits: np.ndarray) -> np.ndarray:
     """First non-zero digit per row (0 if all zero). digits: (n, res)."""
     if digits.shape[1] == 0:
@@ -595,33 +570,6 @@ def _bc_center_geo():
 
 _BC_LAT, _BC_LNG = _bc_center_geo()
 _BC_VEC = _geo_to_vec(_BC_LAT, _BC_LNG)
-
-
-def _cell_center_geo_exact(bc: int, digits: list[int]):
-    """EXACT cell center (lat, lng radians) through the inverse path: home
-    FaceIJK digit descent, class II substrate conversion for odd res, and
-    the derived integer edge isometries for overage. Table-free (uses only
-    BASE_CELL_DATA + face geometry) — the calibration ground truth."""
-    res = len(digits)
-    d = list(digits)
-    if res > 0 and PENTAGONS[bc] and _leading_nonzero(np.array([d]))[0] == IK_DIGIT:
-        d = [int(_ROT_CW[x]) for x in d]
-    ijk = _BC_HOME[bc, 1:4][None, :].copy()
-    for r in range(1, res + 1):
-        ijk = _down_ap7(ijk, rev=(r % 2 == 0))
-        ijk = _ijk_normalize(ijk + UNIT_VECS[d[r - 1]][None, :])
-    face = int(_BC_HOME[bc, 0])
-    res_cii = res
-    if res % 2 == 1:  # convert to the even (Class II) substrate
-        ijk = _down_ap7(ijk, rev=True)
-        res_cii = res + 1
-    pent4 = bool(PENTAGONS[bc]) and res > 0 and (
-        _leading_nonzero(np.array([d]))[0] == 4
-    )
-    face, row = _adjust_overage_row(face, ijk[0], res_cii, pent4)
-    x, y = _ijk_to_hex2d(row[None, :])
-    lat, lng = _hex2d_to_geo(np.array([face]), x, y, res_cii)
-    return float(lat[0]), float(lng[0])
 
 
 def _forward_raw_vec(lat: np.ndarray, lng: np.ndarray, res: int):

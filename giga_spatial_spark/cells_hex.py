@@ -124,11 +124,6 @@ def cell_area(res: int) -> float:
     return 1.5 * np.sqrt(3.0) * s * s
 
 
-def edge_length(res: int) -> float:
-    """Hex edge length == circumradius s for a regular hexagon."""
-    return hex_size(res)
-
-
 _M_PER_DEG = 111_194.9  # mean meridian meters per degree (2πR/360)
 
 
@@ -143,16 +138,6 @@ def cell_area_m2(res: int, lat) -> "np.ndarray | float":
     60° at res ≥ 4 (tests/test_cells_hex.py)."""
     return (
         cell_area(res) * _M_PER_DEG * _M_PER_DEG * np.cos(np.radians(lat))
-    )
-
-
-def cell_area_m2_col(res: int, lat_col):
-    """Column-expression twin of cell_area_m2 (for density-style zonal
-    outputs — stays in codegen)."""
-    from pyspark.sql import functions as F
-
-    return F.lit(cell_area(res) * _M_PER_DEG * _M_PER_DEG) * F.cos(
-        F.radians(lat_col)
     )
 
 

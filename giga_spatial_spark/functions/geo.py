@@ -73,17 +73,6 @@ def add_spatial_jitter(
     )
 
 
-def buffer_bbox_deg(lat: float, radius_m: float) -> tuple[float, float]:
-    """Geodesic buffer approximation for candidate generation (reference
-    buffer_geodataframe geo.py:268-324 does a UTM round-trip; for cover
-    computation a lat-aware degree box is sufficient and driver-cheap):
-    returns (dlon, dlat) half-widths in degrees."""
-    m_per_deg = 111_194.9
-    dlat = radius_m / m_per_deg
-    dlon = radius_m / (m_per_deg * max(math.cos(math.radians(abs(lat) + dlat)), 1e-6))
-    return dlon, dlat
-
-
 def polygon_area_m2(poly: np.ndarray) -> float:
     """Geodesic-approximate polygon area in m² (reference add_area_in_meters,
     geo.py:438-477, does a UTM round-trip): shoelace in a local

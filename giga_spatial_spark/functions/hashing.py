@@ -88,17 +88,6 @@ def _perms(num_perm: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
     return p
 
 
-def minhash_signature(shingles: np.ndarray, num_perm: int = 64, seed: int = 1) -> np.ndarray:
-    """num_perm-wide MinHash with multiplicative hashing
-    h_i(x) = (a_i·x + b_i) mod 2^64 (a_i odd), fully vectorized."""
-    a, b = _perms(num_perm, seed)
-    if len(shingles) == 0:
-        return np.full(num_perm, np.iinfo(np.uint64).max, dtype=np.uint64)
-    with np.errstate(over="ignore"):
-        vals = shingles[None, :] * a[:, None] + b[:, None]
-    return vals.min(axis=1)
-
-
 def minhash_signatures_batch(
     shingle_sets: list[np.ndarray], num_perm: int = 64, seed: int = 1
 ) -> np.ndarray:
@@ -146,12 +135,6 @@ def lsh_band_keys_batch(sigs: np.ndarray, bands: int = 16) -> np.ndarray:
             (1 << 63) - 1
         )
     return keys.astype(np.int64)
-
-
-def lsh_band_keys(sig: np.ndarray, bands: int = 16) -> list[int]:
-    """Band the signature: hash each band of rows to a bucket key. Docs
-    sharing any band key are near-dup candidates."""
-    return lsh_band_keys_batch(sig[None, :], bands)[0].tolist()
 
 
 def simhash(text: str, bits: int = 64) -> int:

@@ -21,7 +21,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .geometry import EARTH_RADIUS_M, polygon_centroid
+from .geometry import EARTH_RADIUS_M
 from .sources.readers import read_parquet
 
 LON_MULT, LON_MOD = 7919, 36000
@@ -103,22 +103,6 @@ def make_admin_polygons(n_zones: int = 12, seed: int = 42) -> dict[int, np.ndarr
     return polys
 
 
-def admin_zones_df(spark: SparkSession, polys: dict[int, np.ndarray] | None = None) -> DataFrame:
-    """Zones as a DataFrame of exploded edges: (zone_id, x1, y1, x2, y2).
-
-    Edge form feeds the fully-native PIP refine (min cross-product >= 0).
-    """
-    polys = polys or make_admin_polygons()
-    rows = []
-    for zid, poly in polys.items():
-        n = len(poly)
-        for i in range(n):
-            x1, y1 = poly[i]
-            x2, y2 = poly[(i + 1) % n]
-            rows.append((zid, i, float(x1), float(y1), float(x2), float(y2)))
-    return spark.createDataFrame(rows, "zone_id int, edge int, x1 double, y1 double, x2 double, y2 double")
-
-
 def convex_contains_sql(poly: np.ndarray, x_sql: str, y_sql: str) -> str:
     """ANSI SQL predicate: point inside convex polygon (boundary incl.;
     either winding — normalized to CCW like every convex kernel).
@@ -139,12 +123,6 @@ def convex_contains_sql(poly: np.ndarray, x_sql: str, y_sql: str) -> str:
             f" - ({y2!r} - {y1!r}) * (({x_sql}) - {x1!r})) >= 0.0"
         )
     return "(" + " AND ".join(terms) + ")"
-
-
-def zones_with_centroids(polys: dict[int, np.ndarray]) -> list[tuple[int, float, float]]:
-    return [
-        (zid, *polygon_centroid(poly)) for zid, poly in sorted(polys.items())
-    ]
 
 
 def make_star_polygon(cx: float = 20.0, cy: float = 10.0, r_outer: float = 30.0,

@@ -1,6 +1,7 @@
 """Views API, raster operators, multimodal plumbing, readers."""
 
 import os
+import re
 import tempfile
 
 import numpy as np
@@ -21,7 +22,7 @@ from giga_spatial_spark.operators.raster import (
     sample_by_coordinates,
     synthetic_raster,
 )
-from giga_spatial_spark.sources.readers import read_dataset, write_dataset
+from giga_spatial_spark.sources.readers import read_dataset, read_datasets, write_dataset
 from giga_spatial_spark.views import PoiViewGenerator, ZonalViewGenerator
 
 from .conftest import SF_DIR
@@ -154,11 +155,18 @@ def test_multimodal_plumbing(spark):
 def test_readers_roundtrip(spark):
     tmp = tempfile.mkdtemp(prefix="readers_")
     df = spark.range(10).withColumn("s", F.col("id").cast("string"))
+    paths = []
     for fmt, ext in [("parquet", "parquet"), ("csv", "csv"), ("json", "ndjson")]:
         path = os.path.join(tmp, f"t_{fmt}.{ext}")
         write_dataset(df, path, fmt=fmt)
         back = read_dataset(spark, path)
         assert back.count() == 10
+        paths.append(path)
+    # the three files read as one union
+    assert read_datasets(spark, paths).count() == 30
+    missing = os.path.join(tmp, "missing.parquet")
+    with pytest.raises(ValueError, match=re.escape(missing)):
+        read_datasets(spark, paths + [missing])
 
 
 # ----------------------------------------- S2 / Mercator view generators (r4)

@@ -26,12 +26,15 @@ TABLES = [
 # Small dims are copied as-is; fact tables get replicated with shifted keys.
 COPY_ONLY = {"region", "nation"}
 
+# replica k adds k * SHIFT to every id column, so ids must stay below it
+SHIFT = 10_000_000
+
 ID_COLS = {
     "customer": ["c_custkey"],
     "supplier": ["s_suppkey"],
     "part": ["p_partkey"],
     "orders": ["o_orderkey", "o_custkey"],
-    "lineitem": ["l_orderkey"],
+    "lineitem": ["l_orderkey", "l_partkey", "l_suppkey"],
     "events": ["event_id", "user_id"],
     "documents": ["doc_id"],
     "embeddings": ["vec_id"],
@@ -50,12 +53,16 @@ def replicate(src: str, dst: str, factor: int) -> None:
         n = tab.num_rows
         reps = []
         id_cols = [c for c in ID_COLS.get(t, []) if c in tab.column_names]
+        for c in id_cols:
+            top = pc.max(tab.column(c)).as_py()
+            if top is not None and top >= SHIFT:
+                raise ValueError(f"{t}.{c} max {top} >= {SHIFT}: replica ids would collide")
         for k in range(factor):
             rep = tab
             if k > 0:
                 for c in id_cols:
                     col = rep.column(c)
-                    shifted = pc.add(col, pa.scalar(k * 10_000_000, type=col.type))
+                    shifted = pc.add(col, pa.scalar(k * SHIFT, type=col.type))
                     rep = rep.set_column(rep.column_names.index(c), c, shifted)
                 if t == "documents":
                     # keep ~half the replicas byte-identical (organic dup
@@ -78,5 +85,7 @@ def replicate(src: str, dst: str, factor: int) -> None:
 
 
 if __name__ == "__main__":
+    if len(sys.argv) != 4:
+        sys.exit("usage: python tools/make_sf_replica.py SRC_SF_DIR DST_DIR FACTOR")
     src, dst, factor = sys.argv[1], sys.argv[2], int(sys.argv[3])
     replicate(src, dst, factor)
