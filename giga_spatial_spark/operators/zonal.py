@@ -80,10 +80,20 @@ def aggregate_matches_to_zones(
     exprs, meta = agg_exprs(aggregation, value_columns, suffix)
     agged = matches.groupBy(zone_key).agg(*exprs)
     # agged is |zones|-sized — broadcast it so the re-attach never SMJs
-    out = zones_dim.join(F.broadcast(agged), zone_key, "left")
-    for name, fn in meta:
-        if fn == "count":
-            out = out.withColumn(name, F.coalesce(F.col(name), F.lit(0)).cast("long"))
+    return _attach_to_zones(
+        zones_dim, F.broadcast(agged), zone_key,
+        [name for name, fn in meta if fn == "count"],
+    )
+
+
+def _attach_to_zones(zones_dim: DataFrame, agged: DataFrame, zone_key: str,
+                     count_cols) -> DataFrame:
+    """Left-attach a per-zone aggregate to the zone dim with the reference's
+    fill rules: zones without a match read 0 in `count_cols` and NULL in
+    every other stat (geo.py:726-738)."""
+    out = zones_dim.join(agged, zone_key, "left")
+    for name in count_cols:
+        out = out.withColumn(name, F.coalesce(F.col(name), F.lit(0)).cast("long"))
     return out
 
 

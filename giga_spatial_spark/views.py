@@ -1,11 +1,23 @@
 """View-generator API layer — the reference's user-facing surface.
 
-Mirrors PoiViewGenerator (gigaspatial/generators/poi.py) and
-ZonalViewGenerator (generators/zonal/base.py): a view accumulates
-enrichment columns keyed by poi_id / zone_id via left joins
-(_update_view poi.py:244-285, add_variable_to_view zonal/base.py:148-201),
-with map_* methods delegating to engine operators and save_view writing
-parquet. A user of the reference can port call-sites 1:1.
+A view accumulates enrichment columns keyed by poi_id / zone_id / cell
+via left joins (_update_view poi.py:244-285, add_variable_to_view
+zonal/base.py:148-201), with map_* methods delegating to engine operators
+and save_view writing parquet or a geo format. A user of the reference
+can port call-sites 1:1. The classes follow the reference's hierarchy
+(gigaspatial/generators/):
+
+  PoiViewGenerator        poi.py
+  ZonalViewGenerator      zonal/base.py + zonal/geometry.py (polygon zones)
+  _CellViewGenerator      zonal/base.py + zonal/geometry.py for a grid:
+                          map_points / map_rasters / with_density /
+                          to_feature_table, keyed by the subclass's cell column
+  HexViewGenerator        zonal/h3.py (alias H3ViewGenerator)
+  MercatorViewGenerator   zonal/mercator.py
+  S2ViewGenerator         zonal/s2.py
+
+Each grid subclass supplies only what differs (see _CellViewGenerator);
+all generators share to_dataframe and save_view (_View).
 """
 
 from __future__ import annotations
@@ -24,32 +36,38 @@ def _props_expr(df: DataFrame, exclude: tuple[str, ...]):
     ).alias("properties")
 
 
-def _restrict_to_dim(tagged: DataFrame, zones_dim: DataFrame,
-                     key: str) -> DataFrame:
-    """Left-semi the cell-tagged point side against the view's own cell dim
-    BEFORE aggregating: the broadcast of the post-groupBy aggregate is then
-    bounded by the view's zone count (dim-sized by construction), not by
-    every distinct cell a global corpus touches — at high zoom/level the
-    latter is unbounded and would blow the broadcast."""
-    return tagged.join(
-        F.broadcast(zones_dim.select(key)), key, "left_semi"
+def _polygon_features(view: DataFrame, key: str, key_type: str, rings,
+                      exclude: tuple[str, ...]) -> DataFrame:
+    """View → Polygon features: a dim-sized (key, rings) table broadcast-
+    joined onto the view, the view's other columns packed as properties."""
+    table = view.sparkSession.createDataFrame(
+        rings, f"{key} {key_type}, rings array<array<array<double>>>"
+    )
+    return view.join(F.broadcast(table), key).select(
+        F.lit("Polygon").alias("geom_type"), "rings", _props_expr(view, exclude)
     )
 
 
-def _save_view(view: DataFrame, path: str, fmt: str, to_features) -> str:
-    """Shared save_view tail: geo formats route the generator's feature
-    table through write_dataset's GEO_WRITERS branch (reference poi.py
-    to_geodataframe → writers.py GEO_WRITERS); tabular formats write the
-    raw view directly."""
-    if fmt in GEO_FORMATS:
-        from .sources.readers import write_dataset
+class _View:
+    """to_dataframe / save_view for every generator; each one keeps its
+    view in `_view` and supplies its own to_feature_table."""
 
-        return write_dataset(to_features(), path, fmt=fmt)
-    view.write.mode("overwrite").format(fmt).save(path)
-    return path
+    def to_dataframe(self) -> DataFrame:
+        return self._view
+
+    def save_view(self, path: str, fmt: str = "parquet") -> str:
+        """Geo formats route the feature table through write_dataset's
+        GEO_WRITERS branch (reference poi.py to_geodataframe → writers.py
+        GEO_WRITERS); tabular formats write the raw view directly."""
+        if fmt in GEO_FORMATS:
+            from .sources.readers import write_dataset
+
+            return write_dataset(self.to_feature_table(), path, fmt=fmt)
+        self._view.write.mode("overwrite").format(fmt).save(path)
+        return path
 
 
-class PoiViewGenerator:
+class PoiViewGenerator(_View):
     """points: DataFrame with (poi_id, lon, lat). Reference poi.py:63-232
     normalizes inputs and checks duplicate ids; we do the same."""
 
@@ -120,9 +138,6 @@ class PoiViewGenerator:
             gen = op(gen)
         return gen
 
-    def to_dataframe(self) -> DataFrame:
-        return self._view
-
     def to_feature_table(self) -> DataFrame:
         """Point view → normalized (geom_type, rings, properties) — pure
         column expressions, so geo export stays distributed and codegen'd."""
@@ -139,155 +154,8 @@ class PoiViewGenerator:
             _props_expr(self._view, (self.lon, self.lat)),
         )
 
-    def save_view(self, path: str, fmt: str = "parquet") -> str:
-        return _save_view(self._view, path, fmt, self.to_feature_table)
 
-
-class HexViewGenerator:
-    """Geodesic H3 zonal view (reference H3ViewGenerator, generators/
-    zonal/h3.py:32-89): zones are the TRUE H3 cells (cells_h3 — the
-    from-scratch public-spec implementation, ids joinable against
-    externally H3-indexed data) polyfilling a boundary polygon at a
-    resolution; enrichment methods aggregate points/rasters per cell.
-
-    The reference call shape
-        H3ViewGenerator(source=boundary, resolution=7).map_wp_pop(...)
-    ports to
-        HexViewGenerator(spark, boundary, resolution=7).map_points(...)
-    """
-
-    def __init__(self, spark, boundary, resolution: int = 5,
-                 contain_mode: str = "center"):
-        from . import cells_h3
-
-        self.spark = spark
-        self.resolution = resolution
-        self.cells = cells_h3.polyfill(boundary, resolution, mode=contain_mode)
-        lat_c, lon_c = cells_h3.cell_to_latlng(self.cells)
-        self.zones_dim = spark.createDataFrame(
-            [
-                (int(c), float(lo), float(la))
-                for c, lo, la in zip(self.cells, lon_c, lat_c)
-            ],
-            "h3_cell long, center_lon double, center_lat double",
-        )
-        self._view = self.zones_dim
-
-    def _assign(self, points: DataFrame, lon: str, lat: str) -> DataFrame:
-        from . import cells_h3
-
-        return cells_h3.assign_cells_df(
-            points, self.resolution, lon=lon, lat=lat
-        )
-
-    def map_points(self, points: DataFrame, aggregation: str = "count",
-                   value_columns=None, lon: str = "lon", lat: str = "lat",
-                   suffix: str = "") -> "HexViewGenerator":
-        """Per-cell point aggregation with the reference's fill rules
-        (0 for counts, NULL otherwise) — Arrow-batched H3 assignment +
-        left-semi restriction to the view's cells."""
-        from .operators.zonal import agg_exprs
-
-        exprs, meta = agg_exprs(aggregation, value_columns, suffix)
-        tagged = _restrict_to_dim(
-            self._assign(points, lon, lat), self.zones_dim, "h3_cell"
-        )
-        agged = tagged.groupBy("h3_cell").agg(*exprs)
-        out = self._view.join(F.broadcast(agged), "h3_cell", "left")
-        for name, fn in meta:
-            if fn == "count":
-                out = out.withColumn(
-                    name, F.coalesce(F.col(name), F.lit(0)).cast("long")
-                )
-        self._view = out
-        return self
-
-    def map_rasters(self, pixels: DataFrame, stats=("count", "mean"),
-                    value_col: str = "value") -> "HexViewGenerator":
-        """Per-cell raster stats: pixels keyed by H3 cell, nodata dropped
-        first (reference map_wp_pop semantics)."""
-        from .operators.zonal import _AGG_FNS
-
-        valid = _restrict_to_dim(
-            self._assign(
-                pixels.where(F.col(value_col).isNotNull()), "lon", "lat"
-            ),
-            self.zones_dim, "h3_cell",
-        )
-        exprs = [_AGG_FNS[s](F.col(value_col)).alias(f"{value_col}_{s}") for s in stats]
-        agged = valid.groupBy("h3_cell").agg(*exprs)
-        out = self._view.join(F.broadcast(agged), "h3_cell", "left")
-        if "count" in stats:
-            out = out.withColumn(
-                f"{value_col}_count",
-                F.coalesce(F.col(f"{value_col}_count"), F.lit(0)).cast("long"),
-            )
-        self._view = out
-        return self
-
-    def with_density(self, count_col: str, out_col: str | None = None
-                     ) -> "HexViewGenerator":
-        """Per-km² density from each cell's EXACT spherical area
-        (cells_h3.cell_area_km2 — boundary polygon spherical excess;
-        reference exposes true H3 cell areas, grid/h3.py:257-273). The
-        area table is dim-sized and broadcast."""
-        from . import cells_h3
-
-        areas = self.spark.createDataFrame(
-            [
-                (int(c), float(a))
-                for c, a in zip(
-                    self.cells, cells_h3.cell_area_km2(self.cells)
-                )
-            ],
-            "h3_cell long, __area_km2 double",
-        )
-        out_col = out_col or f"{count_col}_per_km2"
-        self._view = (
-            self._view.join(F.broadcast(areas), "h3_cell", "left")
-            .withColumn(out_col, F.col(count_col) / F.col("__area_km2"))
-            .drop("__area_km2")
-        )
-        return self
-
-    def to_dataframe(self) -> DataFrame:
-        return self._view
-
-    def to_feature_table(self) -> DataFrame:
-        """H3 view → Polygon features: each cell's exact boundary
-        (cells_h3.cell_to_boundary — substrate corners + distortion
-        vertices; reference cells_to_geo, grid/h3.py:326-335) joined onto
-        the enriched view. The boundary table is dim-sized (the view's
-        own cells), so the join broadcasts."""
-        from . import cells_h3
-
-        rings = self.spark.createDataFrame(
-            [
-                (
-                    int(c),
-                    [[[float(ln), float(la)]
-                      for la, ln in cells_h3.cell_to_boundary(int(c))]],
-                )
-                for c in self.cells
-            ],
-            "h3_cell long, rings array<array<array<double>>>",
-        )
-        joined = self._view.join(F.broadcast(rings), "h3_cell")
-        return joined.select(
-            F.lit("Polygon").alias("geom_type"),
-            "rings",
-            _props_expr(self._view, ("center_lon", "center_lat")),
-        )
-
-    def save_view(self, path: str, fmt: str = "parquet") -> str:
-        return _save_view(self._view, path, fmt, self.to_feature_table)
-
-
-# the reference's class name, 1:1
-H3ViewGenerator = HexViewGenerator
-
-
-class ZonalViewGenerator:
+class ZonalViewGenerator(_View):
     """zones: DataFrame with zone_id (+ any zone attrs). Reference
     zonal/base.py:104-133."""
 
@@ -300,17 +168,16 @@ class ZonalViewGenerator:
     def add_variable_to_view(self, agged: DataFrame, fill_zero_cols=()) -> "ZonalViewGenerator":
         """Reference add_variable_to_view (zonal/base.py:148-201): left join
         keyed by zone, optional 0-fill for count-like columns."""
-        out = self._view.join(agged, self.zone_key, "left")
-        for c in fill_zero_cols:
-            out = out.withColumn(c, F.coalesce(F.col(c), F.lit(0)).cast("long"))
-        self._view = out
+        from .operators.zonal import _attach_to_zones
+
+        self._view = _attach_to_zones(self._view, agged, self.zone_key, fill_zero_cols)
         return self
 
     def map_points(self, points: DataFrame, aggregation="count",
                    value_columns=None, zoom: int = 6) -> "ZonalViewGenerator":
         """Reference map_points → aggregate_points_to_zones semantics
         (fill 0 for counts, NULL otherwise)."""
-        from .operators.zonal import agg_exprs, aggregate_points_to_zones
+        from .operators.zonal import aggregate_points_to_zones
 
         out = aggregate_points_to_zones(
             points, self.polys, self.zones_dim, aggregation, value_columns,
@@ -333,30 +200,158 @@ class ZonalViewGenerator:
             agged, fill_zero_cols=["value_count"] if "count" in stats else ()
         )
 
-    def to_dataframe(self) -> DataFrame:
-        return self._view
-
     def to_feature_table(self) -> DataFrame:
         """Zonal view → Polygon features from the generator's own polygon
         dict (dim-sized by construction), broadcast-joined to the view."""
-        spark = self._view.sparkSession
-        rings = spark.createDataFrame(
-            [
-                (zid, [[[float(x), float(y)] for x, y in poly]])
-                for zid, poly in self.polys.items()
-            ],
-            f"{self.zone_key} int, rings array<array<array<double>>>",
+        rings = [
+            (zid, [[[float(x), float(y)] for x, y in poly]])
+            for zid, poly in self.polys.items()
+        ]
+        return _polygon_features(self._view, self.zone_key, "int", rings, ())
+
+
+class _CellViewGenerator(_View):
+    """A grid zonal view: zones are the cells polyfilling a boundary
+    polygon, and enrichment aggregates points and rasters per cell with
+    the reference's fill rules (0 for counts, NULL otherwise). A subclass
+    names its cell column (`key`), passes its dim rows to __init__ and
+    supplies
+      _tag(points, lon, lat)  the points with the cell column added;
+      _area_km2()             (cell, area) rows to broadcast-join as
+                              `__area`, or None when the dim already
+                              carries the area, and the per-km² divisor;
+      _rings()                (cell, polygon ring) pairs."""
+
+    key: str
+    # dim columns that the feature geometry replaces in the properties
+    _geometry_cols = ("center_lon", "center_lat")
+
+    def __init__(self, spark, rows, schema: str):
+        self.spark = spark
+        self.zones_dim = spark.createDataFrame(rows, schema)
+        self._view = self.zones_dim
+
+    def _attach(self, tagged: DataFrame, exprs, meta) -> "_CellViewGenerator":
+        from .operators.zonal import _attach_to_zones
+
+        # left-semi the tagged side against the view's own cells BEFORE
+        # aggregating: the broadcast aggregate is then bounded by the
+        # view's zone count, not by every distinct cell a global corpus
+        # touches (unbounded at high zoom/level)
+        agged = (
+            tagged.join(F.broadcast(self.zones_dim.select(self.key)), self.key,
+                        "left_semi")
+            .groupBy(self.key)
+            .agg(*exprs)
         )
-        joined = self._view.join(F.broadcast(rings), self.zone_key)
-        return joined.select(
-            F.lit("Polygon").alias("geom_type"), "rings", _props_expr(self._view, ())
+        self._view = _attach_to_zones(
+            self._view, F.broadcast(agged), self.key,
+            [name for name, fn in meta if fn == "count"],
+        )
+        return self
+
+    def map_points(self, points: DataFrame, aggregation: str = "count",
+                   value_columns=None, lon: str = "lon", lat: str = "lat",
+                   suffix: str = "") -> "_CellViewGenerator":
+        """Per-cell point aggregation, output names as
+        operators.zonal.agg_exprs (reference map_points)."""
+        from .operators.zonal import agg_exprs
+
+        exprs, meta = agg_exprs(aggregation, value_columns, suffix)
+        return self._attach(self._tag(points, lon, lat), exprs, meta)
+
+    def map_rasters(self, pixels: DataFrame, stats=("count", "mean"),
+                    value_col: str = "value") -> "_CellViewGenerator":
+        """Per-cell raster stats over (lon, lat, value_col) pixels, nodata
+        dropped first (reference map_wp_pop semantics). Columns are named
+        f"{value_col}_{stat}", also for a single stat."""
+        from .operators.zonal import _AGG_FNS
+
+        names = [f"{value_col}_{s}" for s in stats]
+        return self._attach(
+            self._tag(pixels.where(F.col(value_col).isNotNull()), "lon", "lat"),
+            [_AGG_FNS[s](F.col(value_col)).alias(n) for s, n in zip(stats, names)],
+            list(zip(names, stats)),
         )
 
-    def save_view(self, path: str, fmt: str = "parquet") -> str:
-        return _save_view(self._view, path, fmt, self.to_feature_table)
+    def with_density(self, count_col: str, out_col: str | None = None
+                     ) -> "_CellViewGenerator":
+        """Per-km² density: count over each cell's area (_area_km2). A
+        per-cell area table is dim-sized and broadcast."""
+        areas, km2 = self._area_km2()
+        view = self._view
+        if areas is not None:
+            table = self.spark.createDataFrame(areas, f"{self.key} long, __area double")
+            view = view.join(F.broadcast(table), self.key, "left")
+        view = view.withColumn(out_col or f"{count_col}_per_km2", F.col(count_col) / km2)
+        self._view = view if areas is None else view.drop("__area")
+        return self
+
+    def to_feature_table(self) -> DataFrame:
+        """Cell view → Polygon features: each cell's ring (_rings) joined
+        onto the enriched view; the ring table holds the view's own cells."""
+        rings = [(int(c), [ring]) for c, ring in self._rings()]
+        return _polygon_features(self._view, self.key, "long", rings,
+                                 self._geometry_cols)
 
 
-class MercatorViewGenerator:
+class HexViewGenerator(_CellViewGenerator):
+    """Geodesic H3 zonal view (reference H3ViewGenerator, generators/
+    zonal/h3.py:32-89): zones are the TRUE H3 cells (cells_h3 — the
+    from-scratch public-spec implementation, ids joinable against
+    externally H3-indexed data) polyfilling a boundary polygon at a
+    resolution; enrichment methods aggregate points/rasters per cell.
+
+    The reference call shape
+        H3ViewGenerator(source=boundary, resolution=7).map_wp_pop(...)
+    ports to
+        HexViewGenerator(spark, boundary, resolution=7).map_points(...)
+    """
+
+    key = "h3_cell"
+
+    def __init__(self, spark, boundary, resolution: int = 5,
+                 contain_mode: str = "center"):
+        from . import cells_h3
+
+        self.resolution = resolution
+        self.cells = cells_h3.polyfill(boundary, resolution, mode=contain_mode)
+        lat_c, lon_c = cells_h3.cell_to_latlng(self.cells)
+        super().__init__(
+            spark, list(zip(self.cells.tolist(), lon_c.tolist(), lat_c.tolist())),
+            "h3_cell long, center_lon double, center_lat double",
+        )
+
+    def _tag(self, points: DataFrame, lon: str, lat: str) -> DataFrame:
+        """Arrow-batched H3 assignment."""
+        from . import cells_h3
+
+        return cells_h3.assign_cells_df(points, self.resolution, lon=lon, lat=lat)
+
+    def _area_km2(self):
+        """Each cell's EXACT spherical area (cells_h3.cell_area_km2 —
+        boundary polygon spherical excess; reference exposes true H3 cell
+        areas, grid/h3.py:257-273): density = count / area_km2."""
+        from . import cells_h3
+
+        areas = cells_h3.cell_area_km2(self.cells).tolist()
+        return list(zip(self.cells.tolist(), areas)), F.col("__area")
+
+    def _rings(self):
+        """Each cell's exact boundary (cells_h3.cell_to_boundary —
+        substrate corners + distortion vertices; reference cells_to_geo,
+        grid/h3.py:326-335)."""
+        from . import cells_h3
+
+        for c in self.cells:
+            yield c, [[float(ln), float(la)] for la, ln in cells_h3.cell_to_boundary(int(c))]
+
+
+# the reference's class name, 1:1
+H3ViewGenerator = HexViewGenerator
+
+
+class MercatorViewGenerator(_CellViewGenerator):
     """Web-mercator tile zonal view (reference MercatorViewGenerator,
     generators/zonal/mercator.py): zones are the tiles polyfilling a
     boundary polygon at a zoom; enrichment aggregates points/rasters per
@@ -367,11 +362,13 @@ class MercatorViewGenerator:
     Tile assignment is pure native column math (cells.tile_id — codegen,
     no UDF), so the big point side never leaves the JVM."""
 
+    key = "tile"
+    _geometry_cols = ("center_lon", "center_lat", "area_m2")
+
     def __init__(self, spark, boundary, zoom: int = 7,
                  contain_mode: str = "center"):
         from . import cells
 
-        self.spark = spark
         self.zoom = zoom
         self.tiles = cells.tile_polyfill(boundary, zoom, mode=contain_mode)
         rows = []
@@ -384,218 +381,83 @@ class MercatorViewGenerator:
                     float(cells.tile_area_m2(x, y, zoom)),
                 )
             )
-        self.zones_dim = spark.createDataFrame(
-            rows,
+        super().__init__(
+            spark, rows,
             "tile bigint, tile_x bigint, tile_y bigint, "
             "center_lon double, center_lat double, area_m2 double",
         )
-        self._view = self.zones_dim
 
-    def _cell_col(self, lon, lat):
+    def _tag(self, points: DataFrame, lon: str, lat: str) -> DataFrame:
         from . import cells
 
-        return cells.tile_id(lon, lat, self.zoom)
+        return points.withColumn("tile", cells.tile_id(F.col(lon), F.col(lat), self.zoom))
 
-    def map_points(self, points: DataFrame, aggregation: str = "count",
-                   value_columns=None, lon: str = "lon", lat: str = "lat",
-                   suffix: str = "") -> "MercatorViewGenerator":
-        """Per-tile point aggregation, reference fill rules (0 for counts,
-        NULL otherwise)."""
-        from .operators.zonal import agg_exprs
+    def _area_km2(self):
+        """The dim's own EXACT spherical tile area (R²·Δλ·Δsinφ — mercator
+        tiles shrink with |latitude|, so the naive constant-area-per-zoom
+        assumption would bias densities): density = count / (area_m2 / 1e6),
+        in that operation order."""
+        return None, F.col("area_m2") / F.lit(1e6)
 
-        exprs, meta = agg_exprs(aggregation, value_columns, suffix)
-        tagged = _restrict_to_dim(
-            points.withColumn("tile", self._cell_col(F.col(lon), F.col(lat))),
-            self.zones_dim, "tile",
-        )
-        agged = tagged.groupBy("tile").agg(*exprs)
-        out = self._view.join(F.broadcast(agged), "tile", "left")
-        for name, fn in meta:
-            if fn == "count":
-                out = out.withColumn(
-                    name, F.coalesce(F.col(name), F.lit(0)).cast("long")
-                )
-        self._view = out
-        return self
-
-    def map_rasters(self, pixels: DataFrame, stats=("count", "mean"),
-                    value_col: str = "value") -> "MercatorViewGenerator":
-        from .operators.zonal import _AGG_FNS
-
-        valid = _restrict_to_dim(
-            pixels.where(F.col(value_col).isNotNull()).withColumn(
-                "tile", self._cell_col(F.col("lon"), F.col("lat"))
-            ),
-            self.zones_dim, "tile",
-        )
-        exprs = [_AGG_FNS[s](F.col(value_col)).alias(f"{value_col}_{s}") for s in stats]
-        agged = valid.groupBy("tile").agg(*exprs)
-        out = self._view.join(F.broadcast(agged), "tile", "left")
-        if "count" in stats:
-            out = out.withColumn(
-                f"{value_col}_count",
-                F.coalesce(F.col(f"{value_col}_count"), F.lit(0)).cast("long"),
-            )
-        self._view = out
-        return self
-
-    def with_density(self, count_col: str, out_col: str | None = None
-                     ) -> "MercatorViewGenerator":
-        """Per-km² density from the EXACT spherical tile area
-        (R²·Δλ·Δsinφ — mercator tiles shrink with |latitude|, so the naive
-        constant-area-per-zoom assumption would bias densities)."""
-        out_col = out_col or f"{count_col}_per_km2"
-        self._view = self._view.withColumn(
-            out_col, F.col(count_col) / (F.col("area_m2") / F.lit(1e6))
-        )
-        return self
-
-    def to_dataframe(self) -> DataFrame:
-        return self._view
-
-    def to_feature_table(self) -> DataFrame:
-        """Tile view → Polygon features (tile lon/lat boxes)."""
+    def _rings(self):
+        """Each tile's lon/lat box."""
         from . import cells
 
-        rings = self.spark.createDataFrame(
-            [
-                (
-                    int(cells.pack_tile(x, y)),
-                    [[[bx[0], bx[1]], [bx[2], bx[1]], [bx[2], bx[3]], [bx[0], bx[3]]]],
-                )
-                for x, y in self.tiles
-                for bx in [cells.tile_bounds(x, y, self.zoom)]
-            ],
-            "tile bigint, rings array<array<array<double>>>",
-        )
-        joined = self._view.join(F.broadcast(rings), "tile")
-        return joined.select(
-            F.lit("Polygon").alias("geom_type"),
-            "rings",
-            _props_expr(self._view, ("center_lon", "center_lat", "area_m2")),
-        )
-
-    def save_view(self, path: str, fmt: str = "parquet") -> str:
-        return _save_view(self._view, path, fmt, self.to_feature_table)
+        for x, y in self.tiles:
+            w, s, e, n = cells.tile_bounds(x, y, self.zoom)
+            yield cells.pack_tile(x, y), [[w, s], [e, s], [e, n], [w, n]]
 
 
-class S2ViewGenerator:
+class S2ViewGenerator(_CellViewGenerator):
     """S2-cell zonal view (reference S2ViewGenerator, generators/zonal/
     s2.py): zones are the S2 cells polyfilling a boundary polygon at a
     level. Cell assignment for the point side runs through the Arrow-batched
     Hilbert kernel (cells_s2.assign_cells_df); the cell dim (polyfill) is
     driver-computed like the reference's RegionCoverer."""
 
+    key = "s2_cell"
+
     def __init__(self, spark, boundary, level: int = 8,
                  contain_mode: str = "center"):
         from . import cells_s2
 
-        self.spark = spark
         self.level = level
         self.cells = cells_s2.polyfill(boundary, level, mode=contain_mode)
         lat_c, lon_c = cells_s2.cell_centers_latlon(self.cells, level)
-        rows = list(zip(self.cells.tolist(), lon_c.tolist(), lat_c.tolist()))
-        self.zones_dim = spark.createDataFrame(
-            rows, "s2_cell long, center_lon double, center_lat double"
+        super().__init__(
+            spark, list(zip(self.cells.tolist(), lon_c.tolist(), lat_c.tolist())),
+            "s2_cell long, center_lon double, center_lat double",
         )
-        self._view = self.zones_dim
 
-    def _assign(self, points: DataFrame, lon: str, lat: str) -> DataFrame:
+    def _tag(self, points: DataFrame, lon: str, lat: str) -> DataFrame:
         from . import cells_s2
 
         return cells_s2.assign_cells_df(points, self.level, lon=lon, lat=lat)
 
-    def map_points(self, points: DataFrame, aggregation: str = "count",
-                   value_columns=None, lon: str = "lon", lat: str = "lat",
-                   suffix: str = "") -> "S2ViewGenerator":
-        from .operators.zonal import agg_exprs
-
-        exprs, meta = agg_exprs(aggregation, value_columns, suffix)
-        tagged = _restrict_to_dim(
-            self._assign(points, lon, lat), self.zones_dim, "s2_cell"
-        )
-        agged = tagged.groupBy("s2_cell").agg(*exprs)
-        out = self._view.join(F.broadcast(agged), "s2_cell", "left")
-        for name, fn in meta:
-            if fn == "count":
-                out = out.withColumn(
-                    name, F.coalesce(F.col(name), F.lit(0)).cast("long")
-                )
-        self._view = out
-        return self
-
-    def map_rasters(self, pixels: DataFrame, stats=("count", "mean"),
-                    value_col: str = "value") -> "S2ViewGenerator":
-        from .operators.zonal import _AGG_FNS
-
-        valid = _restrict_to_dim(
-            self._assign(pixels.where(F.col(value_col).isNotNull()), "lon", "lat"),
-            self.zones_dim, "s2_cell",
-        )
-        exprs = [_AGG_FNS[s](F.col(value_col)).alias(f"{value_col}_{s}") for s in stats]
-        agged = valid.groupBy("s2_cell").agg(*exprs)
-        out = self._view.join(F.broadcast(agged), "s2_cell", "left")
-        if "count" in stats:
-            out = out.withColumn(
-                f"{value_col}_count",
-                F.coalesce(F.col(f"{value_col}_count"), F.lit(0)).cast("long"),
-            )
-        self._view = out
-        return self
-
-    def with_density(self, count_col: str, out_col: str | None = None
-                     ) -> "S2ViewGenerator":
-        """Per-km² density from each cell's exact quad area (UTM-exact
-        planar area of the cell polygon via functions.geo — S2 cells at a
-        level vary ~2× in ground area across a face)."""
+    def _area_km2(self):
+        """Each cell quad's equirectangular planar area at the cell's own
+        latitude: vertex longitudes scaled by the cosine of the mean vertex
+        latitude, the planar polygon area in degree² times (π·R/180)² m²
+        per degree². The quads are small at usable levels, so this is
+        within ~1e-4 of the spherical area; S2 cells at a level vary ~2× in
+        ground area across a face. density = count / (area_m2 / 1e6)."""
         import numpy as np
 
         from . import cells_s2
         from .geometry import polygon_area
 
-        # per-cell spherical quad area via the girard/planar hybrid: the
-        # cell polygons are small at usable levels, so the equirectangular
-        # planar area at the cell's own latitude is exact to ~1e-4
+        deg2_m2 = (111_194.92664455873) ** 2  # (π·R/180)² — meters per degree²
         rows = []
         for c in self.cells:
             poly = cells_s2.cell_polygon(int(c))
-            lat_c = float(np.mean(poly[:, 1]))
-            coslat = float(np.cos(np.radians(lat_c)))
+            coslat = float(np.cos(np.radians(float(np.mean(poly[:, 1])))))
             scaled = np.column_stack([poly[:, 0] * coslat, poly[:, 1]])
-            deg2_m2 = (111_194.92664455873) ** 2  # (π·R/180)² — meters per degree²
             rows.append((int(c), polygon_area(scaled) * deg2_m2))
-        areas = self.spark.createDataFrame(rows, "s2_cell long, __area_m2 double")
-        out_col = out_col or f"{count_col}_per_km2"
-        self._view = (
-            self._view.join(F.broadcast(areas), "s2_cell", "left")
-            .withColumn(out_col, F.col(count_col) / (F.col("__area_m2") / F.lit(1e6)))
-            .drop("__area_m2")
-        )
-        return self
+        return rows, F.col("__area") / F.lit(1e6)
 
-    def to_dataframe(self) -> DataFrame:
-        return self._view
-
-    def to_feature_table(self) -> DataFrame:
-        """S2 view → Polygon features (cell quads, CCW)."""
+    def _rings(self):
+        """Each cell's quad, CCW."""
         from . import cells_s2
 
-        rings = self.spark.createDataFrame(
-            [
-                (
-                    int(c),
-                    [[[float(x), float(y)] for x, y in cells_s2.cell_polygon(int(c))]],
-                )
-                for c in self.cells
-            ],
-            "s2_cell long, rings array<array<array<double>>>",
-        )
-        joined = self._view.join(F.broadcast(rings), "s2_cell")
-        return joined.select(
-            F.lit("Polygon").alias("geom_type"),
-            "rings",
-            _props_expr(self._view, ("center_lon", "center_lat")),
-        )
-
-    def save_view(self, path: str, fmt: str = "parquet") -> str:
-        return _save_view(self._view, path, fmt, self.to_feature_table)
+        for c in self.cells:
+            yield c, [[float(x), float(y)] for x, y in cells_s2.cell_polygon(int(c))]
