@@ -12,6 +12,16 @@ Geo-entity extraction turns pages into points: documents embed
 "(lat, lon)" coordinate mentions; the UDF regex-extracts every pair,
 producing the point stream the spatial joins consume (the engine's
 web-scale replacement for the reference's file-based point ingest).
+
+``extract_text_py`` is ``_markup_text`` (decode → script → comment →
+block → tag → unescape → NFKC) followed by a whitespace tail. The fused
+enrichment kernel reads only the coordinates, so ``geo_points_batch``
+skips the tail and runs one coordinate regex pass over a whole Arrow
+batch's markup text. That is exact: the tail only collapses or strips
+whitespace and never empties a run between two non-space characters,
+and ``_RE_COORD`` admits whitespace only in its ``\\s*`` after the comma,
+which accepts any run; the ``\\x00`` joining the documents matches no
+part of the pattern, so no match spans two documents.
 """
 
 from __future__ import annotations
@@ -19,6 +29,7 @@ from __future__ import annotations
 import html as _htmllib
 import re
 import unicodedata
+from itertools import chain
 
 import numpy as np
 import pandas as pd
@@ -72,18 +83,24 @@ def _tail_fast(s: str) -> str:
     return "\n".join(out)
 
 
-def extract_text_py(raw: bytes) -> str:
-    """Deterministic html→text. Order matters and is frozen:
-    strip script/style → strip comments → block tags to newline → strip all
-    tags → decode entities → NFKC → collapse spaces → collapse blank lines
-    → strip. Changing any step breaks the byte-identical invariant."""
+def _markup_text(raw: bytes) -> str:
+    """The shared prefix of extract_text_py: strip script/style → strip
+    comments → block tags to newline → strip all tags → decode entities →
+    NFKC. The whitespace is left as the markup produced it."""
     s = raw.decode("utf-8", errors="replace")
     s = _RE_SCRIPT.sub(" ", s)
     s = _RE_COMMENT.sub(" ", s)
     s = _RE_BLOCK.sub("\n", s)
     s = _RE_TAG.sub(" ", s)
     s = _htmllib.unescape(s)
-    s = unicodedata.normalize("NFKC", s)
+    return unicodedata.normalize("NFKC", s)
+
+
+def extract_text_py(raw: bytes) -> str:
+    """Deterministic html→text. Order matters and is frozen:
+    _markup_text → collapse spaces → collapse blank lines → strip.
+    Changing any step breaks the byte-identical invariant."""
+    s = _markup_text(raw)
     if _RE_EXOTIC_WS.search(s):
         return _tail_exact(s)
     return _tail_fast(s)
@@ -105,13 +122,32 @@ _ENTITY_SCHEMA = ArrayType(
 )
 
 
+def _in_range(lat, lon):
+    """The coordinate range filter, on floats or on float64 arrays."""
+    return (lat >= -90.0) & (lat <= 90.0) & (lon >= -180.0) & (lon <= 180.0)
+
+
 def extract_geo_entities_py(text: str) -> list[tuple[float, float]]:
     out = []
-    for m in _RE_COORD.finditer(text):
-        lat, lon = float(m.group(1)), float(m.group(2))
-        if -90.0 <= lat <= 90.0 and -180.0 <= lon <= 180.0:
+    for a, b in _RE_COORD.findall(text):
+        lat, lon = float(a), float(b)
+        if _in_range(lat, lon):
             out.append((lat, lon))
     return out
+
+
+def geo_points_batch(htmls) -> tuple[np.ndarray, np.ndarray]:
+    """float64 (lat, lon) of every in-range coordinate mention in a batch
+    of html documents, in document order: equal to concatenating
+    extract_geo_entities_py(extract_text_py(h)) over the batch (see the
+    module docstring for why the whitespace tail can be skipped)."""
+    pairs = _RE_COORD.findall("\x00".join(map(_markup_text, htmls)))
+    xy = np.fromiter(
+        map(float, chain.from_iterable(pairs)), np.float64, 2 * len(pairs)
+    ).reshape(-1, 2)
+    lat, lon = xy[:, 0], xy[:, 1]
+    keep = _in_range(lat, lon)
+    return lat[keep], lon[keep]
 
 
 @F.pandas_udf(_ENTITY_SCHEMA)

@@ -65,22 +65,28 @@ def enrich(pages: DataFrame, admin_polys, tile_zoom: int = TILE_ZOOM,
     return salted_count(tiled, ["zone_id", "tile"], "mention_count")
 
 
-def enrich_fused(pages: DataFrame, admin_polys, tile_zoom: int = TILE_ZOOM,
-                 pip_zoom: int = PIP_ZOOM) -> DataFrame:
+def enrich_fused(pages: DataFrame, admin_polys,
+                 tile_zoom: int = TILE_ZOOM) -> DataFrame:
     """Single-Python-pass variant of :func:`enrich` — identical output.
 
     The modular pipeline crosses the JVM↔Python boundary three times
     (extract UDF, entity UDF, PIP refine). At 10^12 rows the Arrow
     (de)serialization of the intermediate columns dominates, so the scale
-    path fuses html→text → entity regex → tile math → GridIndex PIP into
-    ONE mapInPandas kernel: scan → fused kernel → salted rollup. One python
+    path fuses html → coordinates → GridIndex PIP → tile math into ONE
+    mapInPandas kernel: scan → fused kernel → salted rollup. One python
     exchange, no intermediate text column ever serialized.
+
+    The rollup reads only the coordinates, so the kernel computes only
+    those: ``geo_points_batch`` runs the markup half of extract_text_py
+    (no whitespace tail) and one coordinate regex pass per Arrow batch.
+    Exact, because the tail never creates or destroys a coordinate match
+    (functions/text.py module docstring).
     """
     import numpy as np
     import pandas as pd
 
     from . import cells as _cells
-    from .functions.text import extract_geo_entities_py, extract_text_py
+    from .functions.text import geo_points_batch
     from .geometry import GridIndex
 
     spark = pages.sparkSession
@@ -91,17 +97,9 @@ def enrich_fused(pages: DataFrame, admin_polys, tile_zoom: int = TILE_ZOOM,
     def kernel(batches):
         index = GridIndex(bc.value)
         for pdf in batches:
-            if not len(pdf):
+            lat, lon = geo_points_batch(pdf["html"])
+            if not len(lat):
                 continue
-            lats, lons = [], []
-            for h in pdf["html"]:
-                for la, lo in extract_geo_entities_py(extract_text_py(h)):
-                    lats.append(la)
-                    lons.append(lo)
-            if not lats:
-                continue
-            lat = np.asarray(lats)
-            lon = np.asarray(lons)
             idx, pid = index.query_points(lon, lat, convex=True)
             if not len(idx):
                 continue

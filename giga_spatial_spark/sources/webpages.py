@@ -22,7 +22,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from ..functions.text import extract_text_py
+from ..functions.text import STOPWORDS, extract_text_py
 
 WORDS = (
     "the quick brown fox jumps over lazy dog data spark shuffle join tile "
@@ -74,8 +74,6 @@ def _make_batch(ids: np.ndarray) -> pd.DataFrame:
         body_words = [WORDS[j] for j in widx]
         # language-marker stopwords woven in deterministically
         lang = LANGS[int(lang_idx[row])]
-        from ..functions.text import STOPWORDS
-
         for m, w in enumerate(STOPWORDS[lang]):
             body_words.insert((i + m * 5) % max(len(body_words), 1), w)
         paras = []

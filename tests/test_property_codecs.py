@@ -8,10 +8,12 @@
   - rolling fingerprint: vectorized kernel == naive definition for
     arbitrary unicode text
   - UTM: round-trip for arbitrary in-zone coordinates
+  - batch geo extraction: the fused kernel's per-batch coordinate pass
+    equals the per-document extract_text → extract_geo_entities chain
 """
 
 import numpy as np
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from giga_spatial_spark import cells_hex as H
@@ -162,6 +164,54 @@ def test_extract_text_stable_under_optimization(raw):
         return s.strip()
 
     assert T.extract_text_py(raw) == reference(raw)
+
+
+# fragments that stress the html→coordinates path: exotic whitespace,
+# non-ASCII digits and parentheses (NFKC folds the fullwidth ones, not the
+# Arabic-Indic), entity-encoded punctuation, block tags between the comma
+# and the longitude, unclosed script/comment/tag openers and NUL bytes
+_GEO_FRAGMENTS = st.sampled_from([
+    "(", ")", ",", ", ", ".", "-", "12", "3.5", "-45.25", "181", "95.5",
+    " ", "\n", "\t", "\r\n", "\x1c", "\x85", "\xa0", "\u2003", "\u2028",
+    "\u3000", "\x00", "\u0661\u0662", "\u0663.\u0664", "\uff11\uff12",
+    "\uff08", "\uff09", "\uff0c", "&#40;", "&#41;", "&#x28;", "&lpar;",
+    "&comma;", "&#44;", "&nbsp;", "&amp;", "<br>", "<br/>", "</p>", "<p>",
+    "</div>", "<b>", '<a title="(1.5, 2.5)">', "<script", "</script>",
+    "<style>", "<!--", "-->", "<", ">", "word",
+])
+_GEO_PAIR = st.builds(
+    "({}{},{}{})".format,
+    st.sampled_from(["", "-"]),
+    st.sampled_from(["0", "7.25", "45", "89.9999", "90", "99", "\u0665"]),
+    st.sampled_from(["", " ", "\n", "<br>", "</p>\n<p>", "&#32;", "\xa0"]),
+    st.sampled_from(["0", "-0.5", "120.125", "180", "-180.0", "181", "1234"]),
+)
+_GEO_DOC = st.lists(
+    st.one_of(_GEO_FRAGMENTS, _GEO_PAIR, st.text(max_size=8)), max_size=30
+).map(lambda parts: "".join(parts).encode("utf-8"))
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.lists(st.one_of(_GEO_DOC, st.binary(max_size=60)), max_size=8))
+@example([b"see (12,", b" 34) after"])
+@example([b"(12,\x00 34)", "（１２，\u3000３４）".encode()])
+def test_geo_points_batch_equals_per_doc_chain(docs):
+    """The batch extractor skips the whitespace tail and scans the batch in
+    one regex pass; its float64 (lat, lon) must be bit-identical, in the
+    same order, to the per-document chain the modular pipeline runs."""
+    from giga_spatial_spark.functions.text import (
+        extract_geo_entities_py,
+        extract_text_py,
+        geo_points_batch,
+    )
+
+    want = [p for d in docs for p in extract_geo_entities_py(extract_text_py(d))]
+    want_lat = np.array([p[0] for p in want], dtype=np.float64)
+    want_lon = np.array([p[1] for p in want], dtype=np.float64)
+    lat, lon = geo_points_batch(docs)
+    assert lat.dtype == np.float64 and lon.dtype == np.float64
+    assert lat.view(np.uint64).tolist() == want_lat.view(np.uint64).tolist()
+    assert lon.view(np.uint64).tolist() == want_lon.view(np.uint64).tolist()
 
 
 @settings(max_examples=60, deadline=None)

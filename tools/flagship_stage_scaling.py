@@ -8,7 +8,9 @@ timed at local[8] and local[32] in fresh JVMs (BLAS pinned, best of 3):
   scan    — parquet scan + JVM length() aggregate (no Python, no Arrow)
   ship    — scan + Arrow-serialize `html` to Python workers + a no-op
             kernel that only counts bytes (no regex/extract compute)
-  full    — the real fused kernel (extract → entities → tiles → PIP)
+  full    — the real fused kernel (markup text without the whitespace
+            tail → one coordinate regex pass per Arrow batch → PIP →
+            tiles; exact, as the tail never creates or destroys a match)
 
 compute = full − ship isolates Python compute; ship − scan isolates the
 Arrow/IPC channel. Per-component efficiencies T8/(4·T32) show where the
