@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from giga_spatial_spark import cells, cells_hex, cells_s2, synth
 from giga_spatial_spark.functions import text as T
+from giga_spatial_spark.functions.dialect import spark_col
 from giga_spatial_spark.geometry import polygon_centroid
 from giga_spatial_spark.operators import zonal
 from giga_spatial_spark.operators.ann import (
@@ -36,7 +37,7 @@ from giga_spatial_spark.operators.dedup import (
     simhash_near_dup_pairs,
 )
 from giga_spatial_spark.operators.knn import knn_broadcast, topk_neighbors
-from giga_spatial_spark.operators.normalize import clean_string_expr, clean_string_sql
+from giga_spatial_spark.operators.normalize import clean_string_sql
 from giga_spatial_spark.operators.overlay import fractional_overlay_boxes
 from giga_spatial_spark.operators.pip_join import pip_join_native, pip_join_rtree
 from giga_spatial_spark.operators.range_join import proximity_dedup_exists
@@ -263,13 +264,13 @@ def q_canonical_url(spark: SparkSession, sf_dir: str) -> DataFrame:
     messy variants per base id — scheme/host case, explicit :443,
     utm_* tracking params, shuffled parameter order, fragments — are
     built by pure column arithmetic, canonicalized by the native
-    expression pipeline (functions/url.canonical_url_expr: zero Python,
-    whole-stage codegen), and grouped: every base must collapse to ONE
-    canonical URL (www variants intentionally survive as distinct
-    hosts — canonicalization is not host folding). The oracle rebuilds
-    the same messy strings in SQL and canonicalizes with DuckDB's own
-    regex/list machinery (url.canonical_url_sql)."""
-    from giga_spatial_spark.functions.url import canonical_url_expr, url_host_expr
+    expression pipeline (``spark_col`` of functions/url.canonical_url_sql:
+    zero Python, whole-stage codegen), and grouped: every base must
+    collapse to ONE canonical URL (www variants intentionally survive as
+    distinct hosts — canonicalization is not host folding). The oracle rebuilds
+    the same messy strings in SQL and canonicalizes the same
+    url.canonical_url_sql text with DuckDB's own regex/list machinery."""
+    from giga_spatial_spark.functions.url import canonical_url_sql, url_host_expr
 
     docs = (
         read_parquet(spark, f"{sf_dir}/documents.parquet")
@@ -279,7 +280,7 @@ def q_canonical_url(spark: SparkSession, sf_dir: str) -> DataFrame:
     urls = docs.withColumn("url", _messy_url_expr())
     canon = urls.select(
         "doc_id",
-        canonical_url_expr(F.col("url")).alias("curl"),
+        spark_col(canonical_url_sql("url")).alias("curl"),
         url_host_expr(F.col("url")).alias("host"),
     )
     return (
@@ -620,7 +621,7 @@ def q_admin_annotate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "zone_id int, cx double, cy double",
     )
     j = matches.join(F.broadcast(cents), "zone_id").withColumn(
-        "cdist", synth.haversine_expr(F.col("lat"), F.col("lon"), F.col("cy"), F.col("cx"))
+        "cdist", spark_col(synth.haversine_sql("lat", "lon", "cy", "cx"))
     )
     w = Window.partitionBy("doc_id").orderBy(F.col("cdist").asc(), F.col("zone_id").asc())
     return (
@@ -696,7 +697,7 @@ def q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting + quality signals per language — native expressions
     only (integer outputs for exact cross-engine sums)."""
     docs = _docs(spark, sf_dir)
-    q = T.quality_exprs("text")
+    q = {k: spark_col(v) for k, v in T.quality_sqls("text").items()}
     # BPE-ish regex tokenization alongside whitespace tokens
     regex_tokens = F.size(F.regexp_extract_all(F.col("text"), F.lit(T.TOKEN_RE), 0))
     per_doc = docs.select(
@@ -842,7 +843,7 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     (actual lang, predicted lang)."""
     docs = _docs(spark, sf_dir)
     return (
-        docs.withColumn("predicted", T.predicted_lang_expr("text"))
+        docs.withColumn("predicted", spark_col(T.predicted_lang_sql("text")))
         .groupBy("lang", "predicted")
         .agg(F.count(F.lit(1)).alias("doc_count"))
     )
@@ -1283,30 +1284,30 @@ def _nfkc_oracle_sql() -> str:
     return f"SELECT doc_id, trim({expr}) AS norm FROM documents"
 
 
+# messy admin names per doc key: the q_titlecase input on both engines
+TITLECASE_RAW_SQL = (
+    "CASE doc_id % 8 "
+    "WHEN 0 THEN '  new south wales ' WHEN 1 THEN 'UNKNOWN' "
+    "WHEN 2 THEN 'n/a' WHEN 3 THEN 'ile-de-france' "
+    "WHEN 4 THEN 'BAVARIA' WHEN 5 THEN 'null' "
+    "WHEN 6 THEN 'puerto  rico' ELSE 'WESTERN cape' END"
+)
+
+
 def q_titlecase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Admin-name title-casing with unknown→NULL (reference
     entity.py:138-148): deterministic messy admin names per doc key run
     through normalize.titlecase_admin_expr (clean → sentinel-null →
-    initcap, all native). The oracle rebuilds the SAME inputs and
-    replays title-casing INDEPENDENTLY — clean_string_sql then DuckDB
-    string_split / list_transform / array_to_string (DuckDB has no
-    initcap; the lambda pipeline is its own word-walk)."""
+    initcap, all native). The oracle builds the SAME inputs from
+    TITLECASE_RAW_SQL and replays title-casing INDEPENDENTLY —
+    clean_string_sql then DuckDB string_split / list_transform /
+    array_to_string (DuckDB has no initcap; the lambda pipeline is its
+    own word-walk)."""
     from giga_spatial_spark.operators.normalize import titlecase_admin_expr
 
     docs = read_parquet(spark, f"{sf_dir}/documents.parquet").select("doc_id")
-    k = F.col("doc_id") % 8
-    raw = (
-        F.when(k == 0, F.lit("  new south wales "))
-        .when(k == 1, F.lit("UNKNOWN"))
-        .when(k == 2, F.lit("n/a"))
-        .when(k == 3, F.lit("ile-de-france"))
-        .when(k == 4, F.lit("BAVARIA"))
-        .when(k == 5, F.lit("null"))
-        .when(k == 6, F.lit("puerto  rico"))
-        .otherwise(F.lit("WESTERN cape"))
-    )
     return docs.select(
-        "doc_id", titlecase_admin_expr(raw).alias("admin_name")
+        "doc_id", titlecase_admin_expr(TITLECASE_RAW_SQL).alias("admin_name")
     )
 
 
@@ -1839,7 +1840,7 @@ def q_normalize_strings(spark: SparkSession, sf_dir: str) -> DataFrame:
     entity_processor.py:329-389) over customer segments."""
     cust = read_parquet(spark, f"{sf_dir}/customer.parquet")
     return (
-        cust.withColumn("segment", clean_string_expr(F.col("c_mktsegment")))
+        cust.withColumn("segment", spark_col(clean_string_sql("c_mktsegment")))
         .groupBy("segment")
         .agg(F.count(F.lit(1)).alias("customer_count"))
     )
@@ -2438,13 +2439,13 @@ def q_k_factor(spark: SparkSession, sf_dir: str) -> DataFrame:
     worst-case tier for a per-doc link length (n_chars/10 km). Grouped
     per (zone, k_min) with the zone's median k."""
     from giga_spatial_spark.operators.los import (
-        climate_zone_expr, k_factor_median_expr, k_factor_worst_expr,
+        climate_zone_sql, k_factor_median_sql, k_factor_worst_expr,
     )
 
     pts = _docs_pts(spark, sf_dir)
     out = pts.select(
-        climate_zone_expr(F.col("lat"), F.col("lon")).alias("zone"),
-        F.round(k_factor_median_expr(F.col("lat"), F.col("lon")), 6).alias(
+        spark_col(climate_zone_sql("lat", "lon")).alias("zone"),
+        F.round(spark_col(k_factor_median_sql("lat", "lon")), 6).alias(
             "k_median"
         ),
         k_factor_worst_expr(F.col("n_chars") / F.lit(10.0)).alias("k_min"),
@@ -2733,16 +2734,15 @@ def q_normalize_enums(spark: SparkSession, sf_dir: str) -> DataFrame:
     exercises unknown-passthrough); a 'status,priority' collection cell is
     normalized per element."""
     from giga_spatial_spark.operators.normalize import (
-        normalize_enum_collection_expr,
-        normalize_enum_expr,
+        normalize_enum_collection_sql,
+        normalize_enum_sql,
     )
 
     orders = read_parquet(spark, f"{sf_dir}/orders.parquet")
-    enum = normalize_enum_expr(F.col("o_orderpriority"), ENUM_ALIASES)
-    coll = normalize_enum_collection_expr(
-        F.concat_ws(",", F.col("o_orderstatus"), F.col("o_orderpriority")),
-        ENUM_ALIASES,
-    )
+    enum = spark_col(normalize_enum_sql("o_orderpriority", ENUM_ALIASES))
+    coll = spark_col(normalize_enum_collection_sql(
+        "concat_ws(',', o_orderstatus, o_orderpriority)", ENUM_ALIASES
+    ))
     return (
         orders.select(enum.alias("priority"), coll.alias("tags"))
         .groupBy("priority", "tags")
@@ -4428,11 +4428,7 @@ FROM z""",
         "q_utm_buffer": _utm_buffer_sql(),
         "q_utm_area": _utm_area_sql(),
         "q_titlecase": (
-            "WITH raw AS (SELECT doc_id, CASE doc_id % 8 "
-            "WHEN 0 THEN '  new south wales ' WHEN 1 THEN 'UNKNOWN' "
-            "WHEN 2 THEN 'n/a' WHEN 3 THEN 'ile-de-france' "
-            "WHEN 4 THEN 'BAVARIA' WHEN 5 THEN 'null' "
-            "WHEN 6 THEN 'puerto  rico' ELSE 'WESTERN cape' END AS s "
+            f"WITH raw AS (SELECT doc_id, {TITLECASE_RAW_SQL} AS s "
             "FROM documents), "
             f"c AS (SELECT doc_id, {clean_string_sql('s')} AS s FROM raw) "
             "SELECT doc_id, array_to_string(list_transform("

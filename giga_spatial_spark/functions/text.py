@@ -166,37 +166,18 @@ STOPWORDS = {
 }
 
 
-def token_count_expr(text_col: str) -> "F.Column":
-    """Whitespace token count as a native expression (no UDF):
-    size(split(trim, '\\s+')), 0 for empty/blank strings."""
-    trimmed = F.trim(F.col(text_col))
-    return F.when(F.length(trimmed) == 0, F.lit(0)).otherwise(
-        F.size(F.split(trimmed, r"\s+"))
-    )
-
-
 def token_count_sql(text_col: str) -> str:
+    """Whitespace token count: size(split(trim, '\\s+')), 0 for empty or
+    blank strings."""
     return (
         f"CASE WHEN length(trim({text_col})) = 0 THEN 0 "
         f"ELSE len(regexp_split_to_array(trim({text_col}), '\\s+')) END"
     )
 
 
-def stopword_hits_expr(text_col: str, lang: str) -> "F.Column":
-    """Count of stopword occurrences (word-boundary-free, substring ' w '
-    convention so the SQL twin is exact)."""
-    padded = F.concat(F.lit(" "), F.col(text_col), F.lit(" "))
-    total = F.lit(0)
-    for w in STOPWORDS[lang]:
-        pat = f" {w} "
-        occurrences = (
-            F.length(padded) - F.length(F.replace(padded, F.lit(pat), F.lit("")))
-        ) / F.lit(len(pat))
-        total = total + occurrences
-    return total.cast("long")
-
-
 def stopword_hits_sql(text_col: str, lang: str) -> str:
+    """Count of ``lang`` stopword occurrences, each counted as the
+    substring ' w ' of the space-padded text (no word-boundary regex)."""
     padded = f"(' ' || {text_col} || ' ')"
     terms = []
     for w in STOPWORDS[lang]:
@@ -207,39 +188,9 @@ def stopword_hits_sql(text_col: str, lang: str) -> str:
     return f"cast(({' + '.join(terms)}) as bigint)"
 
 
-def lang_score_exprs(text_col: str) -> dict[str, "F.Column"]:
-    return {lang: stopword_hits_expr(text_col, lang) for lang in STOPWORDS}
-
-
-def predicted_lang_expr(text_col: str) -> "F.Column":
-    """n-gram/stopword language-ID heuristic: argmax of per-language
-    stopword hits, ties broken by language code order; 'und' when all 0."""
-    scores = lang_score_exprs(text_col)
-    langs = sorted(scores)
-    pairs = [F.struct(scores[lg].alias("s"), F.lit(lg).alias("l")) for lg in langs]
-    # max_by over literal structs: greatest on (score, reversed-lang) —
-    # build with when-chains for exact tie semantics: first lang wins ties.
-    best = None
-    for lg in langs:
-        cond = None
-        for other in langs:
-            if other == lg:
-                continue
-            c = (
-                scores[lg] > scores[other]
-                if other < lg
-                else scores[lg] >= scores[other]
-            )
-            cond = c if cond is None else (cond & c)
-        best = (
-            F.when(cond & (scores[lg] > 0), F.lit(lg))
-            if best is None
-            else best.when(cond & (scores[lg] > 0), F.lit(lg))
-        )
-    return best.otherwise(F.lit("und"))
-
-
 def predicted_lang_sql(text_col: str) -> str:
+    """Stopword language-ID heuristic: argmax of per-language stopword
+    hits, ties to the first language code; 'und' when all are 0."""
     langs = sorted(STOPWORDS)
     scores = {lg: stopword_hits_sql(text_col, lg) for lg in langs}
     whens = []
@@ -258,26 +209,9 @@ def predicted_lang_sql(text_col: str) -> str:
 PUNCT_CHARS = ".,!?;:"
 
 
-def quality_exprs(text_col: str) -> dict[str, "F.Column"]:
-    """Quality-scoring signals: length, token count, punct ratio (over the
-    fixed class .,!?;:), mean token length — all native expressions."""
-    length = F.length(F.col(text_col))
-    tokens = token_count_expr(text_col)
-    stripped = F.col(text_col)
-    for ch in PUNCT_CHARS:
-        stripped = F.replace(stripped, F.lit(ch), F.lit(""))
-    punct = length - F.length(stripped)
-    return {
-        "n_chars_extracted": length.cast("long"),
-        "n_tokens": tokens.cast("long"),
-        "punct_ratio": F.round(punct / F.greatest(length, F.lit(1)), 4),
-        "mean_token_len": F.round(
-            (length - tokens + 1) / F.greatest(tokens, F.lit(1)), 2
-        ),
-    }
-
-
 def quality_sqls(text_col: str) -> dict[str, str]:
+    """Quality-scoring signals: length, token count, punct ratio (over the
+    fixed class .,!?;:) and mean token length."""
     length = f"length({text_col})"
     tokens = token_count_sql(text_col)
     stripped = text_col

@@ -7,7 +7,9 @@ content dedup). The reference has no URL ops (its entities key on UUID3,
 entity_processor.py:1155) — this module is part of the training-data
 pipeline surface the build brief adds. Everything is built from
 regexp_extract / split / array ops so it stays inside whole-stage
-codegen and has a 1:1 DuckDB twin for the q_canonical_url oracle.
+codegen. ``canonical_url_sql`` is written once in DuckDB SQL: the
+q_canonical_url oracle runs it as is, and the engine parses the same
+text with ``dialect.spark_col``.
 
 Canonical form (documented choices, applied in this order):
 
@@ -30,53 +32,6 @@ from __future__ import annotations
 from pyspark.sql import Column, functions as F
 
 
-def canonical_url_expr(col: Column) -> Column:
-    """Canonical URL as a native column expression (codegen-friendly)."""
-    u = F.regexp_replace(col, "#.*$", "")  # 1. fragment
-    scheme = F.lower(F.regexp_extract(u, "^([A-Za-z][A-Za-z0-9+.-]*)://", 1))
-    rest = F.regexp_replace(u, "^[A-Za-z][A-Za-z0-9+.-]*://", "")
-    hostport = F.regexp_extract(rest, "^([^/?]*)", 1)
-    pathq = F.regexp_replace(rest, "^[^/?]*", "")
-    # 2. drop userinfo (host starts after the LAST '@' of the authority)
-    hp = F.regexp_replace(hostport, "^.*@", "")
-    is_v6 = hp.startswith("[")
-    host = F.when(
-        is_v6, F.lower(F.regexp_extract(hp, "^(\\[[^\\]]*\\])", 1))
-    ).otherwise(
-        F.regexp_replace(
-            F.lower(F.regexp_extract(hp, "^([^:]*)", 1)), "\\.$", ""
-        )
-    )
-    port = F.when(
-        is_v6, F.regexp_extract(hp, "\\]:([0-9]+)$", 1)
-    ).otherwise(F.regexp_extract(hp, ":([0-9]+)$", 1))
-    keep_port = (
-        (port != "")
-        & ~((scheme == F.lit("http")) & (port == "80"))
-        & ~((scheme == F.lit("https")) & (port == "443"))
-    )
-    path = F.regexp_extract(pathq, "^([^?]*)", 1)
-    path = F.when(path == "", F.lit("/")).otherwise(path)
-    query = F.regexp_extract(pathq, "\\?(.*)$", 1)
-    params = F.array_sort(
-        F.filter(
-            F.split(query, "&"),
-            lambda p: (p != "") & ~p.startswith("utm_"),
-        )
-    )
-    qjoined = F.array_join(params, "&")
-    return F.concat(
-        scheme,
-        F.lit("://"),
-        host,
-        F.when(keep_port, F.concat(F.lit(":"), port)).otherwise(F.lit("")),
-        path,
-        F.when(qjoined != "", F.concat(F.lit("?"), qjoined)).otherwise(
-            F.lit("")
-        ),
-    )
-
-
 def url_host_expr(col: Column) -> Column:
     """Lowercased host (no userinfo, no port, no trailing dot) — the
     groupBy key for per-site statistics. Bracketed IPv6 literals are
@@ -95,9 +50,9 @@ def url_host_expr(col: Column) -> Column:
 
 
 def canonical_url_sql(col: str) -> str:
-    """DuckDB twin of canonical_url_expr — identical step order; RE2 and
-    Java regex agree on every pattern used (no lookaround, no classes
-    that differ)."""
+    """Canonical URL of SQL expression ``col``, in the step order above.
+    RE2 (DuckDB) and Java regex (Spark) agree on every pattern used: no
+    lookaround, no classes that differ."""
     u = f"regexp_replace({col}, '#.*$', '')"
     scheme = f"lower(regexp_extract({u}, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1))"
     rest = f"regexp_replace({u}, '^[A-Za-z][A-Za-z0-9+.-]*://', '')"

@@ -29,8 +29,9 @@ from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 from pyspark.sql.window import Window
 
 from .. import cells
+from ..functions.dialect import spark_col
 from ..geometry import EARTH_RADIUS_M, haversine_np
-from ..synth import haversine_expr
+from ..synth import haversine_sql
 
 # Ceiling for the collected facility dim — coordinate triples at ~24 B/row
 # put 2M rows at ~50 MB broadcast, the edge of worth-broadcasting; beyond
@@ -238,7 +239,7 @@ def knn_grid(
             ring_candidates(rows, ring, zoom)
             .join(fac, F.col("__ctile") == F.col("__ftile"))
             .withColumn(
-                "__dist", haversine_expr(F.col(lat), F.col(lon), F.col(flat), F.col(flon))
+                "__dist", spark_col(haversine_sql(lat, lon, flat, flon))
             )
         )
 
@@ -329,7 +330,7 @@ def topk_neighbors(
         ring_candidates(lt, row_ring, zoom)
         .join(rt, F.col("__ctile") == F.col("__rtile"), "inner")
         .withColumn(
-            "dist_m", haversine_expr(F.col(lat), F.col(lon), F.col(rlat), F.col(rlon))
+            "dist_m", spark_col(haversine_sql(lat, lon, rlat, rlon))
         )
         .where(F.col("dist_m") <= F.lit(max_distance_m))
         .drop("__ptile", "__rtile", "__ctile")

@@ -32,7 +32,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..synth import haversine_expr
+from ..functions.dialect import spark_col
+from ..synth import haversine_sql
 from .raster import RasterMeta, sample_bilinear
 
 EARTH_RADIUS_KM = 6371.0
@@ -121,13 +122,8 @@ def los_analyze(
 
     wseq = Window.partitionBy("link_id").orderBy("i")
     wall = Window.partitionBy("link_id")
-    seg_km = (
-        haversine_expr(
-            F.lag("lat").over(wseq), F.lag("lon").over(wseq),
-            F.col("lat"), F.col("lon"),
-        )
-        / 1000.0
-    )
+    lag = "lag({}) OVER (PARTITION BY link_id ORDER BY i)".format
+    seg_km = spark_col(haversine_sql(lag("lat"), lag("lon"), "lat", "lon")) / 1000.0
     samples = samples.withColumn("seg_km", F.coalesce(seg_km, F.lit(0.0)))
     samples = samples.withColumn(
         "distance_km",
@@ -265,8 +261,6 @@ def los_analyze_sql(
     verified by q_los). `links_values` is a VALUES list of
     (link_id, lon1, lat1, lon2, lat2, tx_height_m, rx_height_m,
     frequency_mhz) with repr() double literals."""
-    from ..synth import haversine_sql
-
     n = num_points
     denom_med = repr(2.0 * k_median * EARTH_RADIUS_KM)
     denom_min = repr(2.0 * k_min * EARTH_RADIUS_KM)
@@ -440,8 +434,8 @@ FROM res
 # Reference: processing/elevation/refractivity.py — the deterministic
 # fallback path (climate-zone LUT; the itur digital-map backend is a
 # network-installed optional the reference itself falls back from). The
-# whole model is pure arithmetic + CASE, so it runs as native column
-# expressions with exact DuckDB SQL twins.
+# whole model is pure arithmetic + CASE, written once as SQL: the DuckDB
+# oracle runs it as is and the engine parses it with ``spark_col``.
 
 # ΔN₁ medians (N-units/km), ITU-R P.453-14 Figures 4-7
 # (refractivity.py:_ZONE_DN1_MEDIAN)
@@ -464,40 +458,6 @@ def k_factor_from_dn1(dn1: float) -> float:
     return k if k > 0 else 4.0 / 3.0
 
 
-def climate_zone_expr(lat, lon):
-    """Native-column ITU climate zone (refractivity.py:classify_climate_zone
-    — latitude bands; arid-corridor longitude refinement for the
-    subtropical band: Sahara/Middle-East, Australian interior, Atacama)."""
-    abs_lat = F.abs(lat)
-    lon_norm = ((lon % 360) + 360) % 360
-    sahara = (lon_norm >= 340) | (lon_norm <= 60)
-    australia = (lon_norm >= 115) & (lon_norm <= 155) & (lat < 0)
-    atacama = (lon_norm >= 282) & (lon_norm <= 292) & (lat < 0)
-    return (
-        F.when(abs_lat >= 60.0, F.lit("polar"))
-        .when(abs_lat >= 35.0, F.lit("temperate"))
-        .when(
-            abs_lat >= 23.0,
-            F.when(sahara | australia | atacama, F.lit("subtropical_dry"))
-            .otherwise(F.lit("temperate")),
-        )
-        .otherwise(F.lit("tropical"))
-    )
-
-
-def k_factor_median_expr(lat, lon):
-    """Median effective-Earth-radius factor per location (zone LUT →
-    k_factor_from_dn1; constants folded in Python so the SQL twin embeds
-    identical doubles)."""
-    zone = climate_zone_expr(lat, lon)
-    expr = F.lit(k_factor_from_dn1(ZONE_DN1_MEDIAN["tropical"]))
-    for name in ("subtropical_dry", "temperate", "polar"):
-        expr = F.when(
-            zone == name, F.lit(k_factor_from_dn1(ZONE_DN1_MEDIAN[name]))
-        ).otherwise(expr)
-    return expr
-
-
 def k_factor_worst_expr(path_length_km):
     """Worst-case (sub-refractive) k per link length (refractivity.py:
     get_worst_case_k_factor — ITU-R P.530 clearance tiers)."""
@@ -509,7 +469,9 @@ def k_factor_worst_expr(path_length_km):
 
 
 def climate_zone_sql(lat_sql: str, lon_sql: str) -> str:
-    """DuckDB twin of climate_zone_expr (identical thresholds/corridors)."""
+    """ITU climate zone per location (refractivity.py:classify_climate_zone
+    — latitude bands; arid-corridor longitude refinement for the
+    subtropical band: Sahara/Middle-East, Australian interior, Atacama)."""
     ln = f"((( {lon_sql} ) % 360 + 360) % 360)"
     arid = (
         f"(({ln} >= 340 OR {ln} <= 60) "
@@ -526,7 +488,8 @@ def climate_zone_sql(lat_sql: str, lon_sql: str) -> str:
 
 
 def k_factor_median_sql(lat_sql: str, lon_sql: str) -> str:
-    """DuckDB twin of k_factor_median_expr — same folded double constants."""
+    """Median effective-Earth-radius factor per location (zone LUT →
+    k_factor_from_dn1, folded in Python into double literals)."""
     zone = climate_zone_sql(lat_sql, lon_sql)
     cases = " ".join(
         f"WHEN '{name}' THEN {k_factor_from_dn1(dn1)!r}"

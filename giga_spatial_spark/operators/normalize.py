@@ -18,6 +18,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
+from ..functions.dialect import spark_col
+
 # subset of the reference's sentinel list (shared.py:228-276)
 NULL_SENTINELS = [
     "", "na", "n/a", "nan", "null", "none", "-", "--", "unknown", "missing",
@@ -31,55 +33,25 @@ def nfkc_strip(s: pd.Series) -> pd.Series:
     )
 
 
-def clean_string_expr(col: Column) -> Column:
-    """trim + lower + null-sentinel coercion (native part of the pipeline)."""
-    c = F.lower(F.trim(col))
-    return F.when(c.isin(NULL_SENTINELS), F.lit(None)).otherwise(c)
+def quote_ident(name: str) -> str:
+    """Column name ``name`` as a quoted SQL identifier (DuckDB syntax;
+    ``spark_col`` turns it into Spark's backquotes)."""
+    return '"' + name.replace('"', '""') + '"'
 
 
 def clean_string_sql(col: str) -> str:
+    """trim + lower + null-sentinel coercion (native part of the pipeline)."""
     sentinels = ", ".join(f"'{s}'" for s in NULL_SENTINELS)
     c = f"lower(trim({col}))"
     return f"(CASE WHEN {c} IN ({sentinels}) THEN NULL ELSE {c} END)"
 
 
-def normalize_enum_expr(
-    col: Column, alias_map: dict[str, str], unknown: str = "keep"
-) -> Column:
+def normalize_enum_sql(col: str, alias_map: dict[str, str], unknown: str = "keep") -> str:
     """Enum alias normalization (reference entity_processor.py:616-751 with
     alias maps from core/schemas/shared.py:79-225): clean (trim/lower/
-    sentinel→NULL) then canonicalize through a literal map — Catalyst folds
-    the CASE, so this stays inside whole-stage codegen. unknown='keep'
-    passes unrecognized cleaned values through; 'null' rejects them."""
-    c = clean_string_expr(col)
-    mapping = F.create_map(*[F.lit(x) for kv in alias_map.items() for x in kv])
-    hit = F.element_at(mapping, c)
-    if unknown == "keep":
-        return F.coalesce(hit, c)
-    return F.when(c.isNull(), F.lit(None)).otherwise(hit)
-
-
-def normalize_enum_collection_expr(
-    col: Column, alias_map: dict[str, str], delim: str = ","
-) -> Column:
-    """Delimited-collection variant (reference normalizes each element of
-    'a; b; c' cells, entity_processor.py:700-751): split → per-element
-    clean+alias → drop NULLed elements → rejoin; an all-null/empty cell
-    becomes NULL."""
-    mapping = F.create_map(*[F.lit(x) for kv in alias_map.items() for x in kv])
-
-    def elem(x: Column) -> Column:
-        c = F.lower(F.trim(x))
-        c = F.when(c.isin(NULL_SENTINELS), F.lit(None)).otherwise(c)
-        return F.coalesce(F.element_at(mapping, c), c)
-
-    arr = F.filter(F.transform(F.split(col, delim), elem), lambda v: v.isNotNull())
-    joined = F.array_join(arr, delim)
-    return F.when(F.size(arr) == 0, F.lit(None)).otherwise(joined)
-
-
-def normalize_enum_sql(col: str, alias_map: dict[str, str], unknown: str = "keep") -> str:
-    """DuckDB twin of normalize_enum_expr."""
+    sentinel→NULL) then canonicalize through a literal CASE, which stays
+    inside whole-stage codegen. unknown='keep' passes unrecognized cleaned
+    values through; 'null' rejects them."""
     cleaned = clean_string_sql(col)
     cases = " ".join(f"WHEN '{k}' THEN '{v}'" for k, v in alias_map.items())
     fallback = cleaned if unknown == "keep" else "NULL"
@@ -87,7 +59,10 @@ def normalize_enum_sql(col: str, alias_map: dict[str, str], unknown: str = "keep
 
 
 def normalize_enum_collection_sql(col: str, alias_map: dict[str, str], delim: str = ",") -> str:
-    """DuckDB twin of normalize_enum_collection_expr."""
+    """Delimited-collection variant (reference normalizes each element of
+    'a; b; c' cells, entity_processor.py:700-751): split on the literal
+    ``delim`` → per-element clean+alias → drop NULLed elements → rejoin;
+    an all-null/empty cell becomes NULL."""
     elem = normalize_enum_sql("x", alias_map)
     arr = (
         f"list_filter(list_transform(string_split({col}, '{delim}'), "
@@ -96,10 +71,11 @@ def normalize_enum_collection_sql(col: str, alias_map: dict[str, str], delim: st
     return f"nullif(array_to_string({arr}, '{delim}'), '')"
 
 
-def titlecase_admin_expr(col: Column) -> Column:
-    """Admin-name title-casing with unknown→NULL (reference entity.py:138-148):
-    clean (which already nulls the 'unknown' sentinel) then initcap."""
-    return F.initcap(clean_string_expr(col))
+def titlecase_admin_expr(col: str) -> Column:
+    """Admin-name title-casing of SQL expression ``col`` with unknown→NULL
+    (reference entity.py:138-148): clean (which already nulls the 'unknown'
+    sentinel) then initcap."""
+    return F.initcap(spark_col(clean_string_sql(col)))
 
 
 # complete ISO 3166-1 registry (iso3166.py: every assigned entry — names,
@@ -150,13 +126,14 @@ def register_country(name: str, iso3: str) -> None:
     ISO3_REGISTRY[name.strip().lower()] = iso3.upper()
 
 
-def iso3_expr(col: Column) -> Column:
-    """Country name → ISO3 (NULL when unrecognized). Already-ISO3 inputs
-    (3 uppercase letters) pass through. Column-expression form: embeds the
-    whole registry (~760 literals) into codegen, which costs ~3 s of
-    constant plan/compile time — fine for one-off small frames; pipelines
-    should use with_iso3 (broadcast dim join, same semantics)."""
-    c = clean_string_expr(col)
+def iso3_expr(col: str) -> Column:
+    """Country name in SQL expression ``col`` → ISO3 (NULL when
+    unrecognized). Already-ISO3 inputs (3 uppercase letters) pass through.
+    Column-expression form: embeds the whole registry (~760 literals) into
+    codegen, which costs ~3 s of constant plan/compile time — fine for
+    one-off small frames; pipelines should use with_iso3 (broadcast dim
+    join, same semantics)."""
+    c = spark_col(clean_string_sql(col))
     mapping = F.create_map(*[F.lit(x) for kv in ISO3_REGISTRY.items() for x in kv])
     passthrough = F.when(
         F.upper(c).rlike("^[A-Z]{3}$") & F.upper(c).isin(
@@ -193,7 +170,7 @@ def with_iso3(df: DataFrame, name_col: str, out_col: str = "iso3") -> DataFrame:
         iso3_lookup_rows(), "__iso3_key string, __iso3_val string"
     )
     return (
-        df.withColumn("__iso3_key", clean_string_expr(F.col(name_col)))
+        df.withColumn("__iso3_key", spark_col(clean_string_sql(quote_ident(name_col))))
         .join(F.broadcast(dim), "__iso3_key", "left")
         .withColumn(out_col, F.col("__iso3_val"))
         .drop("__iso3_key", "__iso3_val")
@@ -273,7 +250,7 @@ def normalize_table(
     keep='first')."""
     out = df
     for c in string_cols:
-        out = out.withColumn(c, clean_string_expr(F.col(c)))
+        out = out.withColumn(c, spark_col(clean_string_sql(quote_ident(c))))
     out = out.dropna(how="all", subset=string_cols)
     if dedup_cols:
         out = out.dropDuplicates(dedup_cols)

@@ -8,11 +8,11 @@ dataset family. Steps map 1:1:
   1 rename/alias columns          → select with rename_map
   2 lowercase column names        → toDF(lowered)
   3 NFKC strip                    → normalize.nfkc_strip (Arrow UDF)
-  4 null-sentinel coercion        → normalize.clean_string_expr
+  4 null-sentinel coercion        → normalize.clean_string_sql
   5 merged-coordinate repair      → normalize.repair_merged_coords
   6 numeric coercion              → try_cast (never throws; bad → NULL)
-  7 enum alias normalization      → normalize.normalize_enum_expr
-  8 delimited-collection enums    → normalize.normalize_enum_collection_expr
+  7 enum alias normalization      → normalize.normalize_enum_sql
+  8 delimited-collection enums    → normalize.normalize_enum_collection_sql
   9 admin title-casing            → normalize.titlecase_admin_expr
  10 coordinate validation         → normalize.validate_coords mask
  11 deterministic entity id       → entity.with_entity_id (UUID3)
@@ -20,6 +20,8 @@ dataset family. Steps map 1:1:
 
 Every stage is a column expression (steps 3 and 11 are Arrow-batched UDFs),
 so the whole pipeline is one Catalyst plan — no per-step materialization.
+The ``*_sql`` steps are the same SQL text the DuckDB oracles run, parsed
+for Spark by ``functions.dialect.spark_col``.
 
 Subclasses override the config (or hooks) and register themselves:
 
@@ -38,11 +40,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .entity import with_entity_id
+from .functions.dialect import spark_col
 from .operators.normalize import (
-    clean_string_expr,
+    clean_string_sql,
     nfkc_strip,
-    normalize_enum_collection_expr,
-    normalize_enum_expr,
+    normalize_enum_collection_sql,
+    normalize_enum_sql,
+    quote_ident,
     repair_merged_coords,
     titlecase_admin_expr,
     validate_coords,
@@ -115,7 +119,7 @@ class EntityProcessor:
         for c in cfg.nfkc_columns:
             out = out.withColumn(c, nfkc_strip(F.col(c)))
         for c in cfg.string_columns:
-            out = out.withColumn(c, clean_string_expr(F.col(c)))
+            out = out.withColumn(c, spark_col(clean_string_sql(quote_ident(c))))
         if cfg.merged_coord_column:
             out = repair_merged_coords(
                 out, cfg.merged_coord_column, cfg.lat_col, cfg.lon_col
@@ -123,13 +127,13 @@ class EntityProcessor:
         for c in cfg.numeric_columns:
             out = out.withColumn(c, F.col(c).try_cast("double"))
         for c, aliases in cfg.enum_aliases.items():
-            out = out.withColumn(c, normalize_enum_expr(F.col(c), aliases))
+            sql = normalize_enum_sql(quote_ident(c), aliases)
+            out = out.withColumn(c, spark_col(sql))
         for c, (aliases, delim) in cfg.collection_columns.items():
-            out = out.withColumn(
-                c, normalize_enum_collection_expr(F.col(c), aliases, delim)
-            )
+            sql = normalize_enum_collection_sql(quote_ident(c), aliases, delim)
+            out = out.withColumn(c, spark_col(sql))
         for c in cfg.titlecase_columns:
-            out = out.withColumn(c, titlecase_admin_expr(F.col(c)))
+            out = out.withColumn(c, titlecase_admin_expr(quote_ident(c)))
         if cfg.validate_coordinates:
             out = validate_coords(out, cfg.lat_col, cfg.lon_col)
         if cfg.id_source_columns:

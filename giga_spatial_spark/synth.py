@@ -18,9 +18,10 @@ from __future__ import annotations
 import math
 
 import numpy as np
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .functions.dialect import spark_col
 from .geometry import EARTH_RADIUS_M
 from .sources.readers import read_parquet
 
@@ -29,14 +30,6 @@ LAT_MULT, LAT_MOD = 104729, 16000
 
 
 # ------------------------------------------------------------- geocoding
-def lon_expr(key: Column) -> Column:
-    return ((key * F.lit(LON_MULT)) % F.lit(LON_MOD)) / F.lit(100.0) - F.lit(180.0)
-
-
-def lat_expr(key: Column) -> Column:
-    return ((key * F.lit(LAT_MULT)) % F.lit(LAT_MOD)) / F.lit(100.0) - F.lit(80.0)
-
-
 def lon_sql(key: str) -> str:
     return f"((({key} * {LON_MULT}) % {LON_MOD}) / 100.0 - 180.0)"
 
@@ -54,22 +47,13 @@ def lat_np(key) -> np.ndarray:
 
 
 def with_coords(df: DataFrame, key: str, lon: str = "lon", lat: str = "lat") -> DataFrame:
-    return df.withColumn(lon, lon_expr(F.col(key))).withColumn(lat, lat_expr(F.col(key)))
+    return df.withColumn(lon, spark_col(lon_sql(key))).withColumn(lat, spark_col(lat_sql(key)))
 
 
 # ------------------------------------------------------------- haversine
-def haversine_expr(lat1: Column, lon1: Column, lat2: Column, lon2: Column) -> Column:
-    """Native-column haversine, formula parity with reference geo.py:561-581."""
-    rlat1, rlon1 = F.radians(lat1), F.radians(lon1)
-    rlat2, rlon2 = F.radians(lat2), F.radians(lon2)
-    a = (
-        F.pow(F.sin((rlat2 - rlat1) / 2), 2)
-        + F.cos(rlat1) * F.cos(rlat2) * F.pow(F.sin((rlon2 - rlon1) / 2), 2)
-    )
-    return F.lit(2 * EARTH_RADIUS_M) * F.asin(F.sqrt(a))
-
-
 def haversine_sql(lat1: str, lon1: str, lat2: str, lon2: str) -> str:
+    """Great-circle metres between two SQL points, formula parity with
+    reference geo.py:561-581 (the engine's Column is ``spark_col`` of it)."""
     a = (
         f"(pow(sin((radians({lat2}) - radians({lat1}))/2), 2)"
         f" + cos(radians({lat1})) * cos(radians({lat2}))"
@@ -162,8 +146,8 @@ def facilities_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     sup = read_parquet(spark, f"{sf_dir}/supplier.parquet")
     return sup.select(
         F.col("s_suppkey").alias("facility_id"),
-        lon_expr(F.col("s_suppkey")).alias("flon"),
-        lat_expr(F.col("s_suppkey")).alias("flat"),
+        spark_col(lon_sql("s_suppkey")).alias("flon"),
+        spark_col(lat_sql("s_suppkey")).alias("flat"),
     )
 
 
@@ -184,8 +168,8 @@ def parcels_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     Box geometry keeps the fractional-overlay oracle exact in SQL."""
     part = read_parquet(spark, f"{sf_dir}/part.parquet")
     half = F.col("p_size") / F.lit(10.0)
-    cx = lon_expr(F.col("p_partkey"))
-    cy = lat_expr(F.col("p_partkey"))
+    cx = spark_col(lon_sql("p_partkey"))
+    cy = spark_col(lat_sql("p_partkey"))
     return part.select(
         F.col("p_partkey").alias("parcel_id"),
         (cx - half).alias("pminx"),

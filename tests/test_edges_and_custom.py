@@ -174,17 +174,15 @@ def test_entity_gold_flow(spark):
 def test_canonical_url_expr_and_sql_twin(spark):
     """URL canonicalization: scheme/host case, default-port strip,
     empty-path slash, trailing host dot, utm_* removal, parameter
-    sorting, fragment strip — Spark native expression and the DuckDB
-    twin produce the identical canonical string for every tricky case."""
+    sorting, fragment strip — the Spark Column parsed from
+    canonical_url_sql and DuckDB running the same text produce the
+    identical, hand-written canonical string for every tricky case."""
     import duckdb
     import pandas as pd
     from pyspark.sql import functions as F
 
-    from giga_spatial_spark.functions.url import (
-        canonical_url_expr,
-        canonical_url_sql,
-        url_host_expr,
-    )
+    from giga_spatial_spark.functions.dialect import spark_col
+    from giga_spatial_spark.functions.url import canonical_url_sql, url_host_expr
 
     cases = [
         ("HTTPS://WWW.Example.COM:443/a/b?z=1&a=2#frag",
@@ -207,7 +205,7 @@ def test_canonical_url_expr_and_sql_twin(spark):
     ]
     df = spark.createDataFrame([(u,) for u, _ in cases], "url string")
     got = (
-        df.select("url", canonical_url_expr(F.col("url")).alias("c"))
+        df.select("url", spark_col(canonical_url_sql("url")).alias("c"))
         .toPandas().set_index("url")["c"]
     )
     for u, want in cases:
@@ -305,12 +303,9 @@ def test_canonical_url_cross_engine_fuzz(spark):
     import duckdb
     import numpy as np
     import pandas as pd
-    from pyspark.sql import functions as F
 
-    from giga_spatial_spark.functions.url import (
-        canonical_url_expr,
-        canonical_url_sql,
-    )
+    from giga_spatial_spark.functions.dialect import spark_col
+    from giga_spatial_spark.functions.url import canonical_url_sql
 
     rs = np.random.RandomState(11)
     schemes = ["http", "HTTP", "https", "HTTPS", "ftp", "a+b-c."]
@@ -333,7 +328,7 @@ def test_canonical_url_cross_engine_fuzz(spark):
             u += chr(rs.randint(33, 127))
         urls.append(u)
     df = spark.createDataFrame([(u,) for u in urls], "url string")
-    got = df.select("url", canonical_url_expr(F.col("url")).alias("c")).toPandas()
+    got = df.select("url", spark_col(canonical_url_sql("url")).alias("c")).toPandas()
     con = duckdb.connect()
     con.register("t", pd.DataFrame({"url": urls}))
     sql = con.execute(f"SELECT url, {canonical_url_sql('url')} AS c FROM t").df()

@@ -285,7 +285,8 @@ def test_streaming_url_dedup_equals_batch(spark):
     fetch/extract, keyed by canonical URL."""
     import pandas as pd
 
-    from giga_spatial_spark.functions.url import canonical_url_expr
+    from giga_spatial_spark.functions.dialect import spark_col
+    from giga_spatial_spark.functions.url import canonical_url_sql
 
     tmp = tempfile.mkdtemp(prefix="stream_url_")
     try:
@@ -304,7 +305,7 @@ def test_streaming_url_dedup_equals_batch(spark):
         )
         schema = "rid bigint, url string"
         stream = spark.readStream.schema(schema).format("parquet").load(src_dir)
-        canon = stream.withColumn("curl", canonical_url_expr(F.col("url")))
+        canon = stream.withColumn("curl", spark_col(canonical_url_sql("url")))
         out = canon.dropDuplicates(["curl"])
         q = (
             out.writeStream.format("memory")

@@ -144,3 +144,28 @@ def test_determinism_of_ids(spark):
     id1 = P()(df).collect()[0]["entity_id"]
     id2 = P()(df).collect()[0]["entity_id"]
     assert id1 == id2
+
+
+@pytest.mark.parametrize("delim", ["|", "."])
+def test_collection_delimiter_is_literal(spark, delim):
+    """A collection column splits on its delimiter as a literal string on
+    Spark, as DuckDB's string_split does in the oracle builder: a regex
+    split would treat '|' as an empty alternation and '.' as any char."""
+    import duckdb
+    import pandas as pd
+
+    from giga_spatial_spark.operators.normalize import normalize_enum_collection_sql
+
+    aliases = {"a": "alpha", "b": "beta"}
+    cells = [f"A,b {delim}n/a{delim}0{delim}{delim} x.y|z ", "A,b ,n/a,0|x", None]
+    proc = EntityProcessor()
+    proc.config = EntityProcessorConfig(collection_columns={"v": (aliases, delim)})
+    df = spark.createDataFrame(list(enumerate(cells)), "i int, v string")
+    got = [r["v"] for r in proc(df).orderBy("i").collect()]
+    con = duckdb.connect()
+    con.register("t", pd.DataFrame({"i": range(len(cells)), "v": cells}))
+    sql = normalize_enum_collection_sql("v", aliases, delim)
+    want = [r[0] for r in con.execute(f"SELECT {sql} FROM t ORDER BY i").fetchall()]
+    assert got == want
+    first = {"|": "a,b|0|x.y|z", ".": "a,b.0.x.y|z"}[delim]
+    assert got == [first, "a,b ,n/a,0|x", None]

@@ -2,7 +2,6 @@
 helpers (title-casing, ISO3, coord-column detection, coverage stats)."""
 
 import numpy as np
-from pyspark.sql import functions as F
 
 from giga_spatial_spark.functions.utm import (
     buffer_point_utm,
@@ -128,16 +127,16 @@ def test_admin_helpers(spark):
     df = spark.createDataFrame(
         [("  new york ",), ("UNKNOWN",), ("sÃo paulo",)], "admin1 string"
     )
-    out = [r[0] for r in df.select(titlecase_admin_expr(F.col("admin1"))).collect()]
+    out = [r[0] for r in df.select(titlecase_admin_expr("admin1")).collect()]
     assert out[0] == "New York" and out[1] is None
 
     c = spark.createDataFrame(
         [("Kenya",), ("united KINGDOM ",), ("USA",), ("Atlantis",)], "country string"
     )
-    got = [r[0] for r in c.select(iso3_expr(F.col("country"))).collect()]
+    got = [r[0] for r in c.select(iso3_expr("country")).collect()]
     assert got == ["KEN", "GBR", "USA", None]
     register_country("Atlantis", "ATL")
-    got2 = [r[0] for r in c.select(iso3_expr(F.col("country"))).collect()]
+    got2 = [r[0] for r in c.select(iso3_expr("country")).collect()]
     assert got2[-1] == "ATL"
 
 
@@ -234,8 +233,6 @@ def test_iso3166_full_registry(spark):
     """Every UN member state resolves from at least one name; alpha-2
     entries resolve; the seed aliases never conflict with the standard
     table; accented official spellings resolve."""
-    from pyspark.sql import functions as F
-
     from giga_spatial_spark import iso3166
     from giga_spatial_spark.operators.normalize import (
         ISO3_REGISTRY, _ISO3_SEED, iso3_expr,
@@ -252,7 +249,7 @@ def test_iso3166_full_registry(spark):
         [("Côte d'Ivoire",), ("ng",), ("Kiribati",), ("nowhere",)],
         "country string",
     )
-    got = [r[0] for r in df.select(iso3_expr(F.col("country"))).collect()]
+    got = [r[0] for r in df.select(iso3_expr("country")).collect()]
     assert got == ["CIV", "NGA", "KIR", None]
 
 
@@ -260,8 +257,6 @@ def test_with_iso3_matches_expr(spark):
     """The broadcast-dim join path (with_iso3, the scale path) agrees with
     the literal create_map expression on every registry key, every code
     passthrough (any case), junk, and NULL sentinels."""
-    from pyspark.sql import functions as F
-
     from giga_spatial_spark.operators.normalize import (
         ISO3_REGISTRY, iso3_expr, with_iso3,
     )
@@ -274,7 +269,7 @@ def test_with_iso3_matches_expr(spark):
         (
             (r["country"], r["iso3"])
             for r in df.select(
-                "country", iso3_expr(F.col("country")).alias("iso3")
+                "country", iso3_expr("country").alias("iso3")
             ).collect()
         ),
         key=key,
