@@ -41,6 +41,7 @@ from giga_spatial_spark.operators.normalize import clean_string_sql
 from giga_spatial_spark.operators.overlay import fractional_overlay_boxes
 from giga_spatial_spark.operators.pip_join import pip_join_native, pip_join_rtree
 from giga_spatial_spark.operators.range_join import proximity_dedup_exists
+from giga_spatial_spark.session import local_df
 from giga_spatial_spark.sources.readers import read_parquet
 
 SF0001 = "/root/testdata/sf0.001"
@@ -140,8 +141,8 @@ def q_pip_tag_rtree(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _admin_zones_dim(spark: SparkSession) -> DataFrame:
     """One row per admin zone: the zone dim the zonal queries fill onto."""
-    return spark.createDataFrame(
-        [(zid,) for zid in sorted(ADMIN_POLYS)], "zone_id int"
+    return local_df(
+        spark, [(zid,) for zid in sorted(ADMIN_POLYS)], "zone_id int"
     )
 
 
@@ -232,8 +233,8 @@ def q_simplify(spark: SparkSession, sf_dir: str) -> DataFrame:
             np.round(out[:, 0] * 1e6).sum() + np.round(out[:, 1] * 1e6).sum()
         )
         rows.append((zid, len(out), checksum))
-    return spark.createDataFrame(
-        rows, "zone_id bigint, n_kept bigint, checksum bigint"
+    return local_df(
+        spark, rows, "zone_id bigint, n_kept bigint, checksum bigint"
     )
 
 
@@ -320,7 +321,7 @@ def q_url_blocklist(spark: SparkSession, sf_dir: str) -> DataFrame:
     urls = docs.withColumn("url", _messy_url_expr()).withColumn(
         "host", url_host_expr(F.col("url"))
     )
-    bl = spark.createDataFrame([(e,) for e in BLOCKLIST], "entry string")
+    bl = local_df(spark, [(e,) for e in BLOCKLIST], "entry string")
     kept = filter_blocklisted(urls, bl, host_col="host", id_col="doc_id")
     return kept.groupBy("host").agg(F.count(F.lit(1)).alias("n_kept"))
 
@@ -436,7 +437,7 @@ def q_hex_ring(spark: SparkSession, sf_dir: str) -> DataFrame:
     from giga_spatial_spark import cells_h3
 
     _, ring = _h3_ring_cells()
-    cover = spark.createDataFrame([(c,) for c in ring], "h3_cell long")
+    cover = local_df(spark, [(c,) for c in ring], "h3_cell long")
     pts = _docs_pts(spark, sf_dir).select("doc_id", "lon", "lat")
     tagged = cells_h3.assign_cells_df(pts, HEX_RING_RES)
     return (
@@ -616,7 +617,8 @@ def q_admin_annotate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pts = _docs_pts(spark, sf_dir).select("doc_id", "lon", "lat")
     matches = pip_join_native(pts, ADMIN_POLYS, zoom=PIP_ZOOM)
-    cents = spark.createDataFrame(
+    cents = local_df(
+        spark,
         [(zid, *polygon_centroid(poly)) for zid, poly in sorted(ADMIN_POLYS.items())],
         "zone_id int, cx double, cy double",
     )
@@ -1384,8 +1386,8 @@ def q_quadkey_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cover = _bounded_cover_collect(qk.select("qk").union(sib), TILE_ZOOM)
     compacted = cells.compact_quadkeys(cover)
-    return spark.createDataFrame(
-        [(q, len(q)) for q in compacted], "qk string, zoom bigint"
+    return local_df(
+        spark, [(q, len(q)) for q in compacted], "qk string, zoom bigint"
     )
 
 
@@ -1484,8 +1486,8 @@ def q_utm_buffer(spark: SparkSession, sf_dir: str) -> DataFrame:
                     int(np.floor(ring[i, 1] * 1e6 + 0.5)),
                 )
             )
-    return spark.createDataFrame(
-        rows, "probe_id bigint, idx bigint, lon_micro bigint, lat_micro bigint"
+    return local_df(
+        spark, rows, "probe_id bigint, idx bigint, lon_micro bigint, lat_micro bigint"
     )
 
 
@@ -1538,7 +1540,7 @@ def q_utm_area(spark: SparkSession, sf_dir: str) -> DataFrame:
         (zid, int(np.floor(polygon_area_utm(p) / 1e6 + 0.5)))
         for zid, p in sorted(ADMIN_POLYS.items())
     ]
-    return spark.createDataFrame(rows, "zone_id bigint, area_km2 bigint")
+    return local_df(spark, rows, "zone_id bigint, area_km2 bigint")
 
 
 def _utm_area_sql() -> str:
@@ -1593,7 +1595,7 @@ def q_geom_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         for zid, p in sorted(ADMIN_POLYS.items())
         for i in range(len(p))
     ]
-    v = spark.createDataFrame(rows, "zone_id bigint, idx bigint, x double, y double")
+    v = local_df(spark, rows, "zone_id bigint, idx bigint, x double, y double")
     w = Window.partitionBy("zone_id").orderBy("idx")
     wa = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     vv = v.select(
@@ -2695,8 +2697,8 @@ def q_grid_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     mercator_tiles.py:231-253): docs whose zoom-4 quadkey is in a cover set."""
     pts = _docs_pts(spark, sf_dir)
     qk = cells.quadkey(F.col("lon"), F.col("lat"), 4)
-    cover = spark.createDataFrame(
-        [(q,) for q in GRID_FILTER_QUADKEYS], "qk string"
+    cover = local_df(
+        spark, [(q,) for q in GRID_FILTER_QUADKEYS], "qk string"
     )
     tagged = pts.withColumn("qk", qk)
     return (
@@ -2897,8 +2899,8 @@ def q_iso3(spark: SparkSession, sf_dir: str) -> DataFrame:
     from giga_spatial_spark.operators.normalize import with_iso3
 
     nation = read_parquet(spark, f"{sf_dir}/nation.parquet")
-    names = spark.createDataFrame(
-        [(i, n) for i, n in enumerate(ISO3_TEST_NAMES)],
+    names = local_df(
+        spark, [(i, n) for i, n in enumerate(ISO3_TEST_NAMES)],
         "n_nationkey bigint, country string",
     )
     pts = nation.select("n_nationkey").join(F.broadcast(names), "n_nationkey")
@@ -2919,7 +2921,7 @@ def q_pip_wkb(spark: SparkSession, sf_dir: str) -> DataFrame:
         (zid, bytearray(wkb.dump_polygon(poly)))
         for zid, poly in sorted(ADMIN_POLYS.items())
     ]
-    zdf = spark.createDataFrame(rows, "zone_id int, geom binary")
+    zdf = local_df(spark, rows, "zone_id int, geom binary")
     parsed = wkb.with_parsed_rings(zdf, "geom", "rings").select("zone_id", "rings")
     polys = {
         r["zone_id"]: np.asarray(r["rings"][0], dtype=np.float64)
@@ -2944,7 +2946,7 @@ def q_pip_wkt(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = [
         (zid, _wkt.polygon_wkt(poly)) for zid, poly in sorted(ADMIN_POLYS.items())
     ]
-    zdf = spark.createDataFrame(rows, "zone_id int, wkt string")
+    zdf = local_df(spark, rows, "zone_id int, wkt string")
 
     @F.pandas_udf("array<array<array<double>>>")
     def parse(col: pd.Series) -> pd.Series:
@@ -3131,8 +3133,8 @@ def q_los(spark: SparkSession, sf_dir: str) -> DataFrame:
     from giga_spatial_spark.operators.los import los_analyze
     from giga_spatial_spark.operators.raster import RasterMeta, synthetic_raster
 
-    links = spark.createDataFrame(
-        _los_links(),
+    links = local_df(
+        spark, _los_links(),
         "link_id long, lon1 double, lat1 double, lon2 double, lat2 double, "
         "tx_height_m double, rx_height_m double, frequency_mhz double",
     )
@@ -3195,7 +3197,7 @@ def q_polyfill_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             np.asarray(poly, dtype=np.float64), PF_RES, mode="overlap"
         ).tolist():
             rows.append((pid, int(c)))
-    cov = spark.createDataFrame(rows, "poly_id int, h3_cell bigint")
+    cov = local_df(spark, rows, "poly_id int, h3_cell bigint")
     pts = _docs_pts(spark, sf_dir).select("doc_id", "lon", "lat")
     counts = (
         cells_h3.assign_cells_df(pts, PF_RES)
@@ -3378,7 +3380,7 @@ def q_hex_zonal(spark: SparkSession, sf_dir: str) -> DataFrame:
     equal to center-mode polyfill by definition."""
     from giga_spatial_spark import cells_h3
 
-    cover = spark.createDataFrame(_hex_cover_rows(), "h3_cell long")
+    cover = local_df(spark, _hex_cover_rows(), "h3_cell long")
     pts = _docs_pts(spark, sf_dir).select("doc_id", "lon", "lat")
     tagged = cells_h3.assign_cells_df(pts, H3_ZONAL_RES)
     return (
@@ -3430,8 +3432,8 @@ def q_tile_zonal(spark: SparkSession, sf_dir: str) -> DataFrame:
     centers via the inverse mercator transform in SQL
     (cells.tile_center_sql) ray-cast against each polygon — equal to
     center-mode polyfill by definition."""
-    member = spark.createDataFrame(
-        _tile_member_rows(), "tile bigint, zone_id int"
+    member = local_df(
+        spark, _tile_member_rows(), "tile bigint, zone_id int"
     )
     pts = _docs_pts(spark, sf_dir)
     tagged = pts.withColumn(
@@ -3476,8 +3478,8 @@ def q_s2_zonal(spark: SparkSession, sf_dir: str) -> DataFrame:
     the unrolled INVERSE Hilbert transform in SQL
     (cells_s2.cell_center_sql) recomputes each cell's center, ray-cast
     against every polygon."""
-    member = spark.createDataFrame(
-        _s2_member_rows(), "s2_cell long, zone_id int"
+    member = local_df(
+        spark, _s2_member_rows(), "s2_cell long, zone_id int"
     )
     pts = _docs_pts(spark, sf_dir)
     tagged = cells_s2.assign_cells_df(pts, 6)

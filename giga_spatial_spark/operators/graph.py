@@ -203,6 +203,7 @@ def _cc_label_prop(spark, edge_pdf, e: DataFrame, nodes, node_col: str):
     (pytest-asserted vs the distributed path) but O(E) numpy passes per
     round instead of a Python loop per edge."""
     import numpy as np
+    import pyarrow as pa
 
     u = edge_pdf["u"].to_numpy(dtype=np.int64)
     v = edge_pdf["v"].to_numpy(dtype=np.int64)
@@ -253,18 +254,8 @@ def _cc_label_prop(spark, edge_pdf, e: DataFrame, nodes, node_col: str):
         if np.array_equal(l2, label):
             break
         label = l2
-    labels = len(ids)
-    if labels:
-        import pandas as pd
-
-        lab = spark.createDataFrame(
-            pd.DataFrame({"node": ids, "comp": ids[label]}),
-            "node long, comp long",
-        )
-    else:
-        lab = spark.createDataFrame([(-1, -1)], "node long, comp long").where(
-            F.lit(False)
-        )
+    # already columnar (up to 2 × small_graph_limit nodes): straight to Arrow
+    lab = spark.createDataFrame(pa.table({"node": ids, "comp": ids[label]}))
     if nodes is None:
         node_df = e.select(F.col("src").alias("node")).unionByName(
             e.select(F.col("dst").alias("node"))

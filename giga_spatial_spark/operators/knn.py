@@ -41,6 +41,14 @@ BROADCAST_FACILITY_LIMIT = 2_000_000
 M_PER_DEG = 111194.9  # ground metres per degree of arc, rounded down
 
 
+def _wedge_m(lat: str, r: int, tile_deg: float) -> str:
+    """Lower bound (m) on the distance from a row at latitude `lat` to
+    anything beyond r tile columns: the great-circle distance to the
+    longitude wedge r * tile_deg away, which holds over the pole too."""
+    gap = math.sin(math.radians(min(r * tile_deg, 90.0)))
+    return f"{EARTH_RADIUS_M!r}D * asin(cos(radians(`{lat}`)) * {gap!r}D)"
+
+
 def ring_candidates(
     df: DataFrame,
     ring: Column | int,
@@ -279,8 +287,7 @@ def knn_grid(
         )
         if 2 * r + 1 >= n:
             return rows
-        gap = math.sin(math.radians(min(r * tile_deg, 90.0)))
-        return f"least({rows}, {EARTH_RADIUS_M!r}D * asin(cos(radians(`{lat}`)) * {gap!r}D))"
+        return f"least({rows}, {_wedge_m(lat, r, tile_deg)})"
 
     # one CASE through F.expr: a Column per branch costs py4j calls.
     # Rings start at 1: lon -180 and 180 are one meridian in two tiles.
@@ -315,15 +322,22 @@ def topk_neighbors(
     """ε-bounded top-k neighbors per left row (reference build_distance_graph,
     processing/algorithms.py:24-204): cell-cover candidates at a ring sized
     to ε, haversine filter, row_number window top-k."""
-    tile_deg = 360.0 / 2**zoom
-    # per-row requirement: both the lon ground extent and the mercator lat
-    # extent of a tile scale ~cos(lat); take the worst latitude inside the
-    # row's ε-disk (|lat| + ε in degrees)
+    n = 2**zoom
+    tile_deg = 360.0 / n
+    # per-row ring: rows — the mercator lat extent of a tile scales ~cos(lat);
+    # take the worst latitude inside the row's ε-disk (|lat| + ε in degrees).
+    # Columns — the smallest r whose wedge bound (as in knn_grid) exceeds ε;
+    # near a pole none does, and the ring wraps every column (n // 2).
     eps_deg = max_distance_m / M_PER_DEG
-    band_cos = F.cos(
-        F.radians(F.least(F.abs(F.col(lat)) + F.lit(eps_deg), F.lit(85.06)))
+    band_cos = f"cos(radians(least(abs(`{lat}`) + {eps_deg!r}D, 85.06D)))"
+    cols = " ".join(
+        f"WHEN {_wedge_m(lat, r, tile_deg)} > {max_distance_m!r}D THEN {r}"
+        for r in range(1, n // 2)
     )
-    row_ring = F.ceil(F.lit(max_distance_m / (tile_deg * M_PER_DEG)) / band_cos) + 1
+    row_ring = F.expr(
+        f"greatest(ceil({max_distance_m / (tile_deg * M_PER_DEG)!r}D / {band_cos}) + 1,"
+        f" CASE {cols} ELSE {n // 2} END)"
+    )
     lt = left.withColumn("__ptile", cells.tile_id(F.col(lon), F.col(lat), zoom))
     rt = right.withColumn("__rtile", cells.tile_id(F.col(rlon), F.col(rlat), zoom))
     cand = (

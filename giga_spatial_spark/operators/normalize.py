@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
 from ..functions.dialect import spark_col
+from ..session import local_df
 
 # subset of the reference's sentinel list (shared.py:228-276)
 NULL_SENTINELS = [
@@ -166,8 +167,8 @@ def with_iso3(df: DataFrame, name_col: str, out_col: str = "iso3") -> DataFrame:
             f"with_iso3: input already has reserved column(s) {sorted(clash)}"
         )
     spark = df.sparkSession
-    dim = spark.createDataFrame(
-        iso3_lookup_rows(), "__iso3_key string, __iso3_val string"
+    dim = local_df(
+        spark, iso3_lookup_rows(), "__iso3_key string, __iso3_val string"
     )
     return (
         df.withColumn("__iso3_key", spark_col(clean_string_sql(quote_ident(name_col))))
@@ -202,8 +203,8 @@ def coverage_stats(df: DataFrame, columns: list[str] | None = None) -> DataFrame
         aggs.append(F.count(F.col(c)).alias(f"__n_{c}"))
     row = df.agg(*aggs).collect()[0]
     total = row["__total"]
-    spark = df.sparkSession
-    return spark.createDataFrame(
+    return local_df(
+        df.sparkSession,
         [
             (c, total, row[f"__n_{c}"],
              (row[f"__n_{c}"] / total) if total else None)

@@ -20,6 +20,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from ..session import local_df
 
 from ..geometry import (
     box_triangle_areas,
@@ -355,8 +356,9 @@ def box_polygon_intersects_join(
          float(p[:, 0].max()), float(p[:, 1].max()))
         for zid, p in sorted(zone_polys.items())
     ]
-    zb = spark.createDataFrame(
-        zrows, "zone_id int, zbminx double, zbminy double, zbmaxx double, zbmaxy double"
+    zb = local_df(
+        spark, zrows,
+        "zone_id int, zbminx double, zbminy double, zbmaxx double, zbmaxy double",
     )
     cand = parcels.join(
         F.broadcast(zb),

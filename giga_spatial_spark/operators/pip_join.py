@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from .. import cells
 from ..geometry import GridIndex
+from ..session import local_df
 
 
 def zone_cover_df(spark, polys: dict[int, np.ndarray], zoom: int,
@@ -45,7 +46,7 @@ def zone_cover_df(spark, polys: dict[int, np.ndarray], zoom: int,
     for zid, poly in polys.items():
         for x, y in cells.polygon_cover(poly, zoom, exact=exact):
             rows.append((int(cells.pack_tile(x, y)), int(zid)))
-    return spark.createDataFrame(rows, "tile bigint, zone_id int")
+    return local_df(spark, rows, "tile bigint, zone_id int")
 
 
 def pip_join_native(

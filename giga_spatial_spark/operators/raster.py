@@ -24,6 +24,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from ..session import local_df
 
 from .zonal import _AGG_FNS
 
@@ -214,8 +215,8 @@ def sample_bilinear(
         .withColumn("wy", F.col("__fy") - F.col("y0"))
         .drop("__fx", "__fy")
     )
-    offs = points.sparkSession.createDataFrame(
-        [(0, 0), (1, 0), (0, 1), (1, 1)], "odx int, ody int"
+    offs = local_df(
+        points.sparkSession, [(0, 0), (1, 0), (0, 1), (1, 1)], "odx int, ody int"
     )
     cand = (
         keyed.crossJoin(F.broadcast(offs))

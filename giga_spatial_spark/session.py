@@ -13,13 +13,21 @@ encodes the execution policy the whole engine assumes:
     constructor's driver calls. Errors keep their class and message; what is
     lost is only PySpark's Python `file:line` in a DataFrame error's query
     context (the JVM still records its own origin).
+  - driver-built tables (zone dims, covers, rings, lookup lists) go through
+    `local_df`: one Arrow batch planned as a `LocalTableScan`, never the
+    pickled-Python-RDD list path (`Scan ExistingRDD`, one Python-worker task
+    per core for a few hundred rows).
 """
 
 from __future__ import annotations
 
 import os
+from typing import Iterable
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType, _parse_datatype_string
 
 
 def get_spark(
@@ -58,3 +66,20 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_df(spark: SparkSession, rows: Iterable[tuple],
+             schema: str | StructType) -> DataFrame:
+    """A driver-built table as a local relation: `rows` (tuples) become one
+    Arrow table of `schema` (DDL string or StructType), column by column.
+    No job, no Python worker and no py4j call per row. A value of the wrong
+    type raises (`pa.array` does not coerce a str into a long, nor wrap an
+    int past a column's width)."""
+    struct = (schema if isinstance(schema, StructType)
+              else _parse_datatype_string(schema))
+    arrow = to_arrow_schema(struct)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, struct)

@@ -26,6 +26,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions import wkb as _wkb
+from ..session import local_df
 from ..winding import wind_member
 
 GPKG_WRITE_LIMIT = 5_000_000  # dim-layer guard, same role as xlsx's cap
@@ -169,7 +170,7 @@ def read_gpkg(
                         )
                     yield pd.DataFrame(rows)
 
-    rng = spark.createDataFrame(ranges or [(0, -1)], "r0 long, r1 long").repartition(
+    rng = local_df(spark, ranges or [(0, -1)], "r0 long, r1 long").repartition(
         max(1, len(ranges))
     )
     return rng.mapInPandas(kernel, schema=schema)

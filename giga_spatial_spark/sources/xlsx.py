@@ -21,6 +21,8 @@ from xml.sax.saxutils import escape
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import local_df
+
 _MAX_ROWS = 1_048_576  # the .xlsx format's own sheet limit
 _NS = "{http://schemas.openxmlformats.org/spreadsheetml/2006/main}"
 
@@ -207,14 +209,10 @@ def read_xlsx(spark: SparkSession, path: str, header: bool = True) -> DataFrame:
             typed_cols.append("string")
     schema = ", ".join(f"`{n}` {t}" for n, t in zip(names, typed_cols))
 
-    def coerce(v, t):
-        if v is None:
-            return None
-        if t == "double":
-            return float(v)
-        if t == "string":
-            return str(v)
-        return v
-
-    data = [tuple(coerce(r[j], typed_cols[j]) for j in range(width)) for r in data]
-    return spark.createDataFrame(data, schema)
+    # Arrow widens the ints of a double column exactly (all below 2**53)
+    data = [
+        tuple(str(v) if t == "string" and v is not None else v
+              for v, t in zip(r, typed_cols))
+        for r in data
+    ]
+    return local_df(spark, data, schema)

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from .functions.dialect import spark_col
 from .geometry import EARTH_RADIUS_M
+from .session import local_df
 from .sources.readers import read_parquet
 
 LON_MULT, LON_MOD = 7919, 36000
@@ -196,8 +197,8 @@ def make_box_zones(n_zones: int = 10, seed: int = 7) -> list[tuple[int, float, f
 
 
 def box_zones_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        make_box_zones(),
+    return local_df(
+        spark, make_box_zones(),
         "zone_id int, zminx double, zminy double, zmaxx double, zmaxy double",
     )
 

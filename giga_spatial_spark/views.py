@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .session import local_df
+
 GEO_FORMATS = ("geojson", "geojsonl", "gpkg", "geoparquet")
 
 
@@ -40,9 +42,8 @@ def _polygon_features(view: DataFrame, key: str, key_type: str, rings,
                       exclude: tuple[str, ...]) -> DataFrame:
     """View → Polygon features: a dim-sized (key, rings) table broadcast-
     joined onto the view, the view's other columns packed as properties."""
-    table = view.sparkSession.createDataFrame(
-        rings, f"{key} {key_type}, rings array<array<array<double>>>"
-    )
+    table = local_df(view.sparkSession, rings,
+                     f"{key} {key_type}, rings array<array<array<double>>>")
     return view.join(F.broadcast(table), key).select(
         F.lit("Polygon").alias("geom_type"), "rings", _props_expr(view, exclude)
     )
@@ -228,7 +229,7 @@ class _CellViewGenerator(_View):
 
     def __init__(self, spark, rows, schema: str):
         self.spark = spark
-        self.zones_dim = spark.createDataFrame(rows, schema)
+        self.zones_dim = local_df(spark, rows, schema)
         self._view = self.zones_dim
 
     def _attach(self, tagged: DataFrame, exprs, meta) -> "_CellViewGenerator":
@@ -281,7 +282,7 @@ class _CellViewGenerator(_View):
         areas, km2 = self._area_km2()
         view = self._view
         if areas is not None:
-            table = self.spark.createDataFrame(areas, f"{self.key} long, __area double")
+            table = local_df(self.spark, areas, f"{self.key} long, __area double")
             view = view.join(F.broadcast(table), self.key, "left")
         view = view.withColumn(out_col or f"{count_col}_per_km2", F.col(count_col) / km2)
         self._view = view if areas is None else view.drop("__area")

@@ -1,13 +1,17 @@
 """Query constructors build lazy plans: no Spark job fires while a board
 query is constructed, and read_parquet's footer schema equals Spark's own
-inference, so the inference job it skips changes nothing."""
+inference, so the inference job it skips changes nothing. Driver-built
+tables are Arrow local relations (`session.local_df`) equal to what
+PySpark's pickled list path built, and no declared query takes that path."""
 
 import glob
 import os
 
 import pytest
+from pyspark.sql import SparkSession
 
 import __spark_entry__ as E
+from giga_spatial_spark.session import local_df
 from giga_spatial_spark.sources.readers import read_parquet
 
 from .conftest import SF_DIR
@@ -95,3 +99,60 @@ def test_read_parquet_directory_keeps_inference(spark, tmp_path):
     got = read_parquet(spark, out)
     assert got.schema == spark.read.parquet(out).schema
     assert sorted(r.id for r in got.collect()) == list(range(5))
+
+
+ALL_TYPES = ("i int, l long, d double, s string, b boolean, y binary, "
+             "v array<double>, r array<array<array<double>>>")
+LOCAL_CASES = {
+    "empty": ([], "a int, b string"),
+    "nulls": ([(None,) * 8,
+               (1, 2**40, 0.5, "x", True, bytearray(b"\x00\xff"), [1.5, None],
+                [[[0.0, 1.0], [2.0, 3.0]], []])], ALL_TYPES),
+    "rings": ([(7, [[[float(x), float(x + 1)] for x in range(5)]]), (8, None)],
+              "zone_id int, rings array<array<array<double>>>"),
+    "xlsx": ([(b"ab", False, "p q", 1.25), (None, None, None, None)],
+             "`raw bytes` binary, `is set` boolean, `a name` string, `x y` double"),
+}
+
+
+@pytest.mark.parametrize("case", sorted(LOCAL_CASES))
+def test_local_df_equals_list_path(spark, case):
+    rows, schema = LOCAL_CASES[case]
+    got, want = local_df(spark, iter(rows), schema), spark.createDataFrame(rows, schema)
+    assert got.schema == want.schema
+    assert got.collect() == want.collect()
+    assert "LocalTableScan" in got._jdf.queryExecution().executedPlan().toString()
+
+
+def test_local_df_widens_ints_into_double(spark):
+    """The list path refused a Python int in a double column; Arrow widens
+    it exactly, to what the list path built from the float."""
+    got = local_df(spark, [(1, 2**53), (-3, 0)], "a double, b double")
+    want = spark.createDataFrame([(1.0, float(2**53)), (-3.0, 0.0)],
+                                 "a double, b double")
+    assert got.schema == want.schema
+    assert got.collect() == want.collect()
+
+
+@pytest.mark.parametrize("rows, schema", [([("7",)], "n long"), ([(2**31,)], "n int")])
+def test_local_df_rejects_wrong_values(spark, rows, schema):
+    import pyarrow as pa
+
+    with pytest.raises((pa.ArrowInvalid, pa.ArrowTypeError)):
+        local_df(spark, rows, schema)
+
+
+def test_no_query_takes_the_pickled_list_path(spark, monkeypatch):
+    """SparkSession._create_dataframe is the list/RDD path (Python RDD,
+    applySchemaToPythonRDD, `Scan ExistingRDD`); the Arrow and pandas paths
+    never reach it, so every declared query must build and run without it."""
+    def refuse(*_a, **_k):
+        raise AssertionError("pickled-Python-RDD createDataFrame")
+
+    monkeypatch.setattr(SparkSession, "_create_dataframe", refuse)
+    for name, q in E.queries().items():
+        df = q(spark, SF_DIR)
+        df.toPandas()
+        if name == "q_zonal_stats":
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan

@@ -9,9 +9,10 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from giga_spatial_spark import synth
+from giga_spatial_spark.geometry import haversine_np
 from giga_spatial_spark.operators.dedup import embedding_near_dup_pairs
 from giga_spatial_spark.operators.knn import (
-    knn_broadcast, knn_grid, ring_candidates,
+    knn_broadcast, knn_grid, ring_candidates, topk_neighbors,
 )
 
 from .conftest import SF_DIR
@@ -106,6 +107,36 @@ def test_knn_grid_equals_broadcast_at_high_latitudes(spark):
     for zoom in (3, 4, 5):
         grid = _nearest(knn_grid(pts, fac, zoom=zoom), "id")
         assert grid.equals(exact), zoom
+
+
+def test_topk_neighbors_reach_over_the_pole(spark):
+    """ε-range and top-k pairs near both poles equal a brute-force pair
+    list. (0°, 89.9°) and (180°, 89.9°) are 22.2 km apart, 8 tile columns
+    apart at zoom 4: a ring sized by the ground extent of a tile alone
+    misses them at ε = 50 km."""
+    rng = np.random.default_rng(11)
+
+    def rows(k):
+        lat = rng.uniform(88.5, 90.0, k) * rng.choice([-1.0, 1.0], k)
+        return [(0, 89.9), (180, 89.9)] + list(zip(rng.uniform(-180, 180, k), lat))
+
+    left, right = rows(150), rows(150)
+    (llon, llat), (rlon, rlat) = np.array(left).T, np.array(right).T
+    d = haversine_np(llat[:, None], llon[:, None], rlat[None, :], rlon[None, :])
+    eps = 50_000.0
+    near = set(zip(*np.nonzero(d <= eps)))
+    assert (0, 1) in near and d[0, 1] < 22_300
+    top2 = {(i, j) for i in range(len(left))
+            for j in sorted(np.nonzero(d[i] <= eps)[0], key=lambda j: (d[i, j], j))[:2]}
+    lt = spark.createDataFrame([(i, float(x), float(y))
+                                for i, (x, y) in enumerate(left)],
+                               "id long, lon double, lat double")
+    rt = spark.createDataFrame([(j, float(x), float(y))
+                                for j, (x, y) in enumerate(right)],
+                               "facility_id long, flon double, flat double")
+    for k, want in ((2**31 - 1, near), (2, top2)):
+        got = topk_neighbors(lt, rt, k=k, max_distance_m=eps, zoom=4)
+        assert {(r.id, r.facility_id) for r in got.collect()} == want, k
 
 
 def _chebyshev_ring(px, py, ring, n):

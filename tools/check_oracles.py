@@ -6,6 +6,9 @@ sorted by all columns; ints must be ints — 4070.0 != 4070).
 Run: python tools/check_oracles.py [sf_dir] [query ...]
      python tools/check_oracles.py --json OUT.json [sf_dir] [query ...]
 
+Each query's line (and its --json record) carries the wall seconds of the
+Spark side (construct + toPandas) and of the DuckDB oracle.
+
 --json writes a CORRECTNESS_r{N}.json-shaped artifact covering the FULL
 registry (or the listed queries): the supplementary full-board record the
 round-4 verdict asked for (driver snapshots covered 50 of the registry;
@@ -16,6 +19,7 @@ from __future__ import annotations
 import hashlib
 import os
 import sys
+import time
 
 import numpy as np
 import pandas as pd
@@ -57,6 +61,12 @@ def canon(pdf: pd.DataFrame) -> tuple[list[str], str]:
     return list(pdf.columns), h.hexdigest()
 
 
+def timed(fn):
+    t = time.perf_counter()
+    out = fn()
+    return out, round(time.perf_counter() - t, 3)
+
+
 def main() -> None:
     args = sys.argv[1:]
     json_out = None
@@ -86,13 +96,14 @@ def main() -> None:
             continue
         if name not in oracles:
             try:
-                n_rows = len(qs[name](spark, sf_dir).toPandas())
-                print(f"{name}: no_oracle rows={n_rows}")
+                sdf, spark_s = timed(lambda: qs[name](spark, sf_dir).toPandas())
+                print(f"{name}: no_oracle rows={len(sdf)} spark={spark_s}s", flush=True)
                 record[name] = {
                     "rows_match": None, "schema_match": None,
-                    "hash_match": None, "spark_rows": n_rows,
+                    "hash_match": None, "spark_rows": len(sdf),
                     "oracle_rows": None, "err": None,
                     "note": "rows-only (no SQL oracle)",
+                    "spark_s": spark_s, "duckdb_s": None,
                 }
             except Exception as ex:  # noqa: BLE001
                 print(f"{name}: ERROR {type(ex).__name__}: {str(ex)[:300]}")
@@ -100,8 +111,8 @@ def main() -> None:
                 record[name] = {"err": f"{type(ex).__name__}: {str(ex)[:300]}"}
             continue
         try:
-            sdf = qs[name](spark, sf_dir).toPandas()
-            odf = con.execute(oracles[name]).df()
+            sdf, spark_s = timed(lambda: qs[name](spark, sf_dir).toPandas())
+            odf, duckdb_s = timed(lambda: con.execute(oracles[name]).df())
         except Exception as ex:  # noqa: BLE001
             print(f"{name}: ERROR {type(ex).__name__}: {str(ex)[:300]}")
             fails.append(name)
@@ -119,10 +130,13 @@ def main() -> None:
             "rows_match": ok_rows, "schema_match": ok_cols,
             "hash_match": ok_hash, "spark_rows": len(sdf),
             "oracle_rows": len(odf), "err": None,
+            "spark_s": spark_s, "duckdb_s": duckdb_s,
         }
         print(
             f"{name}: {status} rows={len(sdf)}/{len(odf)} "
             f"cols={'ok' if ok_cols else f'{scols} vs {ocols}'} hash={'ok' if ok_hash else 'MISMATCH'}"
+            f" spark={spark_s}s duckdb={duckdb_s}s",
+            flush=True,
         )
         if not ok_hash and ok_rows and ok_cols and len(sdf):
             s = sdf[sorted(sdf.columns)].sort_values(sorted(sdf.columns)).head(3)
