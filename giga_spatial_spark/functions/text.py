@@ -108,7 +108,7 @@ def extract_text_py(raw: bytes) -> str:
 
 @F.pandas_udf(StringType())
 def extract_text(html: pd.Series) -> pd.Series:
-    return html.map(extract_text_py)
+    return html.map(extract_text_py, na_action="ignore")
 
 
 _RE_COORD = re.compile(
@@ -152,7 +152,7 @@ def geo_points_batch(htmls) -> tuple[np.ndarray, np.ndarray]:
 
 @F.pandas_udf(_ENTITY_SCHEMA)
 def extract_geo_entities(text: pd.Series) -> pd.Series:
-    return text.map(extract_geo_entities_py)
+    return text.map(extract_geo_entities_py, na_action="ignore")
 
 
 # --------------------------------------------------------- text analytics

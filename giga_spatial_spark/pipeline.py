@@ -1,10 +1,12 @@
 """The flagship spatial-enrichment pipeline over the web-pages table —
 the workload BASELINE.json's throughput metric (docs/sec) measures.
 
-Stages (all declarative; the only Python is two Arrow-batched UDFs):
+Stages (all declarative; the only Python is two chained Arrow UDFs and
+the PIP refine):
   1. scan (url, warc_ts, html, lang)            — parquet/Iceberg scan
   2. extract_text(html)                         — pandas UDF (invariant stage)
-  3. extract_geo_entities(text) → explode       — pandas UDF → posexplode
+  3. extract_geo_entities(text) → explode       — pandas UDF → posexplode;
+     with stage 2 one chained eval of extract_geo_entities(extract_text(html))
   4. tile assignment (mercator, native math)    — whole-stage codegen
   5. PIP tag vs admin polygons                  — broadcast cover join + refine
   6. zonal rollup with hot-cell salting         — two-stage aggregation
@@ -34,7 +36,8 @@ def extract_stage(pages: DataFrame) -> DataFrame:
 
 
 def entity_points(pages_extracted: DataFrame) -> DataFrame:
-    """One row per geo mention: (url, mention_idx, lat, lon)."""
+    """One row per geo mention: (url, mention_idx, lat, lon); none for a
+    page with a null or empty entity list."""
     ents = pages_extracted.withColumn(
         "ents", extract_geo_entities(F.col("extracted"))
     )
@@ -42,8 +45,14 @@ def entity_points(pages_extracted: DataFrame) -> DataFrame:
         ents.select(
             "url",
             "lang",
-            F.posexplode("ents").alias("mention_idx", "ent"),
+            # Not posexplode: Catalyst infers `size(ents) > 0` under a plain
+            # generator and pushes it below this alias by inlining the UDF
+            # chain, which then runs twice per page. Outer generators get no
+            # inferred filter; the null row they emit for a null or empty
+            # list is dropped here, so the rows are posexplode's.
+            F.posexplode_outer("ents").alias("mention_idx", "ent"),
         )
+        .where(F.col("mention_idx").isNotNull())
         .select(
             "url",
             "lang",
@@ -69,12 +78,12 @@ def enrich_fused(pages: DataFrame, admin_polys,
                  tile_zoom: int = TILE_ZOOM) -> DataFrame:
     """Single-Python-pass variant of :func:`enrich` — identical output.
 
-    The modular pipeline crosses the JVM↔Python boundary three times
-    (extract UDF, entity UDF, PIP refine). At 10^12 rows the Arrow
-    (de)serialization of the intermediate columns dominates, so the scale
-    path fuses html → coordinates → GridIndex PIP → tile math into ONE
-    mapInPandas kernel: scan → fused kernel → salted rollup. One python
-    exchange, no intermediate text column ever serialized.
+    The modular pipeline crosses the JVM↔Python boundary twice (one
+    chained extract→entity UDF eval, then the PIP refine). At 10^12 rows
+    the Arrow (de)serialization of the intermediate columns dominates, so
+    the scale path fuses html → coordinates → GridIndex PIP → tile math
+    into ONE mapInPandas kernel: scan → fused kernel → salted rollup. One
+    python exchange, no intermediate text column ever serialized.
 
     The rollup reads only the coordinates, so the kernel computes only
     those: ``geo_points_batch`` runs the markup half of extract_text_py

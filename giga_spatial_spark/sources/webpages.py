@@ -65,6 +65,14 @@ def _make_batch(ids: np.ndarray) -> pd.DataFrame:
     n_words = 20 + (ids % 60)
     urls = [f"https://example.org/page/{i}" for i in ids]
     ts = pd.to_datetime((1_600_000_000 + (ids % 86_400) * 31) * 10**9)
+    # the k-th mention's span per doc (k < 3), one _doc_coords call per k
+    mention_k = []
+    for k in range(3):
+        lat, lon = _doc_coords(ids, k)
+        mention_k.append([
+            f'<span class="geo">({a:.4f}, {o:.4f})</span>'
+            for a, o in zip(lat.tolist(), lon.tolist())
+        ])
 
     htmls: list[bytes] = []
     for row in range(n):
@@ -80,12 +88,7 @@ def _make_batch(ids: np.ndarray) -> pd.DataFrame:
         chunk = max(8, len(body_words) // 3)
         for s in range(0, len(body_words), chunk):
             paras.append("<p>" + " ".join(body_words[s : s + chunk]) + "</p>")
-        mentions = []
-        for k in range(int(n_mentions[row])):
-            lat, lon = _doc_coords(np.array([i]), k)
-            mentions.append(
-                f'<span class="geo">({lat[0]:.4f}, {lon[0]:.4f})</span>'
-            )
+        mentions = [mention_k[k][row] for k in range(int(n_mentions[row]))]
         html = (
             f"<html><head><title>Page {i}</title>"
             f"<style>p {{margin: 0}}</style>"

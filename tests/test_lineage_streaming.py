@@ -137,6 +137,11 @@ def test_streaming_enrich_equals_batch(spark):
             .start()
         )
         q.awaitTermination(180)
+        # the micro-batch runs html → entities in one Python eval node
+        from tools.python_plan_scan import python_nodes
+
+        micro = q._jsq.streamingQuery().lastExecution().executedPlan()
+        assert [n for n, _ in python_nodes(micro)].count("ArrowEvalPython") == 1
         got = (
             spark.sql("select zone_id, count(*) n from enrich_out group by zone_id")
             .toPandas()

@@ -20,6 +20,8 @@ from giga_spatial_spark.pipeline import (
     verify_extraction_invariant,
 )
 from giga_spatial_spark.sources.webpages import _make_batch, webpages_df
+from giga_spatial_spark.streaming.pipeline import streaming_enrich
+from tools.python_plan_scan import executed_plan, python_nodes
 
 
 def test_extract_text_golden():
@@ -68,6 +70,60 @@ def test_entity_points_and_skew(spark):
         .mean()
     )
     assert 0.2 < hot < 0.4
+
+
+def _eval_nodes(df):
+    return [n for n, _ in python_nodes(executed_plan(df)) if n == "ArrowEvalPython"]
+
+
+def test_entity_points_evaluates_the_udf_chain_once(spark):
+    """html → text → entities is one ArrowEvalPython node. Under a plain
+    posexplode Catalyst pushes its inferred `size(ents) > 0` filter below
+    the `ents` alias and so evaluates the whole chain a second time."""
+    pages = webpages_df(spark, 40)
+    assert len(_eval_nodes(entity_points(extract_stage(pages)))) == 1
+    streamed = streaming_enrich(pages, synth.make_admin_polygons())
+    assert len(_eval_nodes(streamed)) == 1
+
+
+def test_entity_points_rows_equal_python(spark):
+    """The outer explode plus its null filter keeps posexplode's rows: no
+    row for a null page or one without mentions, mention_idx 0..k-1."""
+    def coord(k):
+        return f"({-30 + 7.5 * k:.4f}, {20 - 11.25 * k:.4f})"
+
+    htmls = [
+        None,
+        b"<html><body><p>no coordinate here (1, 2</p></body></html>",
+        f"<p>one {coord(0)}</p>".encode(),
+        f"<p>{coord(1)} then {coord(2)}</p><div>and {coord(3)}</div>".encode(),
+        f"<script>var p = {coord(4)};</script><p>script only</p>".encode(),
+        b"",
+    ]
+    pdf = pd.DataFrame({
+        "url": [f"https://hand.example/{i}" for i in range(len(htmls))],
+        "html": htmls,
+        "lang": "en",
+    })
+    pages = spark.createDataFrame(pdf, "url string, html binary, lang string")
+    got = sorted(
+        tuple(r)
+        for r in entity_points(extract_stage(pages))
+        .select("url", "mention_idx", "lat", "lon")
+        .collect()
+    )
+    want = sorted(
+        (url, k, lat, lon)
+        for url, html in zip(pdf["url"], htmls)
+        if html is not None
+        for k, (lat, lon) in enumerate(
+            extract_geo_entities_py(extract_text_py(html))
+        )
+    )
+    assert [(u[-1], k) for u, k, _, _ in got] == [
+        ("2", 0), ("3", 0), ("3", 1), ("3", 2)
+    ]
+    assert got == want
 
 
 def test_enrich_end_to_end(spark):
