@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from giga_spatial_spark import cells, cells_hex, cells_s2, synth
 from giga_spatial_spark.functions import text as T
+from giga_spatial_spark.functions.crs import projection
 from giga_spatial_spark.functions.dialect import spark_col
 from giga_spatial_spark.geometry import polygon_centroid
 from giga_spatial_spark.operators import zonal
@@ -2048,29 +2049,12 @@ PROJECTED_RASTERS = {
 }
 
 
-def _projection(crs: str | dict):
-    """The from-scratch projection (forward / inverse_sql) behind a
-    fixture CRS: a named code, or user-defined GeoKey parameters."""
-    from giga_spatial_spark.functions import albers, laea, lcc, mollweide, polar
-    from giga_spatial_spark.functions.crs import projection_from_params
-
-    if isinstance(crs, dict):
-        return projection_from_params(crs)
-    return {
-        "ESRI:54009": mollweide,
-        "EPSG:3035": laea,
-        "EPSG:5070": albers,
-        "EPSG:2154": lcc,
-        "EPSG:3413": polar.EPSG_3413,
-    }[crs]
-
-
 def _anchor(spec: _ProjectedRaster) -> tuple[float, float]:
     """Top-left projected (x0, y1) of a fixture grid, centred on its anchor
     zones via the projection's forward."""
     import numpy as np
 
-    pj = _projection(spec.crs)
+    pj = projection(spec.crs)
     if isinstance(spec.anchor, int):
         cx, cy = polygon_centroid(ADMIN_POLYS[spec.anchor])
         lonlats = [(np.array([cx]), np.array([cy]))]
@@ -2111,7 +2095,7 @@ def _projected_oracle(spec: _ProjectedRaster) -> str:
     projection's inverse_sql and the zone predicates."""
     x0, y1 = _anchor(spec)
     px, row = f"(i % {spec.w})", f"(i // {spec.w})"
-    lon, lat = _projection(spec.crs).inverse_sql(
+    lon, lat = projection(spec.crs).inverse_sql(
         f"({x0!r} + ({px} + 0.5) * {spec.dx!r})",
         f"({y1!r} - ({row} + 0.5) * {spec.dx!r})",
     )

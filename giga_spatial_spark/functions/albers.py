@@ -142,21 +142,12 @@ class AlbersConic:
         return f"degrees({lam})", f"degrees({phi})"
 
 
-# canonical EPSG:5070 instance + module-level API (house convention:
-# laea.py/mollweide.py expose plain functions; oracles interpolate the
-# same instance constants both here and in the SQL twins)
-_EPSG_5070 = AlbersConic(29.5, 45.5, 23.0, -96.0, 0.0, 0.0)
+# canonical EPSG:5070 instance + module-level API; functions/crs.py maps
+# the code to the instance, oracles interpolate its constants
+EPSG_5070 = AlbersConic(29.5, 45.5, 23.0, -96.0, 0.0, 0.0)
 
-PHI_1, PHI_2 = _EPSG_5070.phi1, _EPSG_5070.phi2
-LAT_0, LON_0 = _EPSG_5070.lat0, _EPSG_5070.lon0
-X_0, Y_0 = _EPSG_5070.x0, _EPSG_5070.y0
-_N, _C, _RHO0, _QP = (
-    _EPSG_5070.n,
-    _EPSG_5070.C,
-    _EPSG_5070.rho0,
-    _EPSG_5070.qp,
-)
+_N, _RHO0 = EPSG_5070.n, EPSG_5070.rho0
 
-forward = _EPSG_5070.forward
-inverse = _EPSG_5070.inverse
-inverse_sql = _EPSG_5070.inverse_sql
+forward = EPSG_5070.forward
+inverse = EPSG_5070.inverse
+inverse_sql = EPSG_5070.inverse_sql

@@ -1,29 +1,34 @@
-"""Coordinate reference system transforms — vector-side reprojection.
+"""Coordinate reference system transforms — one table of projections.
 
-Reference: zonal/base.py:448-461 caches pyproj transformers and reprojects
-zone GeoDataFrames between arbitrary CRSs; tif_processor.py:205 reprojects
-rasters. pyproj/GDAL are absent here, so the engine supports the CRS set
-its own from-scratch projections cover — the ones the reference's flows
-actually touch:
+Reference: zonal/base.py:448-461 looks every CRS up once through a cached
+pyproj transformer and reprojects zone GeoDataFrames between arbitrary
+CRSs; tif_processor.py:205 reprojects rasters. pyproj/GDAL are absent
+here, so the engine resolves a CRS to one of its own from-scratch
+projections through ``projection(crs)``, the one place a code maps to a
+projection. It accepts:
 
-  EPSG:4326   geographic lon/lat (the engine's canonical frame)
-  EPSG:3857   spherical web mercator (tile pyramids)
-  ESRI:54009  Mollweide (GHSL grids) — functions/mollweide.py
-  EPSG:326xx / 327xx   UTM north/south zones — functions/utm.py (Krüger)
+  - a named code from ``_TABLE``: EPSG:4326 (geographic lon/lat, the
+    engine's canonical frame), EPSG:3857 (spherical web mercator),
+    ESRI:54009 (Mollweide), EPSG:3035 (LAEA Europe), EPSG:5070 (Conus
+    Albers), EPSG:2154 (Lambert-93), EPSG:3413 / EPSG:3031 (NSIDC polar
+    stereographic) and EPSG:32601-32660 / 32701-32760 (UTM north/south);
+  - a name given to ``register_crs``;
+  - a GeoTIFF GeoKey parameter dict (``projection_from_params``).
 
-All transforms route through 4326 (exact composition of exact legs).
-`transform_points` is the numpy kernel; `reproject_rings` lifts it over a
-normalized feature table's `rings` column inside one Arrow pass.
+Every projection has vectorized forward(lon, lat) -> (x, y) and
+inverse(x, y) -> (lon, lat) in degrees/meters, and every transform routes
+through 4326 (exact composition of exact legs). `transform_points` is the
+numpy kernel; `reproject_rings` lifts it over a normalized feature
+table's `rings` column inside one Arrow pass; the GeoTIFF reader
+inverse-projects pixel centres with the same objects.
 """
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 import pandas as pd
 
-_R_WEB = 6378137.0
+from . import albers, laea, lcc, mollweide, polar, utm
 
 # user-registered projection objects (anything with forward/inverse over
 # degree/meter arrays — LambertConformal, AlbersConic, LaeaAzimuthal
@@ -77,51 +82,41 @@ def projection_from_params(p: dict):
         f = 1.0 / float(p["inv_f"])
         kw["e2"] = f * (2.0 - f)
     if ct == _CT_TM:
-        from .utm import TransverseMercator
-
         need("lat0", "lon0")
         tm_kw = {}
         if "a" in p:
             tm_kw["a"] = float(p["a"])
         if "inv_f" in p:
             tm_kw["inv_f"] = float(p["inv_f"])
-        return TransverseMercator(
+        return utm.TransverseMercator(
             p["lat0"], p["lon0"], p.get("k0", 1.0),
             p.get("x0", 0.0), p.get("y0", 0.0), **tm_kw,
         )
     if ct == _CT_LCC_2SP:
-        from .lcc import LambertConformal
-
         need("sp1", "sp2", "lat0", "lon0")
-        return LambertConformal(
+        return lcc.LambertConformal(
             p["sp1"], p["sp2"], p["lat0"], p["lon0"],
             p.get("x0", 0.0), p.get("y0", 0.0), **kw,
         )
     if ct == _CT_ALBERS:
-        from .albers import AlbersConic
-
         need("sp1", "sp2", "lat0", "lon0")
-        return AlbersConic(
+        return albers.AlbersConic(
             p["sp1"], p["sp2"], p["lat0"], p["lon0"],
             p.get("x0", 0.0), p.get("y0", 0.0), **kw,
         )
     if ct == _CT_LAEA:
-        from .laea import LaeaAzimuthal
-
         need("lat0", "lon0")
-        return LaeaAzimuthal(
+        return laea.LaeaAzimuthal(
             p["lat0"], p["lon0"], p.get("x0", 0.0), p.get("y0", 0.0), **kw,
         )
     if ct == _CT_POLAR_STEREO:
-        from .polar import PolarStereographic
-
         # lat_ts arrives in sp1 (ProjStdParallel1GeoKey) per GeoTIFF
         # convention; fall back to lat0 for writers that use NatOriginLat
         lat_ts = p.get("sp1")
         if lat_ts is None:
             need("lat0")
             lat_ts = p["lat0"]
-        return PolarStereographic(
+        return polar.PolarStereographic(
             lat_ts, p["lon0"], p.get("x0", 0.0), p.get("y0", 0.0), **kw,
         )
     raise ValueError(
@@ -132,116 +127,81 @@ def projection_from_params(p: dict):
     )
 
 
-def _parse(crs: str) -> tuple[str, int]:
-    c = crs.upper().replace(" ", "")
-    if c in _CUSTOM:
-        return ("custom:" + c, 0)
-    if c in ("EPSG:4326", "WGS84", "4326"):
-        return ("geographic", 0)
-    if c in ("EPSG:3857", "EPSG:900913", "3857"):
-        return ("webmercator", 0)
-    if c in ("ESRI:54009", "54009"):
-        return ("mollweide", 0)
-    if c in ("EPSG:3035", "3035"):
-        return ("laea_europe", 0)
-    if c in ("EPSG:5070", "5070"):
-        return ("albers_conus", 0)
-    if c in ("EPSG:2154", "2154"):
-        return ("lcc_france", 0)
-    if c in ("EPSG:3413", "3413"):
-        return ("polar_north", 0)
-    if c in ("EPSG:3031", "3031"):
-        return ("polar_south", 0)
-    if c.startswith("EPSG:326") and len(c) == 10:
-        return ("utm_north", int(c[8:]))
-    if c.startswith("EPSG:327") and len(c) == 10:
-        return ("utm_south", int(c[8:]))
-    raise ValueError(
-        f"unsupported crs {crs!r} — supported: EPSG:4326, EPSG:3857, "
-        "ESRI:54009, EPSG:3035 (LAEA Europe), EPSG:5070 (Conus Albers), "
-        "EPSG:2154 (Lambert-93), EPSG:3413/3031 (polar stereographic), "
-        "EPSG:326xx/327xx (UTM), and register_crs() custom projections"
-    )
+class _Geographic:
+    """EPSG:4326: lon/lat degrees in and out."""
 
-
-def _to_geographic(xs: np.ndarray, ys: np.ndarray, kind: str, zone: int):
-    if kind == "geographic":
-        return xs, ys
-    if kind.startswith("custom:"):
-        return _CUSTOM[kind[7:]].inverse(xs, ys)
-    if kind == "webmercator":
-        lon = np.degrees(xs / _R_WEB)
-        lat = np.degrees(np.arctan(np.sinh(ys / _R_WEB)))
+    def forward(self, lon, lat):
         return lon, lat
-    if kind == "mollweide":
-        from . import mollweide
 
-        return mollweide.inverse(xs, ys)
-    if kind == "laea_europe":
-        from . import laea
-
-        return laea.inverse(xs, ys)
-    if kind == "albers_conus":
-        from . import albers
-
-        return albers.inverse(xs, ys)
-    if kind == "lcc_france":
-        from . import lcc
-
-        return lcc.inverse(xs, ys)
-    if kind in ("polar_north", "polar_south"):
-        from . import polar
-
-        pj = polar.EPSG_3413 if kind == "polar_north" else polar.EPSG_3031
-        return pj.inverse(xs, ys)
-    from . import utm
-
-    south = kind == "utm_south"
-    lon, lat = utm.utm_inverse(
-        xs, ys, zone, south=np.full(len(np.atleast_1d(xs)), south)
-    )
-    return lon, lat
+    inverse = forward
 
 
-def _from_geographic(lon: np.ndarray, lat: np.ndarray, kind: str, zone: int):
-    if kind == "geographic":
-        return lon, lat
-    if kind.startswith("custom:"):
-        return _CUSTOM[kind[7:]].forward(lon, lat)
-    if kind == "webmercator":
-        x = np.radians(lon) * _R_WEB
+class _WebMercator:
+    """EPSG:3857: spherical mercator on the WGS84 semi-major axis."""
+
+    R = 6378137.0
+
+    def forward(self, lon, lat):
+        x = np.radians(lon) * self.R
         lat_c = np.clip(lat, -85.05112878, 85.05112878)
-        y = _R_WEB * np.arcsinh(np.tan(np.radians(lat_c)))
-        return x, y
-    if kind == "mollweide":
-        from . import mollweide
+        return x, self.R * np.arcsinh(np.tan(np.radians(lat_c)))
 
-        return mollweide.forward(lon, lat)
-    if kind == "laea_europe":
-        from . import laea
+    def inverse(self, x, y):
+        return (
+            np.degrees(x / self.R),
+            np.degrees(np.arctan(np.sinh(y / self.R))),
+        )
 
-        return laea.forward(lon, lat)
-    if kind == "albers_conus":
-        from . import albers
 
-        return albers.forward(lon, lat)
-    if kind == "lcc_france":
-        from . import lcc
+class _UtmZone:
+    """EPSG:326zz / 327zz: UTM zone zz, north / south (functions/utm)."""
 
-        return lcc.forward(lon, lat)
-    if kind in ("polar_north", "polar_south"):
-        from . import polar
+    def __init__(self, zone: int, south: bool):
+        self.zone, self.south = zone, south
 
-        pj = polar.EPSG_3413 if kind == "polar_north" else polar.EPSG_3031
-        return pj.forward(lon, lat)
-    from . import utm
+    def forward(self, lon, lat):
+        e, n = utm.utm_forward(lon, lat, self.zone)
+        if not self.south:
+            # keep the standard false-northing convention: southern points
+            # in a northern-zone frame go negative (consistent planar frame)
+            n = np.where(np.asarray(lat) < 0, n - 10_000_000.0, n)
+        return e, n
 
-    e, n = utm.utm_forward(lon, lat, zone)
-    if kind == "utm_north":
-        # keep the standard false-northing convention: southern points in
-        # a northern-zone frame go negative (consistent planar frame)
-        n = np.where(lat < 0, n - 10_000_000.0, n)
-    return e, n
+    def inverse(self, x, y):
+        return utm.utm_inverse(x, y, self.zone, south=self.south)
+
+
+# named code (and its aliases) → projection
+_TABLE: dict[str, object] = {
+    **dict.fromkeys(("EPSG:4326", "WGS84", "4326"), _Geographic()),
+    **dict.fromkeys(("EPSG:3857", "EPSG:900913", "3857"), _WebMercator()),
+    **dict.fromkeys(("ESRI:54009", "54009"), mollweide),
+    **dict.fromkeys(("EPSG:3035", "3035"), laea.EPSG_3035),
+    **dict.fromkeys(("EPSG:5070", "5070"), albers.EPSG_5070),
+    **dict.fromkeys(("EPSG:2154", "2154"), lcc.EPSG_2154),
+    **dict.fromkeys(("EPSG:3413", "3413"), polar.EPSG_3413),
+    **dict.fromkeys(("EPSG:3031", "3031"), polar.EPSG_3031),
+    **{
+        f"EPSG:32{6 + south}{zone:02d}": _UtmZone(zone, bool(south))
+        for south in (0, 1)
+        for zone in range(1, 61)
+    },
+}
+
+
+def projection(crs: str | dict):
+    """The projection behind ``crs``: a GeoKey parameter dict, a
+    ``register_crs`` name, or a named code of ``_TABLE``."""
+    if isinstance(crs, dict):
+        return projection_from_params(crs)
+    key = crs.upper().replace(" ", "")
+    pj = _CUSTOM.get(key, _TABLE.get(key))
+    if pj is None:
+        raise ValueError(
+            f"unsupported crs {crs!r} — supported: "
+            f"{', '.join([*_TABLE, *_CUSTOM])}; register_crs() adds names"
+        )
+    return pj
 
 
 def transform_points(
@@ -250,10 +210,8 @@ def transform_points(
     """Vectorized CRS transform; routes through geographic lon/lat."""
     xs = np.asarray(xs, dtype=np.float64)
     ys = np.asarray(ys, dtype=np.float64)
-    fk, fz = _parse(from_crs)
-    tk, tz = _parse(to_crs)
-    lon, lat = _to_geographic(xs, ys, fk, fz)
-    return _from_geographic(lon, lat, tk, tz)
+    lon, lat = projection(from_crs).inverse(xs, ys)
+    return projection(to_crs).forward(lon, lat)
 
 
 def reproject_rings(
@@ -276,20 +234,10 @@ def reproject_rings(
     # resolve now, on the driver: custom-registered projections live in
     # the driver's _CUSTOM registry, which does NOT exist on executors —
     # the resolved (picklable) projection objects ship in the closure
-    fk, fz = _parse(from_crs)
-    tk, tz = _parse(to_crs)
-    fobj = _CUSTOM[fk[7:]] if fk.startswith("custom:") else None
-    tobj = _CUSTOM[tk[7:]] if tk.startswith("custom:") else None
+    src, dst = projection(from_crs), projection(to_crs)
 
     def _tx(xs, ys):
-        lon, lat = (
-            fobj.inverse(xs, ys) if fobj is not None
-            else _to_geographic(xs, ys, fk, fz)
-        )
-        return (
-            tobj.forward(lon, lat) if tobj is not None
-            else _from_geographic(lon, lat, tk, tz)
-        )
+        return dst.forward(*src.inverse(xs, ys))
 
     @F.pandas_udf(StringType())
     def kernel(col: pd.Series) -> pd.Series:

@@ -8,7 +8,10 @@ CRS the reference's raster flows meet outside Mollweide/UTM/WebMercator
 in this container, so this implements the published ellipsoidal LAEA
 equations (Snyder 1987, "Map Projections — A Working Manual", pp.187-190,
 oblique aspect) directly, the same from-scratch pattern as
-functions/mollweide.py and functions/utm.py:
+functions/mollweide.py and functions/utm.py. `LaeaAzimuthal` takes any
+origin / false origin / ellipsoid (user-defined GeoTIFF GeoKeys with
+ProjCoordTransGeoKey 10); EPSG:3035 is its instance `EPSG_3035`, and the
+module-level forward / inverse / inverse_sql are that instance's:
 
   forward: authalic latitude β from q(φ), B/D scaling, oblique azimuthal
            placement; inverse: ρ/ce angular recovery then the published
@@ -24,120 +27,22 @@ import math
 
 import numpy as np
 
-A_GRS80 = 6378137.0
-_F = 1.0 / 298.257222101
-E2 = _F * (2.0 - _F)
-E = math.sqrt(E2)
-
-LAT_0 = math.radians(52.0)
-LON_0 = math.radians(10.0)
-X_0 = 4321000.0
-Y_0 = 3210000.0
-
-
-def _q(sinphi):
-    """Snyder (3-12): authalic q for sin φ."""
-    esin = E * sinphi
-    return (1.0 - E2) * (
-        sinphi / (1.0 - E2 * sinphi * sinphi)
-        - (1.0 / (2.0 * E)) * np.log((1.0 - esin) / (1.0 + esin))
-    )
-
-
-_QP = float(_q(np.array(1.0)))
-_BETA1 = math.asin(float(_q(np.array(math.sin(LAT_0)))) / _QP)
-_RQ = A_GRS80 * math.sqrt(_QP / 2.0)
-_M1 = math.cos(LAT_0) / math.sqrt(1.0 - E2 * math.sin(LAT_0) ** 2)
-_D = A_GRS80 * _M1 / (_RQ * math.cos(_BETA1))
-
-# authalic → geodetic series coefficients (Snyder 3-18)
-_C2 = E2 / 3.0 + 31.0 * E2 ** 2 / 180.0 + 517.0 * E2 ** 3 / 5040.0
-_C4 = 23.0 * E2 ** 2 / 360.0 + 251.0 * E2 ** 3 / 3780.0
-_C6 = 761.0 * E2 ** 3 / 45360.0
-
-
-def forward(lon_deg, lat_deg):
-    """(lon, lat) degrees → EPSG:3035 (x, y) meters. Vectorized."""
-    lam = np.radians(np.asarray(lon_deg, dtype=np.float64))
-    phi = np.radians(np.asarray(lat_deg, dtype=np.float64))
-    beta = np.arcsin(np.clip(_q(np.sin(phi)) / _QP, -1.0, 1.0))
-    dl = lam - LON_0
-    sb1, cb1 = math.sin(_BETA1), math.cos(_BETA1)
-    b_den = 1.0 + sb1 * np.sin(beta) + cb1 * np.cos(beta) * np.cos(dl)
-    B = _RQ * np.sqrt(2.0 / np.maximum(b_den, 1e-300))
-    x = B * _D * np.cos(beta) * np.sin(dl) + X_0
-    y = (B / _D) * (cb1 * np.sin(beta) - sb1 * np.cos(beta) * np.cos(dl)) + Y_0
-    return x, y
-
-
-def inverse(x, y):
-    """EPSG:3035 (x, y) meters → (lon, lat) degrees. Closed form +
-    published authalic series; vectorized."""
-    xs = (np.asarray(x, dtype=np.float64) - X_0) / _D
-    ys = (np.asarray(y, dtype=np.float64) - Y_0) * _D
-    rho = np.sqrt(xs * xs + ys * ys)
-    ce = 2.0 * np.arcsin(np.clip(rho / (2.0 * _RQ), -1.0, 1.0))
-    sb1, cb1 = math.sin(_BETA1), math.cos(_BETA1)
-    safe_rho = np.where(rho > 1e-12, rho, 1.0)
-    beta = np.arcsin(
-        np.clip(
-            np.cos(ce) * sb1 + ys * np.sin(ce) * cb1 / safe_rho, -1.0, 1.0
-        )
-    )
-    beta = np.where(rho > 1e-12, beta, _BETA1)
-    lam = LON_0 + np.arctan2(
-        xs * np.sin(ce),
-        safe_rho * cb1 * np.cos(ce) - ys * sb1 * np.sin(ce),
-    )
-    lam = np.where(rho > 1e-12, lam, LON_0)
-    phi = (
-        beta
-        + _C2 * np.sin(2.0 * beta)
-        + _C4 * np.sin(4.0 * beta)
-        + _C6 * np.sin(6.0 * beta)
-    )
-    return np.degrees(lam), np.degrees(phi)
-
-
-def inverse_sql(x_sql: str, y_sql: str) -> tuple[str, str]:
-    """(lon_sql, lat_sql) DuckDB twins of ``inverse`` — identical
-    operation order, trig-ulp equivalence (mollweide.inverse_sql
-    pattern)."""
-    def d(v: float) -> str:
-        # ::DOUBLE — DuckDB types long bare decimal literals as DECIMAL
-        # and overflows its 38-digit scale in chained multiplications
-        return f"{v!r}::DOUBLE"
-
-    xs = f"((({x_sql}) - {d(X_0)}) / {d(_D)})"
-    ys = f"((({y_sql}) - {d(Y_0)}) * {d(_D)})"
-    rho = f"sqrt({xs}*{xs} + {ys}*{ys})"
-    ce = f"(2.0 * asin(least(greatest({rho} / {d(2.0 * _RQ)}, -1.0), 1.0)))"
-    sb1, cb1 = math.sin(_BETA1), math.cos(_BETA1)
-    safe_rho = f"(CASE WHEN {rho} > 1e-12 THEN {rho} ELSE 1.0 END)"
-    beta = (
-        f"(CASE WHEN {rho} > 1e-12 THEN asin(least(greatest("
-        f"cos({ce}) * {d(sb1)} + {ys} * sin({ce}) * {d(cb1)} / {safe_rho}, "
-        f"-1.0), 1.0)) ELSE {d(_BETA1)} END)"
-    )
-    lam = (
-        f"(CASE WHEN {rho} > 1e-12 THEN {d(LON_0)} + atan2({xs} * sin({ce}), "
-        f"{safe_rho} * {d(cb1)} * cos({ce}) - {ys} * {d(sb1)} * sin({ce})) "
-        f"ELSE {d(LON_0)} END)"
-    )
-    phi = (
-        f"({beta} + {d(_C2)} * sin(2.0 * {beta}) + {d(_C4)} * sin(4.0 * {beta})"
-        f" + {d(_C6)} * sin(6.0 * {beta}))"
-    )
-    return f"degrees({lam})", f"degrees({phi})"
+from .ellipsoid import (
+    A_GRS80,
+    authalic_coeffs,
+    m_parallel,
+    q_authalic,
+    sql_double,
+)
+from .ellipsoid import E2_GRS80 as E2
 
 
 class LaeaAzimuthal:
     """Ellipsoidal Lambert azimuthal equal-area, oblique aspect, with
-    ARBITRARY parameters (Snyder pp.187-190 — the same equations as the
-    module-level EPSG:3035 functions above, parameterized so
-    user-defined GeoTIFF GeoKeys with ProjCoordTransGeoKey 10 ingest:
-    the reference accepts any rasterio CRS). Shares the authalic
-    machinery with functions/ellipsoid.py."""
+    ARBITRARY parameters (Snyder pp.187-190), so user-defined GeoTIFF
+    GeoKeys with ProjCoordTransGeoKey 10 ingest: the reference accepts
+    any rasterio CRS. Shares the authalic machinery with
+    functions/ellipsoid.py."""
 
     def __init__(
         self,
@@ -148,8 +53,6 @@ class LaeaAzimuthal:
         a: float = A_GRS80,
         e2: float = E2,
     ):
-        from .ellipsoid import authalic_coeffs, m_parallel, q_authalic
-
         self.a, self.e2 = float(a), float(e2)
         self.lat0 = math.radians(lat0_deg)
         self.lon0 = math.radians(lon0_deg)
@@ -165,14 +68,19 @@ class LaeaAzimuthal:
         self.c2, self.c4, self.c6 = authalic_coeffs(self.e2)
 
     def forward(self, lon_deg, lat_deg):
-        from .ellipsoid import q_authalic
-
         lam = np.radians(np.asarray(lon_deg, dtype=np.float64))
         phi = np.radians(np.asarray(lat_deg, dtype=np.float64))
         beta = np.arcsin(
             np.clip(q_authalic(np.sin(phi), self.e2) / self.qp, -1.0, 1.0)
         )
-        dl = np.remainder(lam - self.lon0 + math.pi, 2.0 * math.pi) - math.pi
+        dl = lam - self.lon0
+        # wrap into [-π, π) only where needed: an in-range Δλ stays the
+        # exact difference, which the EPSG:3035 fixture anchors are pinned to
+        dl = np.where(
+            (dl < -math.pi) | (dl >= math.pi),
+            np.remainder(dl + math.pi, 2.0 * math.pi) - math.pi,
+            dl,
+        )
         sb1, cb1 = math.sin(self.beta1), math.cos(self.beta1)
         b_den = 1.0 + sb1 * np.sin(beta) + cb1 * np.cos(beta) * np.cos(dl)
         B = self.rq * np.sqrt(2.0 / np.maximum(b_den, 1e-300))
@@ -210,8 +118,10 @@ class LaeaAzimuthal:
         return np.degrees(lam), np.degrees(phi)
 
     def inverse_sql(self, x_sql: str, y_sql: str) -> tuple[str, str]:
-        from .ellipsoid import sql_double as d
-
+        """(lon_sql, lat_sql) DuckDB twins of ``inverse`` — identical
+        operation order, trig-ulp equivalence (mollweide.inverse_sql
+        pattern)."""
+        d = sql_double
         xs = f"((({x_sql}) - {d(self.x0)}) / {d(self.D)})"
         ys = f"((({y_sql}) - {d(self.y0)}) * {d(self.D)})"
         rho = f"sqrt({xs}*{xs} + {ys}*{ys})"
@@ -238,3 +148,11 @@ class LaeaAzimuthal:
             f" + {d(self.c6)} * sin(6.0 * {beta}))"
         )
         return f"degrees({lam})", f"degrees({phi})"
+
+
+# canonical EPSG:3035 instance + module-level API
+EPSG_3035 = LaeaAzimuthal(52.0, 10.0, 4321000.0, 3210000.0)
+
+forward = EPSG_3035.forward
+inverse = EPSG_3035.inverse
+inverse_sql = EPSG_3035.inverse_sql

@@ -141,13 +141,11 @@ class LambertConformal:
 
 
 # canonical EPSG:2154 instance + module-level API
-_EPSG_2154 = LambertConformal(49.0, 44.0, 46.5, 3.0, 700000.0, 6600000.0)
+EPSG_2154 = LambertConformal(49.0, 44.0, 46.5, 3.0, 700000.0, 6600000.0)
 
-PHI_1, PHI_2 = _EPSG_2154.phi1, _EPSG_2154.phi2
-LAT_0, LON_0 = _EPSG_2154.lat0, _EPSG_2154.lon0
-X_0, Y_0 = _EPSG_2154.x0, _EPSG_2154.y0
-_N, _F, _RHO0 = _EPSG_2154.n, _EPSG_2154.F, _EPSG_2154.rho0
+Y_0 = EPSG_2154.y0
+_N, _RHO0 = EPSG_2154.n, EPSG_2154.rho0
 
-forward = _EPSG_2154.forward
-inverse = _EPSG_2154.inverse
-inverse_sql = _EPSG_2154.inverse_sql
+forward = EPSG_2154.forward
+inverse = EPSG_2154.inverse
+inverse_sql = EPSG_2154.inverse_sql

@@ -546,7 +546,6 @@ def duplicated_passages(
     text_col: str = "text",
     id_col: str = "doc_id",
     min_docs: int = 2,
-    key: str = "md5",
 ) -> DataFrame:
     """Cross-document duplicated-PASSAGE detection — the substring-dedup
     pass of "Deduplicating Training Data Makes Language Models Better"
@@ -555,36 +554,26 @@ def duplicated_passages(
     seen in >= ``min_docs`` DISTINCT documents are flagged, and each
     document reports its total and duplicated window counts (the
     removal policy — cut flagged spans, drop docs over a fraction — is
-    the caller's). One explode + two hash aggregates + one left-semi
-    join, all on the uniformly-hashed window key; no self-join, no
-    suffix array, no driver state — at 100 TB the only costs are two
-    shuffles of (key, doc) pairs, and the flagged-key side shrinks to
-    genuinely repeated passages. The words array is materialized ONCE
+    the caller's). One explode, one (window key, doc) aggregate, a
+    count-over-key window and one left join of the per-doc duplicated
+    counts onto the per-doc totals; no self-join, no suffix array, no
+    driver state. The words array is materialized ONCE
     per row before the window lambda — higher-order functions evaluate
     interpreted without CSE, so an inline split() re-runs per window
-    (measured 8× slower).
-
-    ``key``: 'md5' shuffles 16 raw digest bytes and is DuckDB-replayable
-    (the oracle mode); 'xxhash64' shuffles 8-byte int64 keys — the
-    production mode for corpus-scale runs (measured 1.3× end-to-end on
-    275M windows, identical flag counts), at a negligible 64-bit
-    collision risk.
+    (measured 8× slower). The window key is the 16 raw md5 digest bytes,
+    which DuckDB replays exactly.
     """
-    if key == "md5":
-        # shuffle the 16 RAW digest bytes, not the 32-char hex string
-        # (guide §2.3 "narrower types"): unhex(md5) has exactly md5's
-        # equality classes, the key never reaches the output, and the
-        # two window-key shuffles carry half the key bytes
-        hasher = lambda c: F.unhex(F.md5(c.cast("binary")))  # noqa: E731
-    elif key == "xxhash64":
-        hasher = F.xxhash64
-    else:
-        raise ValueError(f"duplicated_passages: unknown key {key!r}")
     words = F.split(F.col(text_col), " ")
     eligible = docs.withColumn("_w", words).where(F.size(F.col("_w")) >= n)
+    # shuffle the 16 RAW digest bytes, not the 32-char hex string
+    # (guide §2.3 "narrower types"): unhex(md5) has exactly md5's
+    # equality classes, the key never reaches the output, and the
+    # window-key shuffles carry half the key bytes
     grams = F.transform(
         F.sequence(F.lit(1), F.size(F.col("_w")) - n + 1),
-        lambda i: hasher(F.concat_ws(" ", F.slice(F.col("_w"), i, n))),
+        lambda i: F.unhex(
+            F.md5(F.concat_ws(" ", F.slice(F.col("_w"), i, n)).cast("binary"))
+        ),
     )
     g = eligible.select(id_col, F.explode(grams).alias("k"))
     # single evaluation of the md5-gram explode: the former two-branch plan

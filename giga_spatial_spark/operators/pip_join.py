@@ -31,7 +31,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .. import cells
+from .. import cells, synth
+from ..functions.dialect import spark_col
 from ..geometry import GridIndex
 from ..session import local_df
 
@@ -69,35 +70,14 @@ def pip_join_native(
     cand = pts.join(F.broadcast(cover), pts["__tile"] == cover["tile"], "inner").drop(
         "tile", "__tile"
     )
-    return cand.where(F.expr(_convex_refine_sql(polys, lon, lat)))
-
-
-def _convex_refine_sql(polys: dict[int, np.ndarray], lon: str, lat: str) -> str:
-    """One CASE over zone_id of per-zone edge tests — for each directed edge
-    of the CCW-normalized ring, (x2-x1)*(lat-y1) - (y2-y1)*(lon-x1) >= 0,
-    the arithmetic of geometry.convex_contains with the edge differences
-    folded in Python. Parsed by Spark in one call instead of a few py4j
-    calls per operator per edge. Doubles are emitted as `repr` (exact
-    round trip) with a D suffix: a bare 1.5 would parse as DECIMAL."""
-    from ..geometry import ensure_ccw
-
-    branches = []
-    for zid, poly in sorted(polys.items()):
-        poly = ensure_ccw(np.asarray(poly, dtype=np.float64))
-        n = len(poly)
-        pred = None
-        for i in range(n):
-            x1, y1 = poly[i]
-            x2, y2 = poly[(i + 1) % n]
-            term = (
-                f"{float(x2 - x1)!r}D * (`{lat}` - {float(y1)!r}D)"
-                f" - {float(y2 - y1)!r}D * (`{lon}` - {float(x1)!r}D) >= 0.0D"
-            )
-            # left-nested like Column `&` chains (the parser balances a
-            # flat AND list)
-            pred = term if pred is None else f"({pred}) AND ({term})"
-        branches.append(f"WHEN {int(zid)} THEN {pred}")
-    return "CASE zone_id " + " ".join(branches) + " ELSE false END"
+    # one CASE over zone_id of the per-zone edge tests: the oracles' SQL
+    # text, parsed by Spark in one call
+    branches = " ".join(
+        f"WHEN {int(zid)} THEN "
+        + synth.convex_contains_sql(poly, f'"{lon}"', f'"{lat}"')
+        for zid, poly in sorted(polys.items())
+    )
+    return cand.where(spark_col(f"CASE zone_id {branches} ELSE false END"))
 
 
 def pip_join_rtree(

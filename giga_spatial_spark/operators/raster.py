@@ -145,22 +145,20 @@ def zonal_raster_stats(
     polys,
     stats: list[str] = ("count", "sum", "mean", "min", "max", "median"),
     zoom: int = 6,
-    strategy: str = "rtree",
     by_band: bool = False,
 ) -> DataFrame:
     """Per-zone stats over valid (non-nodata) pixels — reference
     sample_by_polygons semantics: nodata dropped first, NaN for zones with
     no valid pixels, count = number of valid pixels (tif_processor.py:1043).
 
-    Default strategy is the Arrow grid-index refine: at 66M pixels it
-    measured 10× faster than the literal-predicate refine (zones×edges
-    composite predicates fall out of whole-stage codegen and evaluate
-    interpreted — see docs/SCALE.md)."""
-    from .pip_join import pip_join_native, pip_join_rtree
+    The refine is the Arrow grid-index one: at 66M pixels it measured 10×
+    faster than the literal-predicate refine (zones×edges composite
+    predicates fall out of whole-stage codegen and evaluate interpreted —
+    see docs/SCALE.md)."""
+    from .pip_join import pip_join_rtree
 
-    join = pip_join_native if strategy == "native" else pip_join_rtree
     valid = pixels.where(F.col("value").isNotNull())
-    matches = join(valid, polys, lon="lon", lat="lat", zoom=zoom)
+    matches = pip_join_rtree(valid, polys, lon="lon", lat="lat", zoom=zoom)
     exprs = []
     for s in stats:
         exprs.append(_AGG_FNS[s](F.col("value")).alias(f"value_{s}"))
@@ -304,7 +302,7 @@ FORCED_STATS: dict[str, str] = {
 
 
 def zonal_stats_forced(
-    pixels: DataFrame, polys, dataset_kind: str, zoom: int = 6, **kw
+    pixels: DataFrame, polys, dataset_kind: str, zoom: int = 6
 ) -> DataFrame:
     """Forced stat selection by dataset kind (reference forces the
     physically-meaningful aggregate: counts sum, classifications median,
@@ -314,7 +312,7 @@ def zonal_stats_forced(
             f"unknown dataset kind {dataset_kind!r}; known: {sorted(FORCED_STATS)}"
         )
     return zonal_raster_stats(
-        pixels, polys, stats=[FORCED_STATS[dataset_kind]], zoom=zoom, **kw
+        pixels, polys, stats=[FORCED_STATS[dataset_kind]], zoom=zoom
     )
 
 

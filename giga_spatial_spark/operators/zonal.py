@@ -132,13 +132,11 @@ def aggregate_points_to_zones(
     lon: str = "lon",
     lat: str = "lat",
     zoom: int = 7,
-    strategy: str = "native",
 ) -> DataFrame:
     """End-to-end reference-parity zonal point aggregation."""
-    from .pip_join import pip_join_native, pip_join_rtree
+    from .pip_join import pip_join_native
 
-    join = pip_join_native if strategy == "native" else pip_join_rtree
-    matches = join(points, polys, lon=lon, lat=lat, zoom=zoom)
+    matches = pip_join_native(points, polys, lon=lon, lat=lat, zoom=zoom)
     return aggregate_matches_to_zones(
         matches, zones_dim, "zone_id", aggregation, value_columns
     )

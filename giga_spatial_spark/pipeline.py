@@ -120,8 +120,12 @@ def enrich_fused(pages: DataFrame, admin_polys,
                 }
             )
 
-    tagged = pages.select("html").mapInPandas(
-        kernel, schema="zone_id int, tile bigint"
+    # a null page has no text and so no mentions (enrich drops it too);
+    # the filter runs in the JVM and is pushed to the scan
+    tagged = (
+        pages.where(F.col("html").isNotNull())
+        .select("html")
+        .mapInPandas(kernel, schema="zone_id int, tile bigint")
     )
     return salted_count(tagged, ["zone_id", "tile"], "mention_count")
 

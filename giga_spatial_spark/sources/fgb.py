@@ -35,6 +35,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
 from ..winding import wind_member
+from .readers import FEATURE_SCHEMA
 
 MAGIC = b"fgb\x03fgb\x00"
 
@@ -311,21 +312,9 @@ def read_fgb(spark: SparkSession, path: str) -> DataFrame:
     """.fgb → normalized feature table, features decoded executor-side by
     byte range."""
     import pandas as pd
-    from pyspark.sql.types import (
-        ArrayType, DoubleType, LongType, MapType, StringType, StructField,
-        StructType,
-    )
 
     meta = read_fgb_meta(path)
     bc = spark.sparkContext.broadcast(meta)
-    schema = StructType(
-        [
-            StructField("feature_id", LongType()),
-            StructField("geom_type", StringType()),
-            StructField("rings", ArrayType(ArrayType(ArrayType(DoubleType())))),
-            StructField("properties", MapType(StringType(), StringType())),
-        ]
-    )
 
     def kernel(batches):
         m = bc.value
@@ -348,7 +337,7 @@ def read_fgb(spark: SparkSession, path: str) -> DataFrame:
 
     n = len(meta.feature_offsets)
     parts = max(1, min(n, spark.sparkContext.defaultParallelism * 2))
-    return spark.range(0, n, 1, parts).mapInPandas(kernel, schema=schema)
+    return spark.range(0, n, 1, parts).mapInPandas(kernel, schema=FEATURE_SCHEMA)
 
 
 # -------------------------------------------------------- flatbuffer write

@@ -35,6 +35,8 @@ from dataclasses import dataclass
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
+from ..functions.crs import projection
+
 _TYPE_SIZE = {1: 1, 2: 1, 3: 2, 4: 4, 5: 8, 11: 4, 12: 8}
 _TYPE_FMT = {3: "H", 4: "I", 11: "f", 12: "d"}
 
@@ -63,13 +65,14 @@ class TiffMeta:
     tile_width: int = 0
     tile_length: int = 0
     # CRS from the GeoKeyDirectory (34735): "EPSG:4326" (default — the
-    # geotransform is lon/lat degrees) or a projected system like
-    # "ESRI:54009" (geotransform in projection meters; the pixel table
-    # inverse-projects centers to lon/lat)
+    # geotransform is lon/lat degrees) or a projected code like
+    # "ESRI:54009" (geotransform in projection meters). The pixel table
+    # inverse-projects centers to lon/lat through functions.crs.projection,
+    # so any code of its one table decodes
     crs: str = "EPSG:4326"
     # user-defined projections (ProjectedCSTypeGeoKey 32767): crs="USER"
-    # and the ProjCoordTransGeoKey + parameter doubles land here, feeding
-    # functions.crs.projection_from_params in the decode kernel
+    # and the ProjCoordTransGeoKey + parameter doubles land here, resolved
+    # by the same functions.crs.projection
     proj: dict | None = None
 
     @property
@@ -358,25 +361,11 @@ def tiff_pixel_table(
                 f"{len(ifds)} IFD(s) (level 0..{len(ifds) - 1})"
             )
         meta = ifds[level]
-    if meta.crs == "USER":
-        from ..functions.crs import projection_from_params
-
-        projection_from_params(meta.proj or {})  # raises if unsupported
-    elif meta.crs not in (
-        "EPSG:4326", "ESRI:54009", "EPSG:3857", "EPSG:3035", "EPSG:5070",
-        "EPSG:2154", "EPSG:3413", "EPSG:3031",
-    ):
-        raise ValueError(
-            f"unsupported raster CRS {meta.crs!r} — supported: EPSG:4326 "
-            "(geographic), ESRI:54009 (Mollweide, the GHSL grid), "
-            "EPSG:3035 (LAEA Europe — CORINE/EU grids), "
-            "EPSG:5070 (Conus Albers — NLCD/LANDFIRE grids), "
-            "EPSG:2154 (Lambert-93 — French national grids), "
-            "EPSG:3413/3031 (NSIDC polar stereographic grids), "
-            "EPSG:3857 (web mercator tile pyramids), and user-defined "
-            "GeoKey projections (LCC 2SP / LAEA / Albers / polar "
-            "stereographic, any parameters)"
-        )
+    # resolved once here: the projection object ships in the kernel closure
+    try:
+        pj = projection(meta.proj if meta.crs == "USER" else meta.crs)
+    except ValueError as e:
+        raise ValueError(f"unsupported raster CRS {meta.crs!r}: {e}") from e
     bc = spark.sparkContext.broadcast(meta)
     schema = StructType(
         [
@@ -415,66 +404,11 @@ def tiff_pixel_table(
                     lon = m.lon0 + (px + 0.5) * m.dx
                     lat = m.lat1 - (r[:, None] + 0.5) * m.dy
                     shape2 = arr.shape[:2]
-                    if m.crs == "USER":
-                        # user-defined GeoKey projection: rebuild the
-                        # parameterized instance from the broadcast params
-                        from ..functions.crs import projection_from_params
-
-                        pj = projection_from_params(m.proj)
-                        xm = np.broadcast_to(lon, shape2)
-                        ym = np.broadcast_to(lat, shape2)
-                        lon, lat = pj.inverse(xm, ym)
-                    elif m.crs == "ESRI:54009":
-                        # geotransform is Mollweide meters: inverse-project
-                        # pixel centers to lon/lat (functions/mollweide)
-                        from ..functions import mollweide as _moll
-
-                        xm = np.broadcast_to(lon, shape2)
-                        ym = np.broadcast_to(lat, shape2)
-                        lon, lat = _moll.inverse(xm, ym)
-                    elif m.crs == "EPSG:3035":
-                        # LAEA Europe meters: ellipsoidal inverse
-                        # (functions/laea, Snyder oblique aspect)
-                        from ..functions import laea as _laea
-
-                        xm = np.broadcast_to(lon, shape2)
-                        ym = np.broadcast_to(lat, shape2)
-                        lon, lat = _laea.inverse(xm, ym)
-                    elif m.crs == "EPSG:5070":
-                        # Conus Albers meters: ellipsoidal inverse
-                        # (functions/albers, Snyder eqs 14-19..14-21)
-                        from ..functions import albers as _albers
-
-                        xm = np.broadcast_to(lon, shape2)
-                        ym = np.broadcast_to(lat, shape2)
-                        lon, lat = _albers.inverse(xm, ym)
-                    elif m.crs in ("EPSG:3413", "EPSG:3031"):
-                        # NSIDC polar stereographic meters
-                        from ..functions import polar as _polar
-
-                        pj = (
-                            _polar.EPSG_3413
-                            if m.crs == "EPSG:3413"
-                            else _polar.EPSG_3031
-                        )
-                        xm = np.broadcast_to(lon, shape2)
-                        ym = np.broadcast_to(lat, shape2)
-                        lon, lat = pj.inverse(xm, ym)
-                    elif m.crs == "EPSG:2154":
-                        # Lambert-93 meters: ellipsoidal conformal-conic
-                        # inverse (functions/lcc, Snyder 15-11 + 3-5)
-                        from ..functions import lcc as _lcc
-
-                        xm = np.broadcast_to(lon, shape2)
-                        ym = np.broadcast_to(lat, shape2)
-                        lon, lat = _lcc.inverse(xm, ym)
-                    elif m.crs == "EPSG:3857":
-                        # web-mercator meters: closed-form spherical inverse
-                        R = 6378137.0
-                        xm = np.broadcast_to(lon, shape2)
-                        ym = np.broadcast_to(lat, shape2)
-                        lon = np.degrees(xm / R)
-                        lat = np.degrees(np.arctan(np.sinh(ym / R)))
+                    # geotransform is in the CRS's units: inverse-project
+                    # pixel centres to lon/lat (identity for EPSG:4326)
+                    lon, lat = pj.inverse(
+                        np.broadcast_to(lon, shape2), np.broadcast_to(lat, shape2)
+                    )
                     for s in range(arr.shape[2]):
                         vals = arr[:, :, s]
                         if m.nodata is not None:
@@ -488,8 +422,8 @@ def tiff_pixel_table(
                                 ),
                                 "px": np.broadcast_to(px, shape2).ravel(),
                                 "py": np.broadcast_to(py, shape2).ravel(),
-                                "lon": np.broadcast_to(lon, shape2).ravel(),
-                                "lat": np.broadcast_to(lat, shape2).ravel(),
+                                "lon": lon.ravel(),
+                                "lat": lat.ravel(),
                                 "value": vals.ravel(),
                             }
                         )

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from ..functions import wkb as _wkb
 from ..session import local_df
 from ..winding import wind_member
+from .readers import FEATURE_SCHEMA
 
 GPKG_WRITE_LIMIT = 5_000_000  # dim-layer guard, same role as xlsx's cap
 _GP_APP_ID = 0x47504B47  # "GPKG"
@@ -87,10 +88,6 @@ def read_gpkg(
     """.gpkg feature table → normalized feature table, rows decoded
     executor-side by rowid range."""
     import pandas as pd
-    from pyspark.sql.types import (
-        ArrayType, DoubleType, LongType, MapType, StringType, StructField,
-        StructType,
-    )
 
     abspath = os.path.abspath(path)
     with _connect_ro(abspath) as con:
@@ -119,14 +116,6 @@ def read_gpkg(
         lo, hi = int(lo_hi[0]), int(lo_hi[1])
     attr_cols = [c for c in cols if c != geom_col]
 
-    schema = StructType(
-        [
-            StructField("feature_id", LongType()),
-            StructField("geom_type", StringType()),
-            StructField("rings", ArrayType(ArrayType(ArrayType(DoubleType())))),
-            StructField("properties", MapType(StringType(), StringType())),
-        ]
-    )
     n_parts = max(1, min(spark.sparkContext.defaultParallelism * 2, hi - lo + 1))
     bounds = np.linspace(lo, hi + 1, n_parts + 1).astype(np.int64)
     ranges = [
@@ -173,7 +162,7 @@ def read_gpkg(
     rng = local_df(spark, ranges or [(0, -1)], "r0 long, r1 long").repartition(
         max(1, len(ranges))
     )
-    return rng.mapInPandas(kernel, schema=schema)
+    return rng.mapInPandas(kernel, schema=FEATURE_SCHEMA)
 
 
 # ------------------------------------------------------------------ writer

@@ -24,21 +24,9 @@ import zipfile
 import xml.etree.ElementTree as ET
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import (
-    ArrayType, DoubleType, LongType, MapType, StringType, StructField,
-    StructType,
-)
 
 from ..winding import wind_member
-
-_SCHEMA = StructType(
-    [
-        StructField("feature_id", LongType()),
-        StructField("geom_type", StringType()),
-        StructField("rings", ArrayType(ArrayType(ArrayType(DoubleType())))),
-        StructField("properties", MapType(StringType(), StringType())),
-    ]
-)
+from .readers import FEATURE_SCHEMA
 
 
 def _local(tag: str) -> str:
@@ -156,9 +144,11 @@ def read_kml(spark: SparkSession, path: str) -> DataFrame:
     def kernel(batches):
         for pdf in batches:
             for doc in pdf["value"]:
-                yield pd.DataFrame(parse_kml_features(doc), columns=_SCHEMA.names)
+                yield pd.DataFrame(
+                    parse_kml_features(doc), columns=FEATURE_SCHEMA.names
+                )
 
-    return raw.mapInPandas(kernel, schema=_SCHEMA)
+    return raw.mapInPandas(kernel, schema=FEATURE_SCHEMA)
 
 
 def read_kmz(spark: SparkSession, path: str) -> DataFrame:
@@ -178,6 +168,8 @@ def read_kmz(spark: SparkSession, path: str) -> DataFrame:
                     if name is None:
                         raise ValueError("No KML file found in the KMZ archive.")
                     text = z.read(name).decode("utf-8", "replace")
-                yield pd.DataFrame(parse_kml_features(text), columns=_SCHEMA.names)
+                yield pd.DataFrame(
+                    parse_kml_features(text), columns=FEATURE_SCHEMA.names
+                )
 
-    return raw.select("content").mapInPandas(kernel, schema=_SCHEMA)
+    return raw.select("content").mapInPandas(kernel, schema=FEATURE_SCHEMA)

@@ -9,8 +9,22 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import (
+    ArrayType, DoubleType, LongType, MapType, StringType, StructField,
+    StructType,
+)
 
 from ..winding import wind_member
+
+# the normalized feature table every vector reader returns
+FEATURE_SCHEMA = StructType(
+    [
+        StructField("feature_id", LongType()),
+        StructField("geom_type", StringType()),
+        StructField("rings", ArrayType(ArrayType(ArrayType(DoubleType())))),
+        StructField("properties", MapType(StringType(), StringType())),
+    ]
+)
 
 
 def read_dataset(spark: SparkSession, path: str, **options) -> DataFrame:
@@ -195,20 +209,8 @@ def read_geojson(spark: SparkSession, path: str) -> DataFrame:
     import json as _json
 
     import pandas as pd
-    from pyspark.sql.types import (
-        ArrayType, DoubleType, LongType, MapType, StringType, StructField,
-        StructType,
-    )
 
     raw = spark.read.text(path, wholetext=True)
-    schema = StructType(
-        [
-            StructField("feature_id", LongType()),
-            StructField("geom_type", StringType()),
-            StructField("rings", ArrayType(ArrayType(ArrayType(DoubleType())))),
-            StructField("properties", MapType(StringType(), StringType())),
-        ]
-    )
 
     def kernel(batches):
         for pdf in batches:
@@ -229,7 +231,7 @@ def read_geojson(spark: SparkSession, path: str) -> DataFrame:
                 }
                 yield pd.DataFrame(rows)
 
-    return raw.mapInPandas(kernel, schema=schema)
+    return raw.mapInPandas(kernel, schema=FEATURE_SCHEMA)
 
 
 def read_geojsonl(spark: SparkSession, path: str) -> DataFrame:
@@ -240,19 +242,7 @@ def read_geojsonl(spark: SparkSession, path: str) -> DataFrame:
     import json as _json
 
     import pandas as pd
-    from pyspark.sql.types import (
-        ArrayType, DoubleType, LongType, MapType, StringType, StructField,
-        StructType,
-    )
 
-    schema = StructType(
-        [
-            StructField("feature_id", LongType()),
-            StructField("geom_type", StringType()),
-            StructField("rings", ArrayType(ArrayType(ArrayType(DoubleType())))),
-            StructField("properties", MapType(StringType(), StringType())),
-        ]
-    )
 
     def kernel(batches):
         for pdf in batches:
@@ -274,7 +264,7 @@ def read_geojsonl(spark: SparkSession, path: str) -> DataFrame:
                 )
             yield pd.DataFrame(rows)
 
-    return spark.read.text(path).mapInPandas(kernel, schema=schema)
+    return spark.read.text(path).mapInPandas(kernel, schema=FEATURE_SCHEMA)
 
 
 def read_geoparquet(

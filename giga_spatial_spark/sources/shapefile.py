@@ -29,6 +29,8 @@ from dataclasses import dataclass, field
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
+from .readers import FEATURE_SCHEMA
+
 _NULL, _POINT, _POLYLINE, _POLYGON, _MULTIPOINT = 0, 1, 3, 5, 8
 
 
@@ -203,21 +205,9 @@ def read_shapefile(spark: SparkSession, path: str) -> DataFrame:
     executor-side by index range (geometry from .shp byte ranges, attributes
     from the matching fixed-width .dbf rows)."""
     import pandas as pd
-    from pyspark.sql.types import (
-        ArrayType, DoubleType, LongType, MapType, StringType, StructField,
-        StructType,
-    )
 
     meta = read_shp_meta(path)
     bc = spark.sparkContext.broadcast(meta)
-    schema = StructType(
-        [
-            StructField("feature_id", LongType()),
-            StructField("geom_type", StringType()),
-            StructField("rings", ArrayType(ArrayType(ArrayType(DoubleType())))),
-            StructField("properties", MapType(StringType(), StringType())),
-        ]
-    )
 
     def kernel(batches):
         m = bc.value
@@ -249,7 +239,7 @@ def read_shapefile(spark: SparkSession, path: str) -> DataFrame:
 
     n = meta.n_records
     parts = max(1, min(n, spark.sparkContext.defaultParallelism * 2))
-    return spark.range(0, n, 1, parts).mapInPandas(kernel, schema=schema)
+    return spark.range(0, n, 1, parts).mapInPandas(kernel, schema=FEATURE_SCHEMA)
 
 
 # ------------------------------------------------------------------ writer

@@ -163,15 +163,14 @@ def test_generator_bytes_pinned():
     )
 
 
+def rollup(df):
+    return df.toPandas().sort_values(["zone_id", "tile"]).reset_index(drop=True)
+
+
 def test_enrich_fused_equals_modular(spark):
     """The fused kernel skips the whitespace tail and scans each Arrow batch
     in one regex pass; its rollup must equal the modular pipeline's, also
     on pages built to trip that shortcut."""
-    def rollup(df):
-        return (
-            df.toPandas().sort_values(["zone_id", "tile"]).reset_index(drop=True)
-        )
-
     pages = webpages_df(spark, 400)
     polys = synth.make_admin_polygons()
     pd.testing.assert_frame_equal(
@@ -207,3 +206,17 @@ def test_enrich_fused_equals_modular(spark):
     fused = rollup(enrich_fused(adv, world))
     assert len(fused) == 8 and (fused["mention_count"] == 1).all()
     pd.testing.assert_frame_equal(fused, rollup(enrich(adv, world)))
+
+
+def test_enrich_fused_drops_null_html(spark):
+    """A page with a null html has no mentions: the fused kernel drops it,
+    as the modular pipeline does, instead of failing the job."""
+    pages = webpages_df(spark, 200)
+    pages = pages.withColumn(
+        "html", F.when(F.xxhash64("url") % 5 != 0, F.col("html"))
+    )
+    assert pages.where(F.col("html").isNull()).count() > 0
+    polys = synth.make_admin_polygons()
+    pd.testing.assert_frame_equal(
+        rollup(enrich_fused(pages, polys)), rollup(enrich(pages, polys))
+    )
