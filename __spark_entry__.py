@@ -134,8 +134,9 @@ def q_pip_tag(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_pip_tag_rtree(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same semantics via the broadcast grid-index (R-tree analog) refine in
-    mapInPandas (reference buildings_engine.py:202-206)."""
+    """Same semantics through the rtree entry point (reference
+    buildings_engine.py:202-206), which for convex zones is the native
+    edge-conjunction refine."""
     pts = _docs_pts(spark, sf_dir).select("doc_id", "lon", "lat")
     return pip_join_rtree(pts, ADMIN_POLYS, zoom=PIP_ZOOM).select("doc_id", "zone_id")
 
@@ -1914,10 +1915,9 @@ def _raster_zonal(pixels: DataFrame, *stats: Column) -> DataFrame:
     each pixel with its admin zone, then per zone the pixel count and
     ``stats``."""
     valid = pixels.where(F.col("value").isNotNull())
-    # pixel volume: Arrow grid-index refine (pip_join_rtree) — the
-    # 12-zone composite CASE of the native path falls out of codegen
-    # and runs interpreted (~38µs/row, docs/SCALE.md); measured 2.5×
-    # faster here with identical membership (same convex arithmetic)
+    # pixel volume: the convex refine is one edge conjunction in the
+    # broadcast-hash-join condition, compiled by whole-stage codegen with
+    # no Python worker (docs/SCALE.md); same arithmetic as _zonal_sql
     matches = pip_join_rtree(valid, ADMIN_POLYS, lon="lon", lat="lat", zoom=PIP_ZOOM)
     return matches.groupBy("zone_id").agg(F.count(F.lit(1)).alias("px_count"), *stats)
 

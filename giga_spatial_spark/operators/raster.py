@@ -151,10 +151,9 @@ def zonal_raster_stats(
     sample_by_polygons semantics: nodata dropped first, NaN for zones with
     no valid pixels, count = number of valid pixels (tif_processor.py:1043).
 
-    The refine is the Arrow grid-index one: at 66M pixels it measured 10×
-    faster than the literal-predicate refine (zones×edges composite
-    predicates fall out of whole-stage codegen and evaluate interpreted —
-    see docs/SCALE.md)."""
+    The refine is the convex edge conjunction of ``pip_join_native``, in
+    the broadcast-hash-join condition under whole-stage codegen: no Python
+    worker, O(edges) per candidate pixel (docs/SCALE.md)."""
     from .pip_join import pip_join_rtree
 
     valid = pixels.where(F.col("value").isNotNull())

@@ -1,14 +1,15 @@
 """The flagship spatial-enrichment pipeline over the web-pages table —
 the workload BASELINE.json's throughput metric (docs/sec) measures.
 
-Stages (all declarative; the only Python is two chained Arrow UDFs and
-the PIP refine):
+Stages (all declarative; the only Python is two chained Arrow UDFs, one
+eval node):
   1. scan (url, warc_ts, html, lang)            — parquet/Iceberg scan
   2. extract_text(html)                         — pandas UDF (invariant stage)
   3. extract_geo_entities(text) → explode       — pandas UDF → posexplode;
      with stage 2 one chained eval of extract_geo_entities(extract_text(html))
   4. tile assignment (mercator, native math)    — whole-stage codegen
-  5. PIP tag vs admin polygons                  — broadcast cover join + refine
+  5. PIP tag vs admin polygons                  — broadcast cover join whose
+     condition is the convex edge conjunction   — whole-stage codegen
   6. zonal rollup with hot-cell salting         — two-stage aggregation
 
 Skew: generated pages put ~30% of mentions in 3 hot tiles. The rollup
@@ -78,12 +79,13 @@ def enrich_fused(pages: DataFrame, admin_polys,
                  tile_zoom: int = TILE_ZOOM) -> DataFrame:
     """Single-Python-pass variant of :func:`enrich` — identical output.
 
-    The modular pipeline crosses the JVM↔Python boundary twice (one
-    chained extract→entity UDF eval, then the PIP refine). At 10^12 rows
-    the Arrow (de)serialization of the intermediate columns dominates, so
-    the scale path fuses html → coordinates → GridIndex PIP → tile math
-    into ONE mapInPandas kernel: scan → fused kernel → salted rollup. One
-    python exchange, no intermediate text column ever serialized.
+    The modular pipeline's one chained extract→entity UDF eval returns
+    each page's entity list to the JVM, which explodes and PIP-tags it.
+    At 10^12 rows the Arrow (de)serialization of that intermediate column
+    dominates, so the scale path fuses html → coordinates → GridIndex PIP
+    → tile math into ONE mapInPandas kernel: scan → fused kernel → salted
+    rollup. One python exchange, no intermediate text column ever
+    serialized.
 
     The rollup reads only the coordinates, so the kernel computes only
     those: ``geo_points_batch`` runs the markup half of extract_text_py

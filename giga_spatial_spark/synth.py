@@ -103,11 +103,19 @@ def convex_contains_sql(poly: np.ndarray, x_sql: str, y_sql: str) -> str:
     for i in range(n):
         x1, y1 = poly[i]
         x2, y2 = poly[(i + 1) % n]
-        terms.append(
-            f"(({x2!r} - {x1!r}) * (({y_sql}) - {y1!r})"
-            f" - ({y2!r} - {y1!r}) * (({x_sql}) - {x1!r})) >= 0.0"
-        )
+        terms.append(edge_term_sql(f"{x1!r}", f"{y1!r}", f"{x2!r} - {x1!r}",
+                                   f"{y2!r} - {y1!r}", x_sql, y_sql))
     return "(" + " AND ".join(terms) + ")"
+
+
+def edge_term_sql(x1: str, y1: str, ex: str, ey: str, x_sql: str,
+                  y_sql: str) -> str:
+    """Point (x, y) lies left of or on the directed edge from (x1, y1)
+    along (ex, ey): cross((ex, ey), p - v1) >= 0, with the operation order
+    of geometry.convex_contains. The arguments are SQL text: literals in
+    the oracles' per-zone predicate, cover columns in the engine's refine."""
+    return (f"(({ex}) * (({y_sql}) - {y1})"
+            f" - ({ey}) * (({x_sql}) - {x1})) >= 0.0")
 
 
 def make_star_polygon(cx: float = 20.0, cy: float = 10.0, r_outer: float = 30.0,

@@ -88,3 +88,26 @@ def test_code_geotiff_decode(spark, tmp_path, code):
     assert pdf["lon"].tolist() == want_lon.tolist()
     assert pdf["lat"].tolist() == want_lat.tolist()
 
+
+
+def test_utm_gives_nan_far_from_the_zone():
+    """Global points through every UTM code: within 60° of longitude of the
+    zone's central meridian a round trip is exact to 1e-6° (either
+    hemisphere, in either hemisphere's frame); beyond it forward is NaN,
+    and no numpy warning escapes either way."""
+    import warnings
+
+    rng = np.random.default_rng(3)
+    lon = rng.uniform(-180.0, 180.0, 2000)
+    lat = rng.uniform(-90.0, 90.0, 2000)
+    for code in [c for c in CODES if c.startswith(("EPSG:326", "EPSG:327"))]:
+        with warnings.catch_warnings():
+            warnings.simplefilter("error")
+            x, y = transform_points(lon, lat, "EPSG:4326", code)
+            lon2, lat2 = transform_points(x, y, code, "EPSG:4326")
+        dlon = (lon - (int(code[-2:]) * 6.0 - 183.0) + 180.0) % 360.0 - 180.0
+        band = np.abs(dlon) <= 60.0
+        assert 500 < band.sum() < 1500, code
+        assert np.isnan(x[~band]).all() and np.isnan(y[~band]).all(), code
+        assert np.abs((lon2 - lon + 180.0) % 360.0 - 180.0)[band].max() < 1e-6, code
+        assert np.abs(lat2 - lat)[band].max() < 1e-6, code

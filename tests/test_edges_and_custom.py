@@ -99,16 +99,22 @@ def test_custom_grouped_stat(spark):
 
 
 def test_pip_join_native_matches_convex_contains(spark):
-    """The one-expression refine decides every point exactly as the numpy
-    kernel does: random points, every vertex and every edge midpoint, on
-    counter-clockwise and clockwise rings."""
+    """The edge-conjunction refine decides every point exactly as the numpy
+    kernel does, as a (pid, zone_id) multiset: random points, every vertex
+    and every edge midpoint, on counter-clockwise and clockwise rings of 3,
+    7 and 12 vertices in one layer (shorter rings pad their edge columns);
+    rows with a null coordinate match nothing."""
+    from collections import Counter
+
     from giga_spatial_spark.geometry import convex_contains
     from giga_spatial_spark.operators.pip_join import pip_join_native
+    from giga_spatial_spark.session import local_df
 
     rng = np.random.default_rng(3)
     polys = {}
-    for zid, (cx, cy) in enumerate([(10.3, -4.7), (-71.9, 41.2), (120.1, 12.6)], 1):
-        t = np.sort(rng.uniform(0, 2 * np.pi, 9))
+    centres = [(10.3, -4.7, 3), (-71.9, 41.2, 7), (120.1, 12.6, 12)]
+    for zid, (cx, cy, nv) in enumerate(centres, 1):
+        t = np.sort(rng.uniform(0, 2 * np.pi, nv))
         ring = np.column_stack([cx + 3.1 * np.cos(t), cy + 2.2 * np.sin(t)])
         polys[2 * zid - 1] = ring            # counter-clockwise
         polys[2 * zid] = ring[::-1] + 0.37   # clockwise, shifted to overlap
@@ -118,16 +124,18 @@ def test_pip_join_native_matches_convex_contains(spark):
         bx = ring.min(axis=0), ring.max(axis=0)
         pts.append(rng.uniform(bx[0], bx[1], (300, 2)))
     xy = np.concatenate(pts)
-    df = spark.createDataFrame(
-        [(i, float(x), float(y)) for i, (x, y) in enumerate(xy)],
-        "pid long, lon double, lat double",
+    vx, vy = polys[1][0]
+    rows = [(i, float(x), float(y)) for i, (x, y) in enumerate(xy)]
+    rows += [(-1, None, float(vy)), (-2, float(vx), None), (-3, None, None)]
+    df = local_df(spark, rows, "pid long, lon double, lat double")
+    got = Counter(
+        (r.pid, r.zone_id) for r in pip_join_native(df, polys, zoom=6).collect()
     )
-    got = {(r.pid, r.zone_id) for r in pip_join_native(df, polys, zoom=6).collect()}
-    want = {
+    want = Counter(
         (i, zid)
         for zid, ring in polys.items()
         for i in np.flatnonzero(convex_contains(ring, xy[:, 0], xy[:, 1])).tolist()
-    }
+    )
     assert len(want) > 1000
     assert got == want
 

@@ -1,5 +1,6 @@
 """No declared query evaluates one Python UDF expression in two eval nodes
-(tools/python_plan_scan.py), and the scan does see such a clone."""
+(tools/python_plan_scan.py), and the scan does see such a clone, and a
+map function run by two map nodes."""
 
 from pyspark.sql import functions as F
 
@@ -7,7 +8,12 @@ import __spark_entry__ as E
 from giga_spatial_spark.functions.text import extract_geo_entities
 from giga_spatial_spark.pipeline import extract_stage
 from giga_spatial_spark.sources.webpages import webpages_df
-from tools.python_plan_scan import EVAL_NODES, cloned_udfs, query_python_nodes
+from tools.python_plan_scan import (
+    EVAL_NODES,
+    cloned_map_functions,
+    cloned_udfs,
+    query_python_nodes,
+)
 
 from .conftest import SF_DIR
 
@@ -34,3 +40,21 @@ def test_scan_sees_a_posexplode_clone(spark):
     assert [n for n, _ in nodes].count("ArrowEvalPython") == 2
     [clone] = cloned_udfs(nodes)
     assert clone.startswith("extract_geo_entities(extract_text(html#")
+
+
+def test_scan_sees_a_map_node_clone(spark):
+    """A self-join of one mapInPandas output keeps the function on both
+    sides (inputs re-aliased, one result id): the scan names it once."""
+
+    def double(batches):
+        for pdf in batches:
+            yield pdf.assign(v=pdf["id"] * 2)
+
+    m = spark.range(50).mapInPandas(double, "id long, v long")
+    nodes = query_python_nodes(m.alias("a").join(m.alias("b"), "id"))
+    assert [n for n, _ in nodes] == ["MapInPandas", "MapInPandas"]
+    assert nodes[0][1] != nodes[1][1]
+    [clone] = cloned_map_functions(nodes)
+    assert clone.startswith("double#")
+    assert cloned_udfs(nodes) == []
+    assert cloned_map_functions(query_python_nodes(m)) == []

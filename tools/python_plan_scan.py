@@ -12,6 +12,12 @@ the JVM/Python boundary twice. Each line printed here is one query and
 its Python nodes in plan order (`!` marks a cloned expression); the exit
 status is 1 if any query clones a UDF.
 
+A map node (`MapInPandas`, `FlatMapGroupsInPandas`) can be cloned too: a
+self-join of one `mapInPandas` output keeps the function on both sides,
+its inputs re-aliased but its result id the same, so the function runs
+twice over its input. Such queries are marked and listed as well, but do
+not set the exit status.
+
 Plans are read from `queryExecution().executedPlan()`. Under AQE that is
 the initial physical plan until the query runs, and AQE may still reuse an
 exchange above one of two equal subtrees, so a query whose initial plan
@@ -30,6 +36,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 EVAL_NODES = ("ArrowEvalPython", "BatchEvalPython")
+MAP_NODES = ("MapInPandas", "FlatMapGroupsInPandas")
 PYTHON_PACKAGE = "org.apache.spark.sql.execution.python."
 
 
@@ -86,10 +93,23 @@ def cloned_udfs(nodes: list[tuple[str, list[str]]]) -> list[str]:
     return sorted(e for e, n in seen.items() if n > 1)
 
 
+def function_id(expr: str) -> str:
+    """`name#resultId` of a Python function's text `name(args)#resultId`."""
+    return expr[:expr.find("(")] + expr[expr.rfind("#"):]
+
+
+def cloned_map_functions(nodes: list[tuple[str, list[str]]]) -> list[str]:
+    """Python functions (`name#resultId`) that more than one map node runs."""
+    seen = Counter(
+        function_id(e) for name, exprs in nodes if name in MAP_NODES for e in exprs
+    )
+    return sorted(f for f, n in seen.items() if n > 1)
+
+
 def query_python_nodes(df) -> list[tuple[str, list[str]]]:
     """python_nodes of `df`'s plan, final if its initial plan clones."""
     nodes = python_nodes(executed_plan(df))
-    if cloned_udfs(nodes):
+    if cloned_udfs(nodes) or cloned_map_functions(nodes):
         df.collect()
         nodes = python_nodes(executed_plan(df))
     return nodes
@@ -104,21 +124,31 @@ def main() -> None:
     spark = get_spark("python-plan-scan", cores=4)
     spark.sparkContext.setLogLevel("ERROR")
     qs = E.queries()
-    bad = []
+    bad, twice = [], []
     for name in names or list(qs):
         nodes = query_python_nodes(qs[name](spark, sf_dir))
         if not nodes:
             continue
         clones = set(cloned_udfs(nodes))
+        maps = set(cloned_map_functions(nodes))
         if clones:
             bad.append(name)
+        if maps:
+            twice.append(name)
+
+        def mark(node, e):
+            hit = e in clones if node in EVAL_NODES else function_id(e) in maps
+            return ("!" if hit else "") + e
+
         shown = [
-            f"{node}[{', '.join(('!' if e in clones else '') + e for e in exprs)}]"
+            f"{node}[{', '.join(mark(node, e) for e in exprs)}]"
             for node, exprs in nodes
         ]
         print(f"{name}: {'  '.join(shown)}", flush=True)
     print(f"\n{len(bad)} queries clone a Python UDF{': ' if bad else ''}"
           f"{' '.join(bad)}")
+    print(f"{len(twice)} queries run one map function in two nodes"
+          f"{': ' if twice else ''}{' '.join(twice)}")
     sys.exit(1 if bad else 0)
 
 
